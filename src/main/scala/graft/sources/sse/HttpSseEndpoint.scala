@@ -20,8 +20,9 @@ import java.util.zip.GZIPInputStream
   *    client's 429 rate-limit detection (reference :662-676) sees them.
   *
   * Reads are chunk-oriented: each read returns whatever bytes are available
-  * (the incremental parser handles arbitrary chunk boundaries), Idle on a
-  * poll-window timeout, Eof when the server closes the stream.
+  * (the incremental parser handles arbitrary chunk boundaries), Idle when
+  * nothing arrives within 1 s (a socket timeout HttpURLConnection applies
+  * only at connect), Eof when the server closes the stream.
   */
 final class HttpSseEndpoint(url: String, connectTimeoutMs: Int = 10000,
     proxy: Option[java.net.Proxy] = None,
@@ -46,6 +47,7 @@ final class HttpSseEndpoint(url: String, connectTimeoutMs: Int = 10000,
     }
     conn.setRequestMethod("GET")
     conn.setConnectTimeout(connectTimeoutMs)
+    conn.setReadTimeout(1000)
     conn.setRequestProperty("Accept", "text/event-stream")
     headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
     lastEventId.foreach(id => conn.setRequestProperty("Last-Event-ID", id))
@@ -69,8 +71,7 @@ final class HttpSseEndpoint(url: String, connectTimeoutMs: Int = 10000,
       // reads are reassembled before reaching the parser
       private val reader = new java.io.InputStreamReader(in, StandardCharsets.UTF_8)
       private val cbuf = new Array[Char](4096)
-      override def read(timeoutMs: Long): SseChunk = {
-        conn.setReadTimeout(math.max(1L, math.min(timeoutMs, Int.MaxValue)).toInt)
+      override def read(timeoutMs: Long): SseChunk =
         try {
           val n = reader.read(cbuf)
           if (n < 0) SseChunk.Eof
@@ -78,7 +79,6 @@ final class HttpSseEndpoint(url: String, connectTimeoutMs: Int = 10000,
         } catch {
           case _: SocketTimeoutException => SseChunk.Idle
         }
-      }
       override def close(): Unit = {
         try reader.close() catch { case _: IOException => () }
         conn.disconnect()

@@ -43,7 +43,7 @@ final class SseClient(
     config: SseConfig,
     clock: () => Long = () => System.currentTimeMillis(),
     sleeper: Long => Unit = Thread.sleep(_),
-    onChunk: String => Unit = _ => (),
+    onChunk: Option[String => Unit] = None,
     metricsSink: (String, String) => Unit = SseClient.slf4jMetricsSink) {
 
   import ConnectionState._
@@ -259,7 +259,7 @@ final class SseClient(
     if (state == Connected && conn != null) {
       try conn.read(timeoutMs) match {
         case SseChunk.Data(text) =>
-          onChunk(text)
+          onChunk.foreach(_(text))
           val events = parser.feed(text)
           events.foreach(onEvent)
         case SseChunk.Idle => ()
@@ -271,16 +271,18 @@ final class SseClient(
       }
     }
 
-  /** Per-event bookkeeping (reference onMessage :684-712). */
+  /** Per-event bookkeeping (reference onMessage :684-712). With `onChunk`,
+    * frames leave through the spool, so events are counted, not queued. */
   private def onEvent(e: SseEvent): Unit = {
     lastEventTimestamp = clock()
     totalEventsReceived.incrementAndGet()
     totalBytesReceived.addAndGet(e.data.length.toLong)
     e.event.foreach(n =>
       eventTypeCounters.computeIfAbsent(n, _ => new AtomicLong).incrementAndGet())
-    queue.add(e)
-    val sz = queue.size.toLong
-    if (sz > maxQueueSize.get) maxQueueSize.set(sz)
+    if (onChunk.isEmpty) {
+      queue.add(e)
+      maxQueueSize.accumulateAndGet(queue.size.toLong, math.max(_, _))
+    }
   }
 
   private def onStreamError(e: Throwable): Unit = {

@@ -195,9 +195,21 @@ class SseMicroBatchStream(config: SseConfig)
         r.lastId.orElse(start.lastId), r.retryMs.orElse(start.retryMs))
     }.toMap
 
+  /** Last end-of-data cursor per log: a frame boundary, not the file length,
+    * so a frame still being appended is rescanned whole by the next call. */
+  private var endOfLogs = Map.empty[String, LogCursor]
+
+  /** Extends [[endOfLogs]] over the bytes appended since the last call. A log
+    * shorter than its cursor (rotated, truncated) restarts from 0. */
+  private def scanToEnd(): Map[String, LogCursor] = synchronized {
+    val valid = endOfLogs.filter { case (f, c) => new java.io.File(f).length() >= c.pos }
+    endOfLogs = scanAll(valid, Long.MaxValue, Map.empty)
+    endOfLogs
+  }
+
   override def prepareForTriggerAvailableNow(): Unit = {
     liveIngest
-    availableNowEnd = Some(scanAll(Map.empty, Long.MaxValue, Map.empty))
+    availableNowEnd = Some(scanToEnd())
   }
 
   override def latestOffset(): Offset =
@@ -220,8 +232,7 @@ class SseMicroBatchStream(config: SseConfig)
     SseOffset(scanAll(from, cap, ceiling))
   }
 
-  override def reportLatestOffset(): Offset =
-    SseOffset(scanAll(Map.empty, Long.MaxValue, Map.empty))
+  override def reportLatestOffset(): Offset = SseOffset(scanToEnd())
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[SseOffset].cursors
@@ -372,7 +383,7 @@ object SseLiveIngest {
       val writer = new java.io.OutputStreamWriter(
         new java.io.FileOutputStream(spool, true), StandardCharsets.UTF_8)
       val client = new SseClient(endpoint, config,
-        onChunk = chunk => writer.synchronized { writer.write(chunk); writer.flush() })
+        onChunk = Some(chunk => writer.synchronized { writer.write(chunk); writer.flush() }))
       resume.foreach(r => client.seedResume(r.lastId, r.retryMs))
       client.startBackground()
       (client, writer)
@@ -415,69 +426,85 @@ object SseFrameLog {
     * the region contains none — caller inherits the prior cursor's). */
   case class ScanResult(boundary: Long, lastId: Option[String], retryMs: Option[Long])
 
+  /** Field names as [[scan]] packs them: a 1 marker, then one byte each. */
+  private val Seq(dataName, idName, retryName) =
+    Seq("data", "id", "retry").map(_.foldLeft(1L)((c, ch) => c << 8 | ch))
+
   /** Scan forward from `start`, stopping at the frame boundary after at
     * most `maxEvents` dispatched events (a frame counts if its block
     * contains a `data` line) and never past byte `maxPos` or the last
     * complete frame. Field handling matches [[SseParser.feed]] exactly, so
     * the returned id/retry equal the incremental parser's state at the
-    * boundary. Never splits a frame. */
-  def scan(path: String, start: Long, maxEvents: Long,
-      maxPos: Long = Long.MaxValue): ScanResult = {
-    val f = new java.io.File(path)
-    if (!f.exists()) return ScanResult(start, None, None)
-    val text = read(path, start, math.min(f.length(), maxPos))
-    var events = 0L
-    var lineStart = 0
-    var blockHasData = false
-    var boundary = 0 // chars consumed up to last complete frame end
-    // running field state (current, possibly uncommitted frame) vs the
-    // state at the last committed boundary
-    var curId: Option[String] = None
-    var curRetry: Option[Long] = None
-    var committedId: Option[String] = None
-    var committedRetry: Option[Long] = None
-    var i = 0
-    // walk lines; CRLF/CR/LF all end lines
-    while (i <= text.length && events < maxEvents) {
-      val atEnd = i == text.length
-      val c = if (atEnd) '\n' else text.charAt(i)
-      if (!atEnd && c != '\n' && c != '\r') { i += 1 }
-      else {
-        val line = text.substring(lineStart, i)
-        // consume the terminator (CRLF counts as one)
-        var nextI = i + 1
-        if (!atEnd && c == '\r' && nextI < text.length && text.charAt(nextI) == '\n') nextI += 1
-        if (line.isEmpty && !atEnd) { // blank line → frame boundary
-          if (blockHasData) events += 1
-          blockHasData = false
-          boundary = nextI
-          committedId = curId
-          committedRetry = curRetry
-        } else if (line.nonEmpty && line.charAt(0) != ':') {
-          // field split per WHATWG (same as SseParser.processLine)
-          val colon = line.indexOf(':')
-          val (field, value) =
-            if (colon < 0) (line, "")
-            else {
-              val v = line.substring(colon + 1)
-              (line.substring(0, colon), if (v.startsWith(" ")) v.substring(1) else v)
-            }
-          field match {
-            case "data" => blockHasData = true
-            case "id" => if (!value.contains('\u0000')) curId = Some(value)
-            case "retry" =>
-              if (value.nonEmpty && value.forall(_.isDigit)) curRetry = Some(value.toLong)
-            case _ => ()
+    * boundary. Never splits a frame. Walks raw bytes through one buffer,
+    * stops reading once the cap is reached, and decodes only id/retry. */
+  def scan(path: String, start: Long, maxEvents: Long, maxPos: Long = Long.MaxValue): ScanResult =
+    scan(path, start, maxEvents, maxPos, 64 * 1024)
+
+  private[sse] def scan(path: String, start: Long, maxEvents: Long, maxPos: Long,
+      bufferBytes: Int): ScanResult = {
+    if (!new java.io.File(path).exists()) return ScanResult(start, None, None)
+    val in = new ByteWindow(new RandomAccessFile(path, "r"), start, maxPos, bufferBytes)
+    try {
+      var events = 0L
+      var boundary = start
+      var blockHasData = false
+      // running field state (current, possibly uncommitted frame) vs the
+      // state at the last committed boundary
+      var curId, committedId: Option[String] = None
+      var curRetry, committedRetry: Option[Long] = None
+      // current line: packed name; part 0 name, 1 value's first byte, 2 rest
+      var name = 1L
+      var part = 0
+      val value = new java.io.ByteArrayOutputStream()
+      var pos = start
+      var b = in.at(pos)
+      while (b >= 0 && events < maxEvents) {
+        if (b == '\n' || b == '\r') { // CRLF/CR/LF all end lines; CRLF counts as one
+          val next = if (b == '\r' && in.at(pos + 1) == '\n') pos + 2 else pos + 1
+          if (name == 1L && part == 0) { // blank line → frame boundary
+            if (blockHasData) events += 1
+            blockHasData = false
+            boundary = next
+            committedId = curId
+            committedRetry = curRetry
+          } else if (name == dataName) blockHasData = true
+          else if (name == idName || name == retryName) {
+            val v = value.toString(StandardCharsets.UTF_8)
+            if (name == idName) { if (!v.contains('\u0000')) curId = Some(v) }
+            else if (v.nonEmpty && v.forall(_.isDigit)) curRetry = Some(v.toLong)
           }
+          name = 1L; part = 0; value.reset()
+          pos = next
+        } else {
+          // field split per WHATWG (same as SseParser.processLine); a
+          // comment line has an empty name, which matches no field
+          if (part == 0) { if (b == ':') part = 1 else if (name < (1L << 48)) name = name << 8 | b }
+          else {
+            if ((name == idName || name == retryName) && !(part == 1 && b == ' ')) value.write(b)
+            part = 2
+          }
+          pos += 1
         }
-        if (atEnd) i = text.length + 1 else { i = nextI; lineStart = nextI }
+        b = in.at(pos)
       }
-    }
-    val boundaryBytes = text.substring(0, boundary).getBytes(StandardCharsets.UTF_8).length
-    ScanResult(start + boundaryBytes, committedId, committedRetry)
+      ScanResult(boundary, committedId, committedRetry)
+    } finally in.close()
   }
 
-  /** Round-1 compatibility shim for callers that only need the boundary. */
-  def boundaryAfter(path: String, start: Long, maxEvents: Long): Long =
-    scan(path, start, maxEvents).boundary
+  /** Bytes [start, min(length at open, maxPos)) of one file, read forward
+    * through one buffer: `at(p)` is the unsigned byte at `p`, -1 past the end. */
+  private final class ByteWindow(raf: RandomAccessFile, start: Long, maxPos: Long, size: Int) {
+    private val end = math.min(raf.length(), maxPos)
+    private val buf = new Array[Byte](math.max(1L, math.min(size.toLong, end - start)).toInt)
+    private var from, until = start
+    def at(p: Long): Int = {
+      if (p >= until) {
+        val n = if (p >= end) -1 else { raf.seek(p); raf.read(buf, 0, math.min(buf.length.toLong, end - p).toInt) }
+        if (n <= 0) return -1 // past the end, or truncated while scanning
+        from = p; until = p + n
+      }
+      buf((p - from).toInt) & 0xff
+    }
+    def close(): Unit = raf.close()
+  }
 }

@@ -129,6 +129,42 @@ class HttpSseEndpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(events.map(_.data) == Seq("compressed"))
   }
 
+  test("stopping the pump on an open, silent upstream returns promptly") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // its own server: the handler holds the stream open until released
+    val silent = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    silent.createContext("/silent", (ex: HttpExchange) => {
+      ex.getResponseHeaders.add("Content-Type", "text/event-stream")
+      ex.sendResponseHeaders(200, 0)
+      ex.getResponseBody.write("id: 1\ndata: hello\n\n".getBytes(StandardCharsets.UTF_8))
+      ex.getResponseBody.flush()
+      release.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      ex.close()
+    })
+    val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    silent.setExecutor(pool)
+    silent.start()
+    try {
+      val uri = s"http://127.0.0.1:${silent.getAddress.getPort}/silent"
+      val c = new SseClient(new HttpSseEndpoint(uri), config(uri), sleeper = _ => ())
+      c.startBackground()
+      val deadline = System.currentTimeMillis() + 10000
+      while (c.getMetrics("events.total") != 1L && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(c.getMetrics("events.total") == 1L)
+      Thread.sleep(200) // the pump is now blocked reading the idle stream
+      Await.result(Future(c.stopBackground()), 2.seconds)
+      assert(c.connectionState == ConnectionState.Disconnected)
+    } finally {
+      release.countDown()
+      silent.stop(0)
+      pool.shutdown()
+    }
+  }
+
   test("non-200 maps to a failure carrying the status (429 feeds rate-limit detection)") {
     val ep = new HttpSseEndpoint(s"http://127.0.0.1:$port/limited")
     val c = new SseClient(ep, config(s"http://127.0.0.1:$port/limited"), sleeper = _ => ())

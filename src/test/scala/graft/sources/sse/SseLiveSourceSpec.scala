@@ -132,6 +132,40 @@ class SseLiveSourceSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("live transport keeps no event queue: queue.maxSize stays 0 while events flow") {
+    val ep = new LoopbackEndpoint
+    val s1 = ep.scriptAccept()
+    SseEndpoints.register("live-queue", ep)
+    val n = 50
+    (1 to n).foreach(i => s1.push(frame("edit", i, s"d$i")))
+
+    val dir = tmpDir("sse-live-queue")
+    val q = spark.readStream.format("sse")
+      .option("path", dir.resolve("spool").toString)
+      .option("transport", "live")
+      .option("endpoint.ref", "live-queue")
+      .load()
+      .writeStream.format("memory").queryName("sse_live_queue")
+      .option("checkpointLocation", dir.resolve("cp").toString)
+      .trigger(Trigger.ProcessingTime(100))
+      .start()
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      def count(): Long = spark.sql("SELECT count(*) FROM sse_live_queue").head().getLong(0)
+      while (count() < n && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(count() == n)
+      // frames leave through the spool; the client must not also keep every
+      // event it has received
+      def withTotal = q.recentProgress.filter(p => p.sources.nonEmpty &&
+        p.sources.head.metrics.get("events.total") == n.toString)
+      val mDeadline = System.currentTimeMillis() + 30000
+      while (withTotal.isEmpty && System.currentTimeMillis() < mDeadline) Thread.sleep(100)
+      assert(withTotal.nonEmpty, "client event total in progress metrics")
+      assert(withTotal.forall(_.sources.head.metrics.get("queue.maxSize") == "0"),
+        withTotal.map(_.sources.head.metrics.get("queue.maxSize")).mkString(","))
+    } finally q.stop()
+  }
+
   test("query restart resumes the upstream from the spooled last-event-id (no replay)") {
     val ep = new LoopbackEndpoint
     val s1 = ep.scriptAccept()

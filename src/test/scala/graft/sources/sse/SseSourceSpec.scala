@@ -200,6 +200,39 @@ class SseSourceSpec extends SparkSpec {
     assert(all == Seq(("a", "1"), ("a", "2"), ("b", "10")))
   }
 
+  test("a log truncated or rewritten below its end-of-log cursor is rescanned from 0") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val dir = tmpDir("sse-truncate")
+    val log = dir.resolve("stream.log")
+    Files.writeString(log, (1 to 6).map(i => frame("a", i, s"old$i")).mkString)
+    val stream = new SseMicroBatchStream(SseConfig.fromOptions(Map("path" -> log.toString).asJava))
+    def fresh(): Map[String, LogCursor] = {
+      val r = SseFrameLog.scan(log.toString, 0L, Long.MaxValue)
+      Map(log.toString -> LogCursor(r.boundary, r.lastId, r.retryMs))
+    }
+    assert(stream.reportLatestOffset() == SseOffset(fresh()))
+    val oldEnd = Files.size(log)
+
+    // rewritten shorter (rotation by truncate), then appended past the old end
+    Files.writeString(log, frame("b", 70, "new1") + "retry: 250\n" + frame("b", 71, "new2"))
+    assert(Files.size(log) < oldEnd)
+    assert(stream.reportLatestOffset() == SseOffset(fresh()))
+    Files.writeString(log, (3 to 9).map(i => frame("b", 70 + i, s"new$i")).mkString,
+      StandardOpenOption.APPEND)
+    stream.prepareForTriggerAvailableNow()
+    val start = stream.initialOffset()
+    val end = stream.latestOffset(start, ReadLimit.allAvailable())
+    assert(end == SseOffset(fresh()))
+    assert(stream.reportLatestOffset() == SseOffset(fresh()))
+    // no frame of the rewritten log is skipped
+    val rows = stream.planInputPartitions(start, end).toSeq.flatMap { p =>
+      val r = stream.createReaderFactory().createReader(p)
+      Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().getUTF8String(2).toString).toList
+    }
+    assert(rows == (1 to 9).map(i => s"new$i"))
+  }
+
   test("events.filter allowlist + pattern admit only matching events (reference IMPROVEMENT_PLAN Step 7)") {
     val dir = tmpDir("sse-filter")
     val log = dir.resolve("stream.log")
