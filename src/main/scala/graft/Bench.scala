@@ -219,9 +219,9 @@ object Bench {
             results(name) = math.min(results(name), re)
             suspects -= name // clean reading: regression or not, it's real
           } else suspects += name
-          val sus = if (suspects.contains(name)) ""","suspect":true""" else ""
-          appendLine(s"""{"q":"$name","sec":${fmt3(results(name))},"t":${fmt3(elapsed)},"rescue":true$sus}""")
         }
+        val sus = if (suspects.contains(name)) ""","suspect":true""" else ""
+        appendLine(s"""{"q":"$name","sec":${fmt3(results(name))},"t":${fmt3(elapsed)},"rescue":true$sus}""")
       }
     }
 

@@ -11,6 +11,10 @@ import org.apache.spark.sql.SparkSession
   * counts only need to be in the right order of magnitude.
   */
 object GraftSession {
+  /** Hadoop key and class that put `file:` `FileContext` I/O (checkpoints,
+    * state-store files) on the process-free [[NioLocalFs]]. */
+  val LocalFsConf: (String, String) = "fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName
+
   def builder(cpus: String): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus)
@@ -20,6 +24,7 @@ object GraftSession {
     .config("spark.sql.adaptive.skewJoin.enabled", "true")
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.ui.enabled", "false")
+    .config("spark.hadoop." + LocalFsConf._1, LocalFsConf._2)
 
   def create(appName: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

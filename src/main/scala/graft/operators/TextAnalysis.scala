@@ -1560,6 +1560,21 @@ object TextAnalysis {
   /** Number of unrolled merge steps in [[bpeTrain]]. */
   val BpeTrainSteps = 5
 
+  /** The BPE trainers' one-row argmax: the most frequent adjacent symbol
+    * pair over a `(s, freq)` vocab (symbols space-padded, double-space
+    * separated), ties broken on pair string order; empty once every word
+    * is fully merged. */
+  private def bpePairArgmax(vocab: DataFrame): DataFrame = vocab
+    .select(col("freq"), split(trim(col("s")), "  ").as("l"))
+    .filter(size(col("l")) >= 2) // Spark sequence(1,0) would descend
+    .select(col("freq"), col("l"),
+      explode(sequence(lit(1), size(col("l")) - 1)).as("i"))
+    .select(col("freq"),
+      concat(element_at(col("l"), col("i")), lit(" "),
+        element_at(col("l"), col("i") + 1)).as("pair"))
+    .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
+    .orderBy(col("pair_count").desc, col("pair")).limit(1)
+
   /** Multi-step BPE training (`text_bpe_train`) — the actual tokenizer-
     * training LOOP, not just [[bpeStep]]'s one-step what-if table: starting
     * from the character symbol vocabulary, [[BpeTrainSteps]] rounds of
@@ -1602,16 +1617,6 @@ object TextAnalysis {
     // Pinned state is still |vocab|-bounded and lineage depth stays 1 —
     // unpinned, step k's pair count replayed the whole 1..k-1 chain
     // (62 corpus rescans for the 5-step trainer, the r15 finding).
-    def bestOf(vocab: DataFrame): DataFrame = vocab
-      .select(col("freq"), split(trim(col("s")), "  ").as("l"))
-      .filter(size(col("l")) >= 2) // Spark sequence(1,0) would descend
-      .select(col("freq"), col("l"),
-        explode(sequence(lit(1), size(col("l")) - 1)).as("i"))
-      .select(col("freq"),
-        concat(element_at(col("l"), col("i")), lit(" "),
-          element_at(col("l"), col("i") + 1)).as("pair"))
-      .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
-      .orderBy(col("pair_count").desc, col("pair")).limit(1)
     var vocab = words.select(
       concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
       col("freq")).localCheckpoint()
@@ -1619,7 +1624,7 @@ object TextAnalysis {
     var k = 1
     var exhausted = false
     while (k <= steps && !exhausted) {
-      val r = bestOf(vocab).collect()
+      val r = bpePairArgmax(vocab).collect()
       if (r.isEmpty) exhausted = true // every word fully merged
       else {
         val (pair, cnt) = (r(0).getString(0), r(0).getLong(1))
@@ -1694,23 +1699,13 @@ object TextAnalysis {
     // argmax broadcast inside it) — same driver-collected literal-merge
     // convention as [[bpeTrainOver]]; the LAST vocab's lazy pin
     // materializes inside the final per-source rollup job itself.
-    def bestOf(vocab: DataFrame): DataFrame = vocab
-      .select(col("freq"), split(trim(col("s")), "  ").as("l"))
-      .filter(size(col("l")) >= 2)
-      .select(col("freq"), col("l"),
-        explode(sequence(lit(1), size(col("l")) - 1)).as("i"))
-      .select(col("freq"),
-        concat(element_at(col("l"), col("i")), lit(" "),
-          element_at(col("l"), col("i") + 1)).as("pair"))
-      .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
-      .orderBy(col("pair_count").desc, col("pair")).limit(1)
     var vocab = words.select(col("w"),
       concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
       col("freq")).localCheckpoint()
     var k = 1
     var exhausted = false
     while (k <= steps && !exhausted) {
-      val r = bestOf(vocab).collect()
+      val r = bpePairArgmax(vocab).collect()
       if (r.isEmpty) {
         // every word fully merged: the unrolled form (and the oracle's
         // `FROM vocab, best` cross join) propagates an EMPTY vocab
@@ -1820,21 +1815,11 @@ object TextAnalysis {
     // LAZY and materializes inside the round's single aggregate job, which
     // returns the round's symbols_after AND the next round's argmax
     // together (the 0/1-row argmax rides a left join).
-    def bestOf(vocab: DataFrame): DataFrame = vocab
-      .select(col("freq"), split(trim(col("s")), "  ").as("l"))
-      .filter(size(col("l")) >= 2)
-      .select(col("freq"), col("l"),
-        explode(sequence(lit(1), size(col("l")) - 1)).as("i"))
-      .select(col("freq"),
-        concat(element_at(col("l"), col("i")), lit(" "),
-          element_at(col("l"), col("i") + 1)).as("pair"))
-      .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
-      .orderBy(col("pair_count").desc, col("pair")).limit(1)
     var vocab = words.select(
       concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
       col("freq")).localCheckpoint()
     var best: Option[(String, Long)] = {
-      val r = bestOf(vocab).collect()
+      val r = bpePairArgmax(vocab).collect()
       if (r.isEmpty) None else Some((r(0).getString(0), r(0).getLong(1)))
     }
     val curve = Seq.newBuilder[(Long, String, Long, Long)]
@@ -1849,7 +1834,7 @@ object TextAnalysis {
       val row = vocab
         .agg(sum(size(split(trim(col("s")), "  ")).cast("long") * col("freq"))
           .as("symbols_after"))
-        .join(bestOf(vocab), lit(true), "left")
+        .join(bpePairArgmax(vocab), lit(true), "left")
         .collect()(0)
       curve += ((k.toLong, pair, cnt, row.getLong(0)))
       best =
