@@ -4,6 +4,8 @@ import graft.Tables
 import graft.functions.Kernels._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Text-analysis operators for the training-data pipeline: quality scoring,
   * token counting, language ID, fingerprinting, corpus stats.
@@ -1560,31 +1562,72 @@ object TextAnalysis {
   /** Number of unrolled merge steps in [[bpeTrain]]. */
   val BpeTrainSteps = 5
 
-  /** The BPE trainers' one-row argmax: the most frequent adjacent symbol
-    * pair over a `(s, freq)` vocab (symbols space-padded, double-space
-    * separated), ties broken on pair string order; empty once every word
-    * is fully merged. */
-  private def bpePairArgmax(vocab: DataFrame): DataFrame = vocab
-    .select(col("freq"), split(trim(col("s")), "  ").as("l"))
-    .filter(size(col("l")) >= 2) // Spark sequence(1,0) would descend
-    .select(col("freq"), col("l"),
-      explode(sequence(lit(1), size(col("l")) - 1)).as("i"))
-    .select(col("freq"),
-      concat(element_at(col("l"), col("i")), lit(" "),
-        element_at(col("l"), col("i") + 1)).as("pair"))
-    .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
-    .orderBy(col("pair_count").desc, col("pair")).limit(1)
+  /** One learned merge: the pair (`"a b"`), its adjacency count, its score
+    * and the vocab's symbol total once it is applied. */
+  private case class Merge(pair: String, count: Long, score: Long, symbolsAfter: Long)
+
+  /** The tokenizer trainers' `(w, freq)` vocabulary: one corpus pass, words
+    * of length ≥ 2 (single-char words carry no pair). */
+  private def trainWords(docs: DataFrame): DataFrame = docs
+    .select(explode(tokens(col("text"))).as("w"))
+    .filter(length(col("w")) >= 2)
+    .groupBy(col("w")).agg(count(lit(1)).as("freq"))
+
+  /** The merge trainer behind BPE and WordPiece (Sennrich et al. 2016): Spark
+    * reduces the corpus to the `(w, freq)` vocabulary, which is collected to
+    * the driver ONCE as Spark's own `split(w, "")` symbols (code points, as
+    * the plans split them), and up to `steps` merges are learned in memory.
+    * Each step recounts adjacent pairs (overlaps included) and symbols over
+    * the current vocab, takes the max of `score(pairCount, count(a),
+    * count(b))` with ties on the pair's UTF-8 byte order (Spark's and
+    * DuckDB's string order, not `String.compareTo`), and merges it greedily
+    * left to right without overlap — what the oracles' double-space
+    * `replace` does. Stops early once no word has two symbols. The driver
+    * holds the distinct-word vocabulary: 31 words at every testdata scale. */
+  private def trainMerges(words: DataFrame, steps: Int)(
+      score: (Long, Long, Long) => Long): Seq[Merge] = {
+    var vocab = words.select(split(col("w"), "").as("l"), col("freq")).collect()
+      .map(r => (r.getSeq[String](0).toVector, r.getLong(1)))
+    val merges = Seq.newBuilder[Merge]
+    var k = 0
+    while (k < steps && vocab.exists(_._1.length >= 2)) {
+      val pairs = mutable.Map.empty[(String, String), Long].withDefaultValue(0L)
+      val syms = mutable.Map.empty[String, Long].withDefaultValue(0L)
+      for ((l, f) <- vocab) {
+        l.foreach(syms(_) += f)
+        l.iterator.zip(l.iterator.drop(1)).foreach(pairs(_) += f)
+      }
+      val ((a, b), n, sc) = pairs.iterator
+        .map { case (p @ (a, b), n) => (p, n, score(n, syms(a), syms(b))) }
+        .minBy { case ((a, b), _, sc) => (-sc, UTF8String.fromString(s"$a $b")) }
+      vocab = vocab.map { case (l, f) =>
+        val out = Vector.newBuilder[String]
+        var i = 0
+        while (i < l.length) {
+          if (i + 1 < l.length && l(i) == a && l(i + 1) == b) { out += a + b; i += 2 }
+          else { out += l(i); i += 1 }
+        }
+        (out.result(), f)
+      }
+      merges += Merge(s"$a $b", n, sc, vocab.map { case (l, f) => l.length * f }.sum)
+      k += 1
+    }
+    merges.result()
+  }
+
+  /** BPE ranks merges by the raw pair count. */
+  private val bpeScore: (Long, Long, Long) => Long = (n, _, _) => n
 
   /** Multi-step BPE training (`text_bpe_train`) — the actual tokenizer-
     * training LOOP, not just [[bpeStep]]'s one-step what-if table: starting
     * from the character symbol vocabulary, [[BpeTrainSteps]] rounds of
     * (count adjacent pairs → pick the argmax merge → apply it greedily
-    * left-to-right) unrolled into one plan, emitting each round's chosen
-    * merge and its get_stats count (overlaps included — the statistic BPE
-    * ranks merges by, recomputed from the CURRENT symbol sequence each
-    * round exactly like the classic trainer).
+    * left-to-right), emitting each round's chosen merge and its get_stats
+    * count (overlaps included — the statistic BPE ranks merges by,
+    * recomputed from the CURRENT symbol sequence each round exactly like
+    * the classic trainer).
     *
-    * The greedy merge application is exact on both engines through the
+    * The oracle's greedy merge application is exact through the
     * DOUBLE-SPACE symbol encoding: a word's symbol sequence is
     * `' ' + symbols.mkString("  ") + ' '`, so every symbol is flanked by
     * its own space on each side, the merge (a, b) is the literal string
@@ -1593,11 +1636,9 @@ object TextAnalysis {
     * to `aa aa`, never the overlapping `a aa a`). Symbols never contain
     * spaces, so a pattern can only align on true symbol boundaries.
     *
-    * 100 TB shape: ONE corpus pass reduces to the (word, freq) vocabulary;
-    * each round is a vocab-bounded pair count + a one-row argmax broadcast
-    * back onto the vocab — [[BpeTrainSteps]] × O(Σ|word| over vocab), the
-    * corpus never re-scanned. Deterministic: argmax ties break on pair
-    * string order both engines. */
+    * 100 TB shape: ONE corpus pass reduces to the (word, freq) vocabulary,
+    * which [[trainMerges]] trains on the driver; the corpus is never
+    * re-scanned. Deterministic: argmax ties break on pair string order. */
   def bpeTrain(spark: SparkSession, d: String, steps: Int = BpeTrainSteps): DataFrame =
     bpeTrainOver(Tables.documents(spark, d).select(col("text")), steps)
 
@@ -1605,39 +1646,9 @@ object TextAnalysis {
   def bpeTrainOver(docs: DataFrame, steps: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = docs
-      .select(explode(tokens(col("text"))).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    // ONE driver job per step (r16; was two eager pins — the one-row best
-    // plus the merged vocab). The one-row argmax IS the model artifact, so
-    // it reads to the driver (the curve twins' bounded model-artifact-read
-    // convention) and the merge applies as a literal replace; each step's
-    // vocab pin is LAZY and materializes inside the next step's argmax job.
-    // Pinned state is still |vocab|-bounded and lineage depth stays 1 —
-    // unpinned, step k's pair count replayed the whole 1..k-1 chain
-    // (62 corpus rescans for the 5-step trainer, the r15 finding).
-    var vocab = words.select(
-      concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
-      col("freq")).localCheckpoint()
-    val bests = Seq.newBuilder[(Long, String, Long)]
-    var k = 1
-    var exhausted = false
-    while (k <= steps && !exhausted) {
-      val r = bpePairArgmax(vocab).collect()
-      if (r.isEmpty) exhausted = true // every word fully merged
-      else {
-        val (pair, cnt) = (r(0).getString(0), r(0).getLong(1))
-        bests += ((k.toLong, pair, cnt))
-        val sp = pair.indexOf(' ')
-        val (a, b) = (pair.substring(0, sp), pair.substring(sp + 1))
-        vocab = vocab.select(
-          replace(col("s"), lit(s" $a  $b "), lit(s" $a$b ")).as("s"),
-          col("freq")).localCheckpoint(eager = false)
-        k += 1
-      }
-    }
-    bests.result().toDF("step", "pair", "pair_count").orderBy(col("step"))
+    trainMerges(trainWords(docs), steps)(bpeScore).zipWithIndex
+      .map { case (m, i) => (i + 1L, m.pair, m.count) }
+      .toDF("step", "pair", "pair_count").orderBy(col("step"))
   }
 
   val bpeTrainOracle: String = {
@@ -1682,47 +1693,33 @@ object TextAnalysis {
     * symbols a trained tokenizer emits per source. Merges are learned
     * corpus-wide (same argmax sequence as [[bpeTrain]] — single-char words
     * carry no pairs so their inclusion here changes no merge decision) and
-    * applied to the DISTINCT-word vocabulary only; per-source numbers come
+    * applied as ONE projection (a `replace` per merge) over the
+    * DISTINCT-word vocabulary only; per-source numbers come
     * from joining the per-word symbol count back onto the (source, word)
     * counts, so the corpus is scanned once and everything downstream is
     * vocab-bounded. Same double-space replace encoding as [[bpeTrain]]. */
-  def bpeApply(spark: SparkSession, d: String, steps: Int = BpeTrainSteps): DataFrame = {
-    val toks = Tables.documents(spark, d)
+  def bpeApply(spark: SparkSession, d: String, steps: Int = BpeTrainSteps): DataFrame =
+    bpeApplyOver(Tables.documents(spark, d).select(col("source"), col("text")), steps)
+
+  /** [[bpeApply]] over an explicit (source, text) frame (spec hook). */
+  def bpeApplyOver(docs: DataFrame, steps: Int = BpeTrainSteps): DataFrame = {
+    // pinned as in [[wordpieceApplyOver]]: srcCounts feeds the word rollup
+    // and the final join-back; |vocab|·|sources|-bounded
+    val srcCounts = docs
       .select(col("source"), explode(tokens(col("text"))).as("w"))
-    // same per-step pinning as [[bpeTrainOver]] (r15): the unpinned apply
-    // replayed the step chain per round plus the final join-back — 66
-    // corpus scans. srcCounts is |vocab|·|sources|-bounded.
-    val srcCounts = toks.groupBy(col("source"), col("w"))
-      .agg(count(lit(1)).as("freq")).localCheckpoint()
+      .groupBy(col("source"), col("w")).agg(count(lit(1)).as("freq"))
+      .localCheckpoint()
     val words = srcCounts.groupBy(col("w")).agg(sum(col("freq")).as("freq"))
-    // ONE driver job per step (r16; was an eager pin per step with the
-    // argmax broadcast inside it) — same driver-collected literal-merge
-    // convention as [[bpeTrainOver]]; the LAST vocab's lazy pin
-    // materializes inside the final per-source rollup job itself.
-    var vocab = words.select(col("w"),
-      concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
-      col("freq")).localCheckpoint()
-    var k = 1
-    var exhausted = false
-    while (k <= steps && !exhausted) {
-      val r = bpePairArgmax(vocab).collect()
-      if (r.isEmpty) {
-        // every word fully merged: the unrolled form (and the oracle's
-        // `FROM vocab, best` cross join) propagates an EMPTY vocab
-        exhausted = true
-        vocab = vocab.limit(0)
-      } else {
-        val pair = r(0).getString(0)
-        val sp = pair.indexOf(' ')
-        val (a, b) = (pair.substring(0, sp), pair.substring(sp + 1))
-        vocab = vocab.select(col("w"),
-          replace(col("s"), lit(s" $a  $b "), lit(s" $a$b ")).as("s"),
-          col("freq")).localCheckpoint(eager = false)
-        k += 1
-      }
+    val merges = trainMerges(words, steps)(bpeScore)
+    val merged = merges.foldLeft(
+        concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" "))) { (s, m) =>
+      val Array(a, b) = m.pair.split(" ")
+      replace(s, lit(s" $a  $b "), lit(s" $a$b "))
     }
-    val perWord = vocab.select(col("w"),
-      size(split(trim(col("s")), "  ")).cast("long").as("n_sym"))
+    // fewer than `steps` merges: empty, as the oracle's `FROM vocab, best`
+    // cross join with an empty argmax
+    val perWord = words.filter(lit(merges.length == steps))
+      .select(col("w"), size(split(trim(merged), "  ")).cast("long").as("n_sym"))
     srcCounts.join(perWord, "w")
       .groupBy(col("source"))
       .agg(sum(col("freq")).as("n_tokens"),
@@ -1776,28 +1773,18 @@ object TextAnalysis {
        |GROUP BY 1 ORDER BY 1""".stripMargin
   }
 
-  /** Merge budget for [[bpeTrainCurve]] — the driver-driven loop is
-    * plan-depth-free, so this is a knob, not a ceiling; 20 keeps the
-    * DuckDB oracle's unrolled twin tractable at the gate SFs. */
+  /** Merge budget for [[bpeTrainCurve]]; 20 keeps the DuckDB oracle's
+    * unrolled twin tractable at the gate SFs. */
   val BpeCurveSteps = 20
 
-  /** Trained-tokenizer curve (`text_bpe_curve`) — [[bpeTrain]]'s loop
-    * driven from the DRIVER to N merges (a real tokenizer runs thousands;
-    * the unrolled form's Catalyst plan grows a replace+join layer per
-    * round and stops being a sensible plan past ~5). The corpus is scanned
-    * ONCE into the (symbols, freq) vocabulary, which is localCheckpoint-
-    * pinned; each round then (1) counts adjacent pairs over the vocab,
-    * (2) reads the one-row argmax to the driver — the same bounded
-    * model-artifact read as the ship-the-model streaming twins: the merge
-    * table IS the trained model, N rows total — (3) applies the merge as a
-    * literal double-space replace and re-checkpoints, keeping lineage
-    * depth 1 no matter how many merges run. Emits one row per round:
-    * the chosen merge, its get_stats count, and the corpus symbol count
-    * AFTER the merge — the compression curve a tokenizer trainer watches
-    * for diminishing returns. Per-round cost is vocab-bounded (the r10
-    * probe's round shape); the corpus is never re-scanned. Exact
-    * cross-engine via the same double-space greedy-replace encoding as
-    * [[bpeTrain]]; the oracle unrolls the identical N rounds in SQL. */
+  /** Trained-tokenizer curve (`text_bpe_curve`) — [[bpeTrain]]'s trainer
+    * run to N merges (a real tokenizer runs thousands). Emits one row per
+    * round: the chosen merge, its get_stats count, and the corpus symbol
+    * count AFTER the merge — the compression curve a tokenizer trainer
+    * watches for diminishing returns. The corpus is scanned ONCE into the
+    * (word, freq) vocabulary; the oracle unrolls the identical N rounds in
+    * SQL with the same double-space greedy-replace encoding as
+    * [[bpeTrain]]. */
   def bpeTrainCurve(spark: SparkSession, d: String,
       steps: Int = BpeCurveSteps): DataFrame =
     bpeTrainCurveOver(Tables.documents(spark, d).select(col("text")), steps)
@@ -1806,44 +1793,9 @@ object TextAnalysis {
   def bpeTrainCurveOver(docs: DataFrame, steps: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = docs
-      .select(explode(tokens(col("text"))).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    // ONE driver job per merge round (r16; was 3 — argmax collect, eager
-    // re-checkpoint, symbols_after collect): the per-round vocab pin is
-    // LAZY and materializes inside the round's single aggregate job, which
-    // returns the round's symbols_after AND the next round's argmax
-    // together (the 0/1-row argmax rides a left join).
-    var vocab = words.select(
-      concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
-      col("freq")).localCheckpoint()
-    var best: Option[(String, Long)] = {
-      val r = bpePairArgmax(vocab).collect()
-      if (r.isEmpty) None else Some((r(0).getString(0), r(0).getLong(1)))
-    }
-    val curve = Seq.newBuilder[(Long, String, Long, Long)]
-    var k = 1
-    while (k <= steps && best.nonEmpty) {
-      val (pair, cnt) = best.get
-      val sp = pair.indexOf(' ')
-      val (a, b) = (pair.substring(0, sp), pair.substring(sp + 1))
-      vocab = vocab.select(
-        replace(col("s"), lit(s" $a  $b "), lit(s" $a$b ")).as("s"),
-        col("freq")).localCheckpoint(eager = false)
-      val row = vocab
-        .agg(sum(size(split(trim(col("s")), "  ")).cast("long") * col("freq"))
-          .as("symbols_after"))
-        .join(bpePairArgmax(vocab), lit(true), "left")
-        .collect()(0)
-      curve += ((k.toLong, pair, cnt, row.getLong(0)))
-      best =
-        if (row.isNullAt(1)) None
-        else Some((row.getString(1), row.getLong(2)))
-      k += 1
-    }
-    curve.result().toDF("step", "pair", "pair_count", "symbols_after")
-      .orderBy(col("step"))
+    trainMerges(trainWords(docs), steps)(bpeScore).zipWithIndex
+      .map { case (m, i) => (i + 1L, m.pair, m.count, m.symbolsAfter) }
+      .toDF("step", "pair", "pair_count", "symbols_after").orderBy(col("step"))
   }
 
   val bpeTrainCurveOracle: String = {
@@ -1928,10 +1880,6 @@ object TextAnalysis {
     * position) with the same sentinel/tie conventions. */
   def unigramEm(spark: SparkSession, d: String): DataFrame =
     unigramEmOver(Tables.documents(spark, d).select(col("text")))
-
-  /** `floor(ln·1000 + 0.5)` — the family's integer milli-ln quantizer. */
-  private def lnqU(c: Column): Column =
-    floor(log(c.cast("double")) * 1000 + lit(0.5)).cast("long")
 
   /** 256-entry mantissa table for the INTEGER-EXACT micro-ln quantizer
     * [[ilnqU]]: entry j is `round(ln(1 + j/256)·10⁶)`, generated ONCE with
@@ -2287,8 +2235,9 @@ object TextAnalysis {
     for (k <- 1 to rounds) {
       val vocabBefore = inv.count()
       val tot = inv.agg(sum(greatest(col("score"), lit(1L))).as("t"))
-      // ilnqU, not lnqU: the curve is the one row where a float ln ever
-      // diverged across hosts (driver r12/r13) — integer-exact table lookup
+      // ilnqU, not a float milli-ln: the curve is the one row where a float
+      // ln ever diverged across hosts (driver r12/r13) — integer-exact table
+      // lookup
       val lp = inv.crossJoin(broadcast(tot))
         .select(col("p"),
           (ilnqU(greatest(col("score"), lit(1L))) - ilnqU(col("t"))).as("lp"))
@@ -2679,16 +2628,14 @@ object TextAnalysis {
     * exact-integer convention: milli-ln quantized per TERM before the
     * subtraction — `lnq(count_ab) − lnq(count_a) − lnq(count_b)` — so the
     * argmax is a bigint comparison identical on both engines; ties break
-    * on pair string order. The merge application reuses [[bpeTrain]]'s
-    * double-space replace encoding (SQL replace's left-to-right
-    * non-overlapping scan IS the greedy pass).
+    * on pair string order. The oracle reuses [[bpeTrain]]'s double-space
+    * replace encoding (SQL replace's left-to-right non-overlapping scan IS
+    * the greedy pass).
     *
     * 100 TB shape: identical to [[bpeTrain]] — ONE corpus pass reduces to
-    * the (word, freq) vocabulary; each round is a vocab-bounded pair count
-    * + a symbol count (model-sized, broadcast into the scoring join) + a
-    * one-row argmax broadcast back onto the vocab. The corpus is never
-    * re-scanned. Emits per step: the chosen pair, its adjacency count, and
-    * the milli-ln likelihood score. */
+    * the (word, freq) vocabulary, which [[trainMerges]] trains on the
+    * driver. Emits per step: the chosen pair, its adjacency count, and the
+    * milli-ln likelihood score. */
   def wordpieceTrain(spark: SparkSession, d: String,
       steps: Int = WordPieceSteps): DataFrame =
     wordpieceTrainOver(Tables.documents(spark, d).select(col("text")), steps)
@@ -2697,111 +2644,35 @@ object TextAnalysis {
   def wordpieceTrainOver(docs: DataFrame, steps: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = docs
-      .select(explode(tokens(col("text"))).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    wordpieceMerges(words, steps)._1
+    trainMerges(trainWords(docs), steps)(wordpieceScore).zipWithIndex
+      .map { case (m, i) => (i + 1L, m.pair, m.count, m.score) }
       .toDF("step", "pair", "pair_count", "score_milli").orderBy(col("step"))
   }
 
-  /** The WordPiece merge loop shared by [[wordpieceTrain]] and
-    * [[wordpieceApply]]: returns (per-step best rows
-    * (step, pair, pair_count, score_milli) — the trained model, collected
-    * to the driver like every bounded model artifact — and the final
-    * vocab). Training words are the len≥2 vocabulary — single-char words
-    * carry no pair, and (unlike BPE, where they are score-inert)
-    * WordPiece's denominator counts symbols, so the trainer pins its
-    * corpus contract explicitly: both the pair AND symbol statistics come
-    * from the len≥2 vocabulary, mirrored in the oracle. */
-  private def wordpieceMerges(words: DataFrame,
-      steps: Int): (Seq[(Long, String, Long, Long)], DataFrame) = {
-    // ONE driver job per round (r16; was two eager pins — the one-row best
-    // and the merged vocab). localCheckpoint per round stays essential
-    // (the text_bpe_curve discipline): unlike BPE's 2-reference rounds,
-    // WordPiece reads each round's vocab THREE times (pair stats, symbol
-    // stats, next vocab) — unpinned, the 5-round lineage re-executes ~3^5×
-    // (measured 50 s at sf0.001; pinned: ~2 s). The per-round pin is LAZY:
-    // it materializes inside the next round's argmax job.
-    var vocab = words.select(
-      concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
-      col("freq")).localCheckpoint()
-    val bests = Seq.newBuilder[(Long, String, Long, Long)]
-    var k = 1
-    var exhausted = false
-    while (k <= steps && !exhausted) {
-      val r = wordpieceScored(vocab)
-        .orderBy(col("score_milli").desc, col("pair")).limit(1).collect()
-      if (r.isEmpty) {
-        // every word fully merged: the unrolled form propagated an EMPTY
-        // vocab (cross join with the empty argmax) — preserved
-        exhausted = true
-        vocab = vocab.limit(0)
-      } else {
-        val (pair, cnt, score) =
-          (r(0).getString(0), r(0).getLong(1), r(0).getLong(2))
-        bests += ((k.toLong, pair, cnt, score))
-        val sp = pair.indexOf(' ')
-        val (a, b) = (pair.substring(0, sp), pair.substring(sp + 1))
-        vocab = vocab.select(
-          replace(col("s"), lit(s" $a  $b "), lit(s" $a$b ")).as("s"),
-          col("freq")).localCheckpoint(eager = false)
-        k += 1
-      }
-    }
-    (bests.result(), vocab)
-  }
+  /** `floor(ln(x)·1000 + 0.5)`, the WordPiece milli-ln quantizer: the
+    * `StrictMath.log` Spark's `log` calls, so it equals the oracles'
+    * `floor(ln(x) * 1000 + 0.5)`. */
+  private[graft] def lnq(x: Long): Long =
+    math.floor(StrictMath.log(x.toDouble) * 1000 + 0.5).toLong
 
-  /** Likelihood-scored pair table over a double-space symbol vocab: pair
-    * adjacency counts plus symbol counts over ALL positions (fully-merged
-    * 1-symbol words still contribute — the likelihood denominator), scored
-    * `lnq(pc) − lnq(ca) − lnq(cb)`. Shared by [[wordpieceTrain]] /
-    * [[wordpieceApply]] / [[wordpieceCurve]]. */
-  private def wordpieceScored(vocab: DataFrame): DataFrame = {
-    val lists = vocab.select(col("freq"), split(trim(col("s")), "  ").as("l"))
-    val pairStats = lists
-      .filter(size(col("l")) >= 2) // Spark sequence(1,0) would descend
-      .select(col("freq"), col("l"),
-        explode(sequence(lit(1), size(col("l")) - 1)).as("i"))
-      .select(col("freq"),
-        concat(element_at(col("l"), col("i")), lit(" "),
-          element_at(col("l"), col("i") + 1)).as("pair"))
-      .groupBy(col("pair")).agg(sum(col("freq")).as("pair_count"))
-    // symbol counts ride ONE one-row broadcast map (r16; was two broadcast
-    // hash joins per scoring pass — the a-side and b-side lookups): the
-    // symbol table is model-sized by construction, and a map lookup per
-    // pair replaces both join builds
-    val symMap = lists
-      .select(col("freq"), explode(col("l")).as("sym"))
-      .groupBy(col("sym")).agg(sum(col("freq")).as("cnt"))
-      .groupBy()
-      .agg(map_from_entries(collect_list(struct(col("sym"), col("cnt"))))
-        .as("sm"))
-    pairStats
-      .crossJoin(broadcast(symMap))
-      .select(col("pair"), col("pair_count"),
-        (lnqU(col("pair_count"))
-          - lnqU(element_at(col("sm"), expr("split_part(pair, ' ', 1)")))
-          - lnqU(element_at(col("sm"), expr("split_part(pair, ' ', 2)"))))
-          .as("score_milli"))
-  }
+  /** WordPiece's likelihood score `lnq(pc) − lnq(ca) − lnq(cb)`. Training
+    * words are the len≥2 vocabulary, so the symbol counts (the denominator,
+    * fully-merged 1-symbol words included) come from it too, as in the
+    * oracle. */
+  private val wordpieceScore: (Long, Long, Long) => Long =
+    (n, ca, cb) => lnq(n) - lnq(ca) - lnq(cb)
 
   /** Rounds in [[wordpieceCurve]]. */
   val WordPieceCurveSteps = 20
 
   /** Trained-WordPiece curve (`text_wordpiece_curve`) — the likelihood
-    * trainer driven from the DRIVER to [[WordPieceCurveSteps]] merges, the
-    * exact triplet-completing twin of `text_bpe_curve` (count argmax) and
+    * trainer run to [[WordPieceCurveSteps]] merges, the exact
+    * triplet-completing twin of `text_bpe_curve` (count argmax) and
     * `text_unigram_curve` (EM + prune): corpus scanned ONCE into the
-    * localCheckpoint-pinned symbol vocabulary; each round scores pairs by
-    * milli-ln likelihood, reads the ONE-ROW argmax to the driver (the
-    * bounded model-artifact read — the merge table IS the model), applies
-    * the merge as a literal double-space replace, re-checkpoints (lineage
-    * depth 1 at any round count), and emits (merge, count, score, corpus
+    * (word, freq) vocabulary; emits per round (merge, count, score, corpus
     * symbols after) — the diminishing-returns curve a tokenizer trainer
-    * watches, which for WordPiece DECAYS IN SCORE rather than count. Per
-    * round cost is vocab-bounded; the oracle unrolls the identical 20
-    * rounds as MATERIALIZED CTEs. */
+    * watches, which for WordPiece DECAYS IN SCORE rather than count. The
+    * oracle unrolls the identical 20 rounds as MATERIALIZED CTEs. */
   def wordpieceCurve(spark: SparkSession, d: String,
       steps: Int = WordPieceCurveSteps): DataFrame =
     wordpieceCurveOver(Tables.documents(spark, d).select(col("text")), steps)
@@ -2810,47 +2681,8 @@ object TextAnalysis {
   def wordpieceCurveOver(docs: DataFrame, steps: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = docs
-      .select(explode(tokens(col("text"))).as("w"))
-      .filter(length(col("w")) >= 2)
-      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    // ONE driver job per merge round (r16; was 3 — argmax collect, eager
-    // re-checkpoint, symbols_after collect): the vocab pin is LAZY (it
-    // materializes inside the round's single aggregate job, not as its own
-    // job), and that job returns the round's symbols_after AND the NEXT
-    // round's argmax together (both are model-sized aggregates over the
-    // same just-pinned vocab; the 0/1-row argmax rides a left join).
-    def bestOf(vocab: DataFrame): DataFrame = wordpieceScored(vocab)
-      .orderBy(col("score_milli").desc, col("pair")).limit(1)
-    var vocab = words.select(
-      concat(lit(" "), array_join(split(col("w"), ""), "  "), lit(" ")).as("s"),
-      col("freq")).localCheckpoint()
-    var best: Option[(String, Long, Long)] = {
-      val r = bestOf(vocab).collect()
-      if (r.isEmpty) None
-      else Some((r(0).getString(0), r(0).getLong(1), r(0).getLong(2)))
-    }
-    val curve = Seq.newBuilder[(Long, String, Long, Long, Long)]
-    var k = 1
-    while (k <= steps && best.nonEmpty) {
-      val (pair, cnt, score) = best.get
-      val sp = pair.indexOf(' ')
-      val (a, b) = (pair.substring(0, sp), pair.substring(sp + 1))
-      vocab = vocab.select(
-        replace(col("s"), lit(s" $a  $b "), lit(s" $a$b ")).as("s"),
-        col("freq")).localCheckpoint(eager = false)
-      val row = vocab
-        .agg(sum(size(split(trim(col("s")), "  ")).cast("long") * col("freq"))
-          .as("symbols_after"))
-        .join(bestOf(vocab), lit(true), "left")
-        .collect()(0)
-      curve += ((k.toLong, pair, cnt, score, row.getLong(0)))
-      best =
-        if (row.isNullAt(1)) None
-        else Some((row.getString(1), row.getLong(2), row.getLong(3)))
-      k += 1
-    }
-    curve.result()
+    trainMerges(trainWords(docs), steps)(wordpieceScore).zipWithIndex
+      .map { case (m, i) => (i + 1L, m.pair, m.count, m.score, m.symbolsAfter) }
       .toDF("step", "pair", "pair_count", "score_milli", "symbols_after")
       .orderBy(col("step"))
   }
@@ -2970,22 +2802,20 @@ object TextAnalysis {
 
   /** [[wordpieceApply]] over an explicit (source, text) frame (spec hook). */
   def wordpieceApplyOver(docs: DataFrame, steps: Int = WordPieceSteps): DataFrame = {
-    // pinned (r15): srcCounts feeds the word rollup AND the final
-    // join-back, words feeds the trainer and the MaxMatch pass — unpinned,
-    // each consumer replayed the corpus tokenization (the unigram/bpe
-    // apply twins got the same fix)
+    // pinned: srcCounts feeds the word rollup AND the final join-back —
+    // unpinned, each replayed the corpus tokenization. The vocab-sized
+    // rollup is read twice (trainer collect, MaxMatch pass) and not pinned.
     val srcCounts = docs
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("freq"))
       .localCheckpoint()
     val words = srcCounts.groupBy(col("w")).agg(sum(col("freq")).as("freq"))
-      .localCheckpoint()
-    val (bests, _) = wordpieceMerges(words.filter(length(col("w")) >= 2), steps)
     // merge-product map (≤ steps entries, each the fused pair): the merges
-    // are already driver rows (the shipped model), so the piece map embeds
-    // as a LITERAL map — no pin, no one-row aggregate, no broadcast jobs
-    val prods = bests.map(_._2.replace(" ", "")).distinct
+    // are driver rows (the shipped model), so the piece map embeds as a
+    // LITERAL map — no pin, no one-row aggregate, no broadcast jobs
+    val prods = trainMerges(words.filter(length(col("w")) >= 2), steps)(wordpieceScore)
+      .map(_.pair.replace(" ", "")).distinct
     // the MaxMatch probe bound comes from the ACTUAL trained products, not
     // steps+1: a merge can fuse two multi-char products ('ab'+'ab' → 'abab'
     // at step 2), so vocabulary pieces reach up to 2^steps chars — probing

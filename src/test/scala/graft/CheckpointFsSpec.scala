@@ -10,13 +10,15 @@ import scala.jdk.CollectionConverters._
 
 import graft.streaming.StreamOps
 import jdk.jfr.consumer.RecordingStream
+import org.apache.hadoop.fs.ChecksumException
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming checkpoints under [[GraftSession.LocalFsConf]]: the same
-  * checkpoint as under Hadoop's stock `LocalFs` (either resumes the other's)
-  * and no process launched per micro-batch commit. */
+  * checkpoint as under Hadoop's stock `LocalFs` (either resumes the other's),
+  * checksums verified on restart and no process launched per micro-batch
+  * commit. */
 class CheckpointFsSpec extends SparkSpec {
   private val (fsKey, nioFs) = GraftSession.LocalFsConf
   private val stockFs = classOf[org.apache.hadoop.fs.local.LocalFs].getName
@@ -108,6 +110,24 @@ class CheckpointFsSpec extends SparkSpec {
     val names = stock.map(_._1).toSet
     assert(Set("offsets/.0.crc", "state/0/0/1.delta.crc", "state/0/0/.1.delta.crc.crc").subsetOf(names))
     assert(nio == stock)
+  }
+
+  test("a corrupted offsets file fails the restart with a checksum error") {
+    val dir = tmpDir("graft-ckpt-corrupt")
+    val (log, cp) = (dir.resolve("stream.log"), dir.resolve("cp"))
+    Files.writeString(log, frames(events))
+    assert(run(nioFs, log, cp, mutable.Map.empty) == 12)
+    // flip the last digit of batchTimestampMs in the latest offsets file; its
+    // .crc sidecar still holds the old checksum
+    val latest = Files.list(cp.resolve("offsets")).iterator().asScala
+      .filter(_.getFileName.toString.forall(_.isDigit))
+      .maxBy(_.getFileName.toString.toLong)
+    val text = Files.readString(latest)
+    val i = "\"batchTimestampMs\":\\d+".r.findFirstMatchIn(text).get.end - 1
+    Files.writeString(latest, text.updated(i, if (text(i) == '9') '0' else (text(i) + 1).toChar))
+    val e = intercept[Exception](run(nioFs, log, cp, mutable.Map.empty))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ChecksumException]), e)
   }
 
   test("checkpointed micro-batches start no process") {

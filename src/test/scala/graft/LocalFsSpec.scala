@@ -6,6 +6,8 @@ import java.nio.file.{Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
 import java.util.EnumSet
 
+import scala.util.{Success, Try}
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, CreateFlag, FileAlreadyExistsException, FileContext, FSDataInputStream, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -13,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[NioLocalFs]] against Hadoop's stock `LocalFs`, through `FileContext`
   * as Spark's checkpoint manager drives it: the same files, permissions,
-  * checksums and rename semantics. */
+  * checksums and rename semantics, and checksums verified on every open. */
 class LocalFsSpec extends AnyFunSuite {
   private val stock = classOf[org.apache.hadoop.fs.local.LocalFs].getName
   private val nio = GraftSession.LocalFsConf._2
@@ -125,10 +127,11 @@ class LocalFsSpec extends AnyFunSuite {
       bytes(10) = 'b'.toByte
       Files.write(dir.resolve("data"), bytes)
       intercept[ChecksumException](read(fc.open(p, 4096)))
-      // FileContext.open(Path) skips ChecksumFs (FilterFs delegates it to
-      // the raw file system) under either implementation
-      read(fc.open(p)).take(12)
+      Try(read(fc.open(p)).take(12))
     }
-    assert(a == "aaaaaaaaaaba" && b == a)
+    // the stock FileContext.open(Path) skips ChecksumFs (FilterFs delegates
+    // it to the raw file system); NioLocalFs verifies it
+    assert(a == Success("aaaaaaaaaaba"))
+    assert(b.failed.get.isInstanceOf[ChecksumException], b)
   }
 }

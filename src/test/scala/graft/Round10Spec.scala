@@ -596,63 +596,6 @@ class Round10Spec extends SparkSpec {
       "capped join may only emit under-cap vectors")
   }
 
-  test("text_bpe_train: five unrolled merges match a plain-Scala BPE trainer") {
-    import spark.implicits._
-    // independent reference trainer: classic Sennrich loop over a
-    // (symbols, freq) vocabulary — get_stats counts every adjacent
-    // position (overlaps included), the merge applies greedily
-    // left-to-right, argmax ties break on pair string order
-    def refTrain(words: Seq[(String, Long)], steps: Int): Seq[(Long, String, Long)] = {
-      var vocab = words.map { case (w, f) => (w.map(_.toString).toVector, f) }
-      (1 to steps).map { k =>
-        val stats = scala.collection.mutable.Map.empty[(String, String), Long]
-        for ((syms, f) <- vocab; i <- 0 until syms.length - 1)
-          stats((syms(i), syms(i + 1))) = stats.getOrElse((syms(i), syms(i + 1)), 0L) + f
-        val ((a, b), c) = stats.toSeq.minBy { case ((x, y), n) => (-n, x + " " + y) }
-        vocab = vocab.map { case (syms, f) =>
-          val out = Vector.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-              out += a + b; i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          (out.result(), f)
-        }
-        (k.toLong, s"$a $b", c)
-      }
-    }
-    // planted corpus exercising the overlap case (aaaa), a cascading merge
-    // (e->er->ert chains across steps) and ties
-    val docs = Seq("aaaa bb aaaa ert", "ab ert aaaa", "ert erx c").toDF("text")
-    val words = Seq("aaaa" -> 3L, "bb" -> 1L, "ab" -> 1L, "ert" -> 3L, "erx" -> 1L)
-    val got = TextAnalysis.bpeTrainOver(docs, steps = 5).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    assert(got == refTrain(words, 5), s"got $got want ${refTrain(words, 5)}")
-    // and on the real corpus: steps are 1..5, counts positive and
-    // non-increasing is NOT required (merges change the pair universe),
-    // but every chosen pair must be two space-separated symbols
-    val real = TextAnalysis.bpeTrain(spark, Sf).collect()
-    assert(real.map(_.getLong(0)).toSeq == (1L to 5L) &&
-      real.forall(r => r.getString(1).split(" ").length == 2 && r.getLong(2) > 0))
-  }
-
-  test("text_bpe_apply: per-source symbol accounting is conservative and consistent with the trainer") {
-    val rows = TextAnalysis.bpeApply(spark, Sf).collect()
-    assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val (tok, chars, sym, bp) =
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      assert(sym <= chars, "a merge never adds symbols")
-      assert(sym >= tok, "every token is at least one symbol")
-      assert(bp == sym * 10000 / chars, "compression recomputes")
-    }
-    // corpus-wide totals: chars equals the raw character count of all
-    // tokens; 5 merges must remove exactly (applied merge count) symbols,
-    // which is positive on real text
-    assert(rows.map(_.getLong(3)).sum < rows.map(_.getLong(2)).sum)
-  }
-
   test("docs_softdedup: weights conserve mass and the planted groups price at exactly 1/g") {
     val rows = Pipeline.softDedup(spark, Sf).collect()
     assert(rows.nonEmpty)
@@ -721,31 +664,6 @@ class Round10Spec extends SparkSpec {
       .sortBy { case (id, ip) => (-ip, id) }.take(5)
     assert(got.filter(_._1 == 0L).sortBy(_._4).map(x => (x._2, x._3)).toSeq == expect,
       "query 0 top-5 by hand")
-  }
-
-  test("text_bpe_step: hand-computed merge table on a planted corpus, incl. the overlap case") {
-    import spark.implicits._
-    // words: aaaa ×2, bb ×1, ab ×1 (and a single-char token that must be
-    // excluded from the symbol universe entirely)
-    val docs = Seq("aaaa bb aaaa", "ab c").toDF("text")
-    val got = TextAnalysis.bpeStepOver(docs, topK = 20).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSeq
-    // 'aa' in aaaa: 3 adjacent pairs but only 2 greedy merges (the BPE
-    // overlap case); symbols_before = 4·2 + 2 + 2 = 12
-    val want = Seq(
-      ("aa", 6L, 4L, 12L, 8L),
-      ("ab", 1L, 1L, 12L, 11L),
-      ("bb", 1L, 1L, 12L, 11L))
-    assert(got == want, s"got $got")
-    // corpus-level sanity on real data: greedy never exceeds the raw
-    // count, accounting recomputes, ordering is (count desc, pair asc)
-    val rows = TextAnalysis.bpeStep(spark, Sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(rows.nonEmpty && rows.forall { case (_, raw, greedy, before, after) =>
-      greedy >= 1 && greedy <= raw && after == before - greedy })
-    assert(rows.map(-_._2).zip(rows.map(_._1)).sorted.map(_._2).toSeq ==
-      rows.map(_._1).toSeq, "rank order is (count desc, pair asc)")
   }
 
   test("docs_quality_classifier: bands partition the corpus and one doc's band recomputes by hand") {

@@ -97,47 +97,6 @@ class Round11Spec extends SparkSpec {
     }
   }
 
-  test("text_bpe_curve: 20 driver-driven merges match a plain-Scala trainer with curve") {
-    import spark.implicits._
-    // independent Sennrich trainer extended with the symbol-count curve
-    def refTrain(words: Seq[(String, Long)], steps: Int): Seq[(Long, String, Long, Long)] = {
-      var vocab = words.map { case (w, f) => (w.map(_.toString).toVector, f) }
-      (1 to steps).map { k =>
-        val stats = scala.collection.mutable.Map.empty[(String, String), Long]
-        for ((syms, f) <- vocab; i <- 0 until syms.length - 1)
-          stats((syms(i), syms(i + 1))) = stats.getOrElse((syms(i), syms(i + 1)), 0L) + f
-        val ((a, b), c) = stats.toSeq.minBy { case ((x, y), n) => (-n, x + " " + y) }
-        vocab = vocab.map { case (syms, f) =>
-          val out = Vector.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == a && syms(i + 1) == b) {
-              out += a + b; i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          (out.result(), f)
-        }
-        val symAfter = vocab.map { case (syms, f) => syms.length * f }.sum
-        (k.toLong, s"$a $b", c, symAfter)
-      }
-    }
-    // enough pair mass for 20 genuine merges: shared morphology + overlap runs
-    val corpus = Seq(
-      "internationalization nationalization aaaa",
-      "internationale nationalization abcdefgh aaaa",
-      "nationalization internationalization aaaa bb",
-      "abcdefgh internationale rationalization")
-    val docs = corpus.toDF("text")
-    val words = corpus.flatMap(_.split(" ")).filter(_.length >= 2)
-      .groupBy(identity).map { case (w, xs) => (w, xs.size.toLong) }.toSeq
-    val got = TextAnalysis.bpeTrainCurveOver(docs, steps = 20).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    val want = refTrain(words, 20)
-    assert(got == want, s"merge/curve divergence:\n got=$got\nwant=$want")
-    // the curve is strictly decreasing: every merge removes >= 1 symbol
-    assert(got.map(_._4) == got.map(_._4).sorted.reverse && got.map(_._4).distinct.size == 20)
-  }
-
   test("clusterLabels: one materialization per (session, dataset), bit-identical") {
     Dedup.clearLabelCache()
     val t0 = System.nanoTime()

@@ -1,151 +1,8 @@
 package graft
 
-import graft.operators.TextAnalysis
-
-/** Round-13 additions: the WordPiece trainer (likelihood-scored merges)
-  * and its greedy longest-match-first (MaxMatch) application. */
+/** Round-13 additions: first-fit sequence packing and the k-center cover
+  * radius. */
 class Round13Spec extends SparkSpec {
-
-  test("text_wordpiece_train: likelihood argmax diverges from BPE's count argmax") {
-    import spark.implicits._
-    // "ab" is the most FREQUENT pair but its symbols are equally frequent,
-    // so its likelihood count(ab)/(c(a)c(b)) = 1/50; "xy" is rarer but
-    // 1/10 — WordPiece must pick "x y" where BPE picks "a b"
-    val docs = (Seq.fill(50)("ab") ++ Seq.fill(10)("xy"))
-      .map(Tuple1(_)).toDF("text")
-    val wp = TextAnalysis.wordpieceTrainOver(docs, 1).collect()
-    assert(wp.length == 1)
-    assert(wp(0).getAs[String]("pair") == "x y", wp(0).toString)
-    assert(wp(0).getAs[Long]("pair_count") == 10L)
-    // exact milli-ln score: lnq(10) - lnq(10) - lnq(10) = -2303
-    assert(wp(0).getAs[Long]("score_milli") == -2303L)
-    val bpe = TextAnalysis.bpeTrainOver(docs, 1).collect()
-    assert(bpe(0).getAs[String]("pair") == "a b", bpe(0).toString)
-  }
-
-  test("text_wordpiece_train: merged symbol feeds the next round's denominator") {
-    import spark.implicits._
-    // after merging "x y" -> "xy", the symbol "xy" has count 10 and the
-    // pair "xy z" scores lnq(10)-lnq(10)-lnq(10); the trainer must count
-    // the FUSED symbol, not its characters
-    val docs = (Seq.fill(50)("ab") ++ Seq.fill(10)("xyz"))
-      .map(Tuple1(_)).toDF("text")
-    val wp = TextAnalysis.wordpieceTrainOver(docs, 2).collect()
-    assert(wp.map(_.getAs[String]("pair")).toSeq == Seq("x y", "xy z"),
-      wp.mkString(";"))
-    assert(wp(1).getAs[Long]("score_milli") == -2303L)
-  }
-
-  /** Plain-Scala mirror of the MaxMatch fold, truncating substr and all:
-    * at 1-based pos, try lengths maxL→2 against the merge products
-    * (substring clamped at word end), else consume one char — maxL is the
-    * longest TRAINED product (merges fuse multi-char products, so lengths
-    * reach 2^steps; a static steps+1 cap silently skips shipped pieces). */
-  private def refMaxMatch(w: String, products: Set[String]): Long = {
-    val maxL = if (products.isEmpty) 2 else math.max(2, products.map(_.length).max)
-    var pos = 1
-    var cnt = 0L
-    while (pos <= w.length) {
-      val mlen = (maxL to 2 by -1).find { l =>
-        products.contains(w.substring(pos - 1, math.min(pos - 1 + l, w.length)))
-      }.getOrElse(1)
-      pos += mlen
-      cnt += 1
-    }
-    cnt
-  }
-
-  test("text_wordpiece_apply: per-source counts match a plain-Scala MaxMatch") {
-    import spark.implicits._
-    val docs = Seq(
-      ("web", "the theme then theory the the quick quick brown"),
-      ("web", "thequick ck qui quince a b the"),
-      ("book", "quick the anthem x yz the theme"),
-      ("book", "zz the the the quince quip")).toDF("source", "text")
-    val products = TextAnalysis
-      .wordpieceTrainOver(docs.select($"text"), 5).collect()
-      .map(_.getAs[String]("pair").replace(" ", "")).toSet
-    assert(products.size == 5, products.toString)
-    val got = TextAnalysis.wordpieceApplyOver(docs, 5).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val toks = docs.collect().flatMap(r =>
-      r.getString(1).split(" ").filter(_.nonEmpty).map(w => (r.getString(0), w)))
-    for (src <- Seq("web", "book")) {
-      val ws = toks.filter(_._1 == src).map(_._2)
-      assert(got(src).getAs[Long]("n_tokens") == ws.length.toLong, src)
-      assert(got(src).getAs[Long]("chars") == ws.map(_.length.toLong).sum, src)
-      val pieces = ws.map(refMaxMatch(_, products)).sum
-      assert(got(src).getAs[Long]("pieces_after") == pieces, s"$src: $pieces")
-      assert(got(src).getAs[Long]("compression_bp") ==
-        pieces * 10000L / ws.map(_.length.toLong).sum, src)
-    }
-  }
-
-  /** Plain-Scala mirror of the WordPiece trainer: milli-ln likelihood
-    * scoring over len≥2 words, (score desc, pair asc) tie rule, greedy
-    * left-to-right non-overlapping merge — emits until pairs run dry
-    * (mirroring the Spark loop, whose empty argmax frame ends the run). */
-  private def refWordpieceTrain(corpus: Seq[String],
-      steps: Int): Seq[(Long, String, Long, Long)] = {
-    def lnq(x: Long): Long = math.floor(math.log(x.toDouble) * 1000 + 0.5).toLong
-    def mergeLs(ls: List[String], a: String, b: String): List[String] = {
-      val buf = scala.collection.mutable.ListBuffer.empty[String]
-      var i = 0
-      while (i < ls.length) {
-        if (i + 1 < ls.length && ls(i) == a && ls(i + 1) == b) { buf += a + b; i += 2 }
-        else { buf += ls(i); i += 1 }
-      }
-      buf.toList
-    }
-    var vocab: Map[List[String], Long] = corpus.flatMap(_.split(" "))
-      .filter(_.length >= 2).groupBy(identity).view
-      .mapValues(_.size.toLong).toMap
-      .map { case (w, f) => w.split("").toList -> f }
-    val out = scala.collection.mutable.ListBuffer.empty[(Long, String, Long, Long)]
-    var k = 1
-    var dry = false
-    while (k <= steps && !dry) {
-      val pairs = scala.collection.mutable.Map.empty[(String, String), Long]
-      val syms = scala.collection.mutable.Map.empty[String, Long]
-      vocab.foreach { case (ls, f) =>
-        ls.foreach(s => syms(s) = syms.getOrElse(s, 0L) + f)
-        ls.zip(ls.tail).foreach(p => pairs(p) = pairs.getOrElse(p, 0L) + f)
-      }
-      if (pairs.isEmpty) dry = true
-      else {
-        val scored = pairs.toSeq.map { case ((a, b), pc) =>
-          (s"$a $b", pc, lnq(pc) - lnq(syms(a)) - lnq(syms(b))) }
-        val (bp, bc, bs) = scored.minBy { case (p, _, s) => (-s, p) }
-        out += ((k.toLong, bp, bc, bs))
-        val Array(a, b) = bp.split(" ")
-        vocab = vocab.map { case (ls, f) => mergeLs(ls, a, b) -> f }
-      }
-      k += 1
-    }
-    out.toSeq
-  }
-
-  test("text_wordpiece_train property: Spark trainer == plain-Scala reference on 12 random corpora") {
-    import spark.implicits._
-    // tiny alphabet maximizes pair/symbol-count collisions (tie-rule
-    // stressor) and run-heavy words (greedy non-overlap stressor); small
-    // corpora also exercise the pairs-run-dry early stop
-    for (seed <- 1 to 12) {
-      val rnd = new scala.util.Random(seed * 104729)
-      val alphabet = "abc"
-      def word(): String =
-        (0 until (1 + rnd.nextInt(6))).map(_ => alphabet(rnd.nextInt(3))).mkString
-      val vocabWords = (0 until (3 + rnd.nextInt(7))).map(_ => word())
-      val corpus = (0 until (4 + rnd.nextInt(9)))
-        .map(_ => (0 until (1 + rnd.nextInt(5)))
-          .map(_ => vocabWords(rnd.nextInt(vocabWords.size))).mkString(" "))
-      val got = TextAnalysis.wordpieceTrainOver(corpus.toDF("text"), 5).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-      val want = refWordpieceTrain(corpus, 5)
-      assert(got == want,
-        s"seed $seed divergence: got=$got want=$want\ncorpus=$corpus")
-    }
-  }
 
   test("docs_pack_greedy: boundary cases — exact fill, truncation, forced new bin") {
     import spark.implicits._
@@ -189,41 +46,5 @@ class Round13Spec extends SparkSpec {
     val ids = rows.map(_._2)
     assert(ids.distinct.length == ids.length, "a center can never repeat")
     assert(rows.head == ((1L, 0L, 0L)), "seed is the minimum vec_id")
-  }
-
-  test("text_wordpiece_apply: MaxMatch is greedy, not optimal — and that's pinned") {
-    import spark.implicits._
-    // products {ab, abc} on word "abcd": greedy takes "abc"+"d" (2 pieces);
-    // on "abd": "ab"+"d" (2); on "abcabc": "abc"+"abc" (2). The word "aabc"
-    // shows the longest-FIRST rule: "a"+"abc" (2), never "a a b c"
-    val docs = Seq(
-      ("s", "ababab ababab abab ababab abab abcabc abcabc abcd abd aabc"))
-      .toDF("source", "text")
-    val products = TextAnalysis
-      .wordpieceTrainOver(docs.select($"text"), 2).collect()
-      .map(_.getAs[String]("pair").replace(" ", "")).toSet
-    val got = TextAnalysis.wordpieceApplyOver(docs, 2).collect()
-    val ws = docs.collect().flatMap(_.getString(1).split(" "))
-    val expect = ws.map(refMaxMatch(_, products)).sum
-    assert(got(0).getAs[Long]("pieces_after") == expect,
-      s"products=$products got=${got(0)}")
-  }
-
-  test("text_wordpiece_apply: probes products LONGER than steps+1 (fused multi-char merges)") {
-    import spark.implicits._
-    // step 1 fuses a+b→ab; step 2 fuses ab+ab→abab — a 4-char product at
-    // steps=2, beyond the old static steps+1 probe cap. 'ababab' must
-    // segment abab+ab (2 pieces), not ab+ab+ab (3): the cap bug's witness
-    val text = "abab abab abab abab abab abab ab ababab"
-    val docs = Seq(("s", text)).toDF("source", "text")
-    val products = TextAnalysis
-      .wordpieceTrainOver(docs.select($"text"), 2).collect()
-      .map(_.getAs[String]("pair").replace(" ", "")).toSet
-    assert(products == Set("ab", "abab"), products.toString)
-    assert(refMaxMatch("ababab", products) == 2L) // the fixed twin agrees
-    val got = TextAnalysis.wordpieceApplyOver(docs, 2).collect()(0)
-    val expect = text.split(" ").map(refMaxMatch(_, products)).sum
-    assert(got.getAs[Long]("pieces_after") == expect,
-      s"products=$products got=$got want=$expect")
   }
 }
