@@ -1842,81 +1842,53 @@ object TextAnalysis {
 
   /** Seed head sizes for [[unigramEm]]: all single chars plus the top
     * [[UnigramSeedNgrams]] bigrams AND trigrams (by count, ties on piece
-    * string) form the seed inventory — max piece length 3 is what makes
-    * the Viterbi DP a 3-register fold (see below). */
+    * string) form the seed inventory — max piece length 3 bounds the
+    * Viterbi look-back to three positions. */
   val UnigramSeedNgrams = 150
 
-  /** Sentinel for "piece absent / position unreachable" in the Viterbi
-    * DP — far below any real path (path scores are ≥ −60 000·len milli-ln)
-    * yet safe from Long overflow when two sentinels add. */
+  /** Score of an absent piece in the Viterbi DP — far below any real path
+    * (a piece scores ≥ −ilnq(Σ counts) ≈ −28·10⁶ micro-ln even at 10¹²
+    * pieces) yet safe from Long overflow when two sentinels add. */
   val UnigramNeg = -1000000000000000L
 
-  /** Unigram-LM (SentencePiece-style) tokenizer EM step
+  /** Unigram-LM (SentencePiece-style, Kudo 2018) tokenizer EM step
     * (`text_unigram_em`) — the OTHER tokenizer family real pipelines
     * train, beside BPE: ONE full EM iteration over a seed vocabulary.
     * Seed = every single character + the top-[[UnigramSeedNgrams]]
     * bigrams/trigrams by corpus count; piece log-probs are integer
-    * MICRO-lns from the integer-exact [[ilnqU]] quantizer (r15 —
-    * quantized BEFORE any summation, so the whole DP is exact long
-    * arithmetic with no float op at all). E-step: VITERBI-segment every vocab word
-    * under those log-probs; M-step: re-estimate from the segmentation
-    * counts (`lp_micro = ilnq(e_count) − ilnq(Σe)`).
+    * MICRO-lns from the integer-exact [[ilnqRef]] quantizer, quantized
+    * BEFORE any summation, so the whole DP is exact long arithmetic.
+    * E-step: Viterbi-segment every vocab word under those log-probs
+    * ([[segment]]); M-step: re-estimate from the segmentation counts
+    * (`lp_micro = ilnq(e_count) − ilnq(Σe)`).
     *
-    * The Viterbi recurrence is a CODEGEN'D FOLD, not a join or UDF:
-    * max piece length 3 means dp[i] depends only on dp[i−1..i−3], so the
-    * forward pass carries exactly three dp registers plus the
-    * backpointer array through `aggregate(sequence(1, len(w)), …)`, with
-    * piece lookups as `element_at` against the ONE-ROW broadcast
-    * piece→lp map (the codebook pattern); a second fold walks the
-    * backpointers right-to-left into the chosen pieces. Ties prefer the
-    * LONGER piece (checked 3→2→1 against the max, identically both
-    * engines); single chars are always seeded, so every position is
-    * reachable and no real path ever sees [[UnigramNeg]].
-    *
-    * 100 TB shape: one corpus pass to the (word, freq) vocab; seed
-    * counting, the DP (O(len) per DISTINCT word), and both estimates are
-    * vocab-bounded; the model that ships is the piece table itself. The
-    * DuckDB twin runs the identical DP as a recursive CTE over (word,
-    * position) with the same sentinel/tie conventions. */
+    * Spark reduces the corpus to the `(w, freq)` vocabulary in one pass;
+    * the driver collects it once and runs seeding, the DP and both
+    * estimates in memory, as every unigram row does. The DuckDB twin runs
+    * the identical DP as a recursive CTE over (word, position) with the
+    * same sentinel/tie conventions. */
   def unigramEm(spark: SparkSession, d: String): DataFrame =
     unigramEmOver(Tables.documents(spark, d).select(col("text")))
 
   /** 256-entry mantissa table for the INTEGER-EXACT micro-ln quantizer
-    * [[ilnqU]]: entry j is `round(ln(1 + j/256)·10⁶)`, generated ONCE with
-    * `StrictMath` (bit-identical on every JVM) and consumed by BOTH engines
-    * as literals — Spark as a `typedlit` array, DuckDB baked into the
-    * oracle SQL string by the same process that builds this table — so NO
-    * floating-point op executes at query time on either engine. Public for
-    * the spec twins. */
+    * [[ilnqRef]]: entry j is `round(ln(1 + j/256)·10⁶)`, generated ONCE with
+    * `StrictMath` (bit-identical on every JVM). The driver-side trainers
+    * index it directly and DuckDB reads it baked into the oracle SQL string
+    * by the same process that builds this table, so NO floating-point op
+    * executes at query time on either engine. Public for the specs. */
   val IlnTableMicro: IndexedSeq[Long] =
     (0 until 256).map(j => Math.round(StrictMath.log1p(j / 256.0) * 1e6))
 
-  /** `round(ln 2 · 10⁶)` — the per-octave step of [[ilnqU]]. */
+  /** `round(ln 2 · 10⁶)` — the per-octave step of [[ilnqRef]]. */
   val IlnLn2Micro = 693147L
 
-  /** Integer-exact micro-ln quantizer: for x ≥ 1,
-    * `b·693147 + T[(x·256 >> b) − 256]` where `b = ⌊log₂ x⌋` comes from the
-    * BIT LENGTH of x (`length(bin(x)) − 1` — pure string/integer ops) and T
-    * is [[IlnTableMicro]]. Approximates `ln(x)·10⁶` to within
-    * `ln(1+1/256)·10⁶ ≈ 3906` micro units, is monotone non-decreasing, and
-    * — the property the driver gate actually needs — is EXACT integer
-    * arithmetic end to end, so Spark, DuckDB and the plain-Scala spec twin
-    * ([[ilnqRef]]) can never diverge by a libm/vectorization ulp the way a
-    * float `ln` in principle can across hosts. r15: the WHOLE unigram
-    * family (`unigramEm`/`unigramPrune`/`unigramApply` and the curve)
-    * rides this quantizer — zero float ops anywhere in the trainer path.
-    * (The r12-r14 curve reds that motivated it turned out to be the
-    * oracle's uncast HUGEINT output column, not libm — see SURVEY §6 —
-    * but integer-exact remains strictly safer and is now uniform.) */
-  private def ilnqU(c: Column): Column = {
-    val x = c.cast("long")
-    val b = length(bin(x)) - lit(1)
-    val j = (call_function("shiftright", x * lit(256L), b) - lit(256L)).cast("int")
-    b.cast("long") * lit(IlnLn2Micro) +
-      element_at(typedlit(IlnTableMicro), j + lit(1))
-  }
-
-  /** Plain-Scala twin of [[ilnqU]] for spec reference folds. */
+  /** Integer-exact micro-ln quantizer of the unigram trainers: for
+    * 1 ≤ x < 2⁵⁶ (`x·256` must fit in 64 unsigned bits; larger x throws),
+    * `b·693147 + T[(x·256 >> b) − 256]` where `b = ⌊log₂ x⌋` is x's bit
+    * length minus one and T is [[IlnTableMicro]]. Approximates `ln(x)·10⁶`
+    * to within `ln(1+1/256)·10⁶ ≈ 3906` micro units, is monotone
+    * non-decreasing, and is EXACT integer arithmetic end to end, so the
+    * driver and the DuckDB twin ([[ilnqSql]]) agree bit for bit. */
   def ilnqRef(x: Long): Long = {
     require(x >= 1, s"ilnq domain is x >= 1, got $x")
     val b = 63 - java.lang.Long.numberOfLeadingZeros(x)
@@ -1924,7 +1896,7 @@ object TextAnalysis {
     b * IlnLn2Micro + IlnTableMicro(j)
   }
 
-  /** DuckDB fragment computing [[ilnqU]] of `x`; requires the one-row
+  /** DuckDB fragment computing [[ilnqRef]] of `x`; requires the one-row
     * `ilntab(ilnt)` CTE ([[ilnTabSql]]) to be cross-joined in scope. */
   private def ilnqSql(x: String): String = {
     val xe = s"cast($x AS bigint)"
@@ -1942,102 +1914,95 @@ object TextAnalysis {
     .filter(col("w") =!= "")
     .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
-  /** Seed piece inventory: all single chars + the top-[[UnigramSeedNgrams]]
-    * bigrams/trigrams by count. Top-K rides TakeOrderedAndProject
-    * (orderBy+limit) — a global row_number window is the single-reducer
-    * killer the repo lints. */
-  private def unigramSeedsOf(words: DataFrame): DataFrame = {
-    def grams(n: Int): DataFrame = words
-      .filter(length(col("w")) >= n)
-      .select(col("w"), col("freq"),
-        explode(sequence(lit(1), length(col("w")) - (n - 1))).as("i"))
-      .select(col("w").substr(col("i"), lit(n)).as("p"), col("freq"))
-      .groupBy(col("p")).agg(sum(col("freq")).as("cnt"))
-    def topK(g: DataFrame): DataFrame =
-      g.orderBy(col("cnt").desc, col("p")).limit(UnigramSeedNgrams)
-    grams(1).unionAll(topK(grams(2))).unionAll(topK(grams(3)))
-  }
+  /** One distinct word on the driver: the word, its symbols and its
+    * corpus frequency. */
+  private case class UnigramWord(w: String, syms: IndexedSeq[String], freq: Long)
 
-  /** One-row piece→lp map (the shipped model — the codebook pattern). */
-  private def unigramLpMap(lp: DataFrame): DataFrame = lp.groupBy()
-    .agg(map_from_entries(collect_list(struct(col("p"), col("lp")))).as("lpm"))
+  /** Collects a `(w, freq)` vocabulary to the driver ONCE, as Spark's own
+    * `split(w, "")` symbols: code points, the unit Spark's and DuckDB's
+    * `length`/`substr` count, so a supplementary character stays one
+    * symbol. The driver holds the whole distinct-word vocabulary (31 words
+    * at every testdata scale). */
+  private def collectUnigramWords(words: DataFrame): Seq[UnigramWord] =
+    words.select(col("w"), split(col("w"), "").as("l"), col("freq")).collect().toSeq
+      .map(r => UnigramWord(r.getString(0), r.getSeq[String](1).toIndexedSeq, r.getLong(2)))
 
-  /** Viterbi-segment every (w, freq) word under the one-row piece→lp map
-    * and emit one (freq, p) row per piece USE — the 3-register forward
-    * fold + backpointer walk shared by [[unigramEm]] (round 1) and
-    * [[unigramPrune]] (round 2 under the pruned model). */
-  private def vitPieceUses(words: DataFrame, lpMap: DataFrame): DataFrame = {
-    val NEG = lit(UnigramNeg)
-    def cand(st: Column, w: Column, i: Column, len: Int): Column = {
-      val reg = st.getField(s"d$len")
-      val v = reg +
-        coalesce(element_at(col("lpm"), w.substr(i - (len - 1), lit(len))), NEG)
-      // guard i < len explicitly: unguarded, the len-2/len-3 candidates at
-      // i=1/i=2 evaluate substr at pos <= 0 (Spark clamps to 1) and add a
-      // REAL piece lp onto the sentinel register — never the argmax while
-      // UnigramNeg dominates, but the DuckDB twin guards with i >= len
-      // joins, so both engines must compute identical candidate VALUES,
-      // not just identical argmaxes
-      if (len == 1) v else when(i >= len, v).otherwise(NEG)
+  /** The top `k` (piece, count) by count desc, ties on the piece's UTF-8
+    * bytes: `orderBy(cnt.desc, p).limit(k)` in Spark's and DuckDB's string
+    * order, not `String.compareTo`. */
+  private def topByCount(g: Seq[(String, Long)], k: Int): Seq[(String, Long)] =
+    g.sortBy { case (p, n) => (-n, UTF8String.fromString(p)) }.take(k)
+
+  /** Seed inventory with corpus counts: every single char plus the
+    * top-[[UnigramSeedNgrams]] bigrams and trigrams. */
+  private def unigramSeeds(words: Seq[UnigramWord]): Seq[(String, Long)] = {
+    def grams(n: Int): Seq[(String, Long)] = {
+      val g = mutable.Map.empty[String, Long].withDefaultValue(0L)
+      for (u <- words; i <- 0 to u.syms.length - n) g(u.syms.slice(i, i + n).mkString) += u.freq
+      g.toSeq
     }
-    words.crossJoin(broadcast(lpMap))
-      .withColumn("bl", aggregate(
-        sequence(lit(1), length(col("w"))),
-        struct(lit(0L).as("d1"), NEG.as("d2"), NEG.as("d3"),
-          array().cast("array<int>").as("bl")),
-        (st, i) => {
-          val c1 = cand(st, col("w"), i, 1)
-          val c2 = cand(st, col("w"), i, 2)
-          val c3 = cand(st, col("w"), i, 3)
-          val best = greatest(c3, c2, c1)
-          struct(best.as("d1"), st.getField("d1").as("d2"),
-            st.getField("d2").as("d3"),
-            concat(st.getField("bl"), array(
-              when(c3 === best, 3).when(c2 === best, 2).otherwise(1))).as("bl"))
-        },
-        st => st.getField("bl")))
-      .withColumn("ps", aggregate(
-        sequence(length(col("w")), lit(1), lit(-1)),
-        struct(length(col("w")).as("expect"),
-          array().cast("array<string>").as("ps")),
-        (st, i) => {
-          val hit = i === st.getField("expect")
-          val l = element_at(col("bl"), i)
-          struct(
-            when(hit, st.getField("expect") - l)
-              .otherwise(st.getField("expect")).as("expect"),
-            when(hit, concat(st.getField("ps"),
-                array(col("w").substr(i - l + 1, l))))
-              .otherwise(st.getField("ps")).as("ps"))
-        },
-        st => st.getField("ps")))
-      .select(col("freq"), explode(col("ps")).as("p"))
+    grams(1) ++ topByCount(grams(2), UnigramSeedNgrams) ++
+      topByCount(grams(3), UnigramSeedNgrams)
   }
 
-  /** [[unigramEm]] over an explicit docs frame (spec hook). r15: the whole
-    * unigram family now rides the integer-exact [[ilnqU]] quantizer (micro
-    * lns), retiring the last float `ln` from the trainer path — uniformity
-    * with [[unigramCurve]], ported with the oracle and Round11Spec twins in
-    * the same change. */
+  /** Piece log-probs from scores: `ilnq(max(n, 1)) − ilnq(Σ max(n, 1))`.
+    * Seed counts are ≥ 1; the floor keeps a pruned model's unused chars
+    * finite without smoothing the used pieces. */
+  private def unigramLp(scores: Seq[(String, Long)]): Map[String, Long] = {
+    lazy val total = ilnqRef(scores.map(s => math.max(s._2, 1L)).sum)
+    scores.map { case (p, n) => p -> (ilnqRef(math.max(n, 1L)) - total) }.toMap
+  }
+
+  /** The one unigram Viterbi: the max-log-prob segmentation of a word's
+    * symbols into pieces of at most 3 symbols under `lp`. Ties prefer the
+    * LONGER piece; an absent piece scores [[UnigramNeg]], which never wins
+    * because every model keeps all single chars. */
+  private def segment(lp: Map[String, Long], syms: IndexedSeq[String]): List[String] = {
+    val best = Array.fill(syms.length + 1)(Long.MinValue)
+    val back = new Array[Int](syms.length + 1)
+    best(0) = 0L
+    for (i <- 1 to syms.length; l <- 1 to math.min(3, i)) {
+      val c = best(i - l) + lp.getOrElse(syms.slice(i - l, i).mkString, UnigramNeg)
+      if (c >= best(i)) { best(i) = c; back(i) = l }
+    }
+    var pieces = List.empty[String]
+    var i = syms.length
+    while (i > 0) { pieces = syms.slice(i - back(i), i).mkString :: pieces; i -= back(i) }
+    pieces
+  }
+
+  /** E-step: each piece's uses over the segmentations of every word,
+    * weighted by the word's frequency. */
+  private def unigramUsage(words: Seq[UnigramWord], lp: Map[String, Long]): Map[String, Long] = {
+    val e = mutable.Map.empty[String, Long].withDefaultValue(0L)
+    for (u <- words; p <- segment(lp, u.syms)) e(p) += u.freq
+    e.toMap
+  }
+
+  /** The prune rule: every single char of `inv` (never prunable — the
+    * coverage guarantee) plus its top-`keepN` USED multi-char pieces by
+    * usage, each scored by its usage `e`. */
+  private def unigramKeep(inv: Seq[(String, Long)], e: Map[String, Long],
+      keepN: Int): Seq[(String, Long)] = {
+    val (chars, multi) = inv.map { case (p, _) => p -> e.getOrElse(p, 0L) }
+      .partition { case (p, _) => pieceLen(p) == 1 }
+    chars ++ topByCount(multi.filter(_._2 > 0), keepN)
+  }
+
+  /** A piece's length in code points, as Spark's `length`. */
+  private def pieceLen(p: String): Long = p.codePointCount(0, p.length).toLong
+
+  /** [[unigramEm]] over an explicit docs frame (spec hook). */
   def unigramEmOver(docs: DataFrame): DataFrame = {
-    // pin the vocab-sized shared frames (r15): unpinned, every one of the
-    // branches below replays its whole upstream subtree — the em plan
-    // rescanned the documents parquet 34 times (the prune twin 202) for
-    // what is ONE corpus pass + model-sized work. words/seeds/ecnt are all
-    // |vocab|-bounded, the family's standing localCheckpoint contract.
-    val words = unigramWordsOf(docs).localCheckpoint()
-    val seeds = unigramSeedsOf(words).localCheckpoint()
-    val tot = seeds.agg(sum(col("cnt")).as("t"))
-    val lp = seeds.crossJoin(broadcast(tot))
-      .select(col("p"), (ilnqU(col("cnt")) - ilnqU(col("t"))).as("lp"))
-    val ecnt = vitPieceUses(words, unigramLpMap(lp))
-      .groupBy(col("p")).agg(sum(col("freq")).as("e_count"))
-      .localCheckpoint() // read twice: the total and the final join
-    val etot = ecnt.agg(sum(col("e_count")).as("et"))
-    seeds.join(ecnt, "p").crossJoin(broadcast(etot))
-      .select(col("p").as("piece"), length(col("p")).cast("long").as("piece_len"),
-        col("cnt").as("seed_count"), col("e_count"),
-        (ilnqU(col("e_count")) - ilnqU(col("et"))).as("lp_micro"))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val words = collectUnigramWords(unigramWordsOf(docs))
+    val seeds = unigramSeeds(words)
+    val e = unigramUsage(words, unigramLp(seeds))
+    val lp = unigramLp(e.toSeq)
+    val seedCount = seeds.toMap
+    e.toSeq.map { case (p, n) => (p, pieceLen(p), seedCount(p), n, lp(p)) }
+      .toDF("piece", "piece_len", "seed_count", "e_count", "lp_micro")
       .orderBy(col("e_count").desc, col("piece"))
   }
 
@@ -2050,13 +2015,13 @@ object TextAnalysis {
     * inventory to the survivors (every single char + the
     * top-[[UnigramKeepNgrams]] multi-char pieces by round-1 usage,
     * ties on piece string), re-estimate log-probs over the kept set
-    * (`lnq(max(e1,1)) − lnq(Σ max(e1,1))` — the +1 floor keeps unused
+    * (`ilnq(max(e1,1)) − ilnq(Σ max(e1,1))` — the +1 floor keeps unused
     * chars finite without smoothing the used ones), and RE-SEGMENT the
     * corpus under the pruned model. Emits per kept piece its round-1 and
     * round-2 usage counts plus the pruned log-prob — the redistribution
-    * table showing where cut pieces' mass went. Same folds, sentinels
-    * and tie rules as [[unigramEm]] (both rounds ride [[vitPieceUses]]);
-    * the DuckDB twin runs both DPs as recursive CTEs. */
+    * table showing where cut pieces' mass went. Both rounds run on the
+    * driver over the once-collected vocabulary with [[unigramEm]]'s
+    * [[segment]]; the DuckDB twin runs both DPs as recursive CTEs. */
   def unigramPrune(spark: SparkSession, d: String): DataFrame =
     unigramPruneOver(Tables.documents(spark, d).select(col("text")))
 
@@ -2065,36 +2030,15 @@ object TextAnalysis {
     * the default). */
   def unigramPruneOver(docs: DataFrame,
       keepN: Int = UnigramKeepNgrams): DataFrame = {
-    // pin the vocab-sized shared frames (r15): the unpinned prune plan
-    // replayed words/seeds/the ROUND-1 VITERBI PASS once per downstream
-    // branch — 202 parquet scans of the corpus for a two-Viterbi-pass
-    // algorithm. Pinned, exactly two vit passes execute (e1, e2); every
-    // pinned frame is |vocab|-bounded.
-    val words = unigramWordsOf(docs).localCheckpoint()
-    val seeds = unigramSeedsOf(words).localCheckpoint()
-    val tot = seeds.agg(sum(col("cnt")).as("t"))
-    val lp1 = seeds.crossJoin(broadcast(tot))
-      .select(col("p"), (ilnqU(col("cnt")) - ilnqU(col("t"))).as("lp"))
-    val e1 = vitPieceUses(words, unigramLpMap(lp1))
-      .groupBy(col("p")).agg(sum(col("freq")).as("e1"))
-    val seedsE = seeds.join(e1, Seq("p"), "left")
-      .select(col("p"), coalesce(col("e1"), lit(0L)).as("e1"))
-      .localCheckpoint() // branches: chars, the top-K cut, the final join
-    val chars = seedsE.filter(length(col("p")) === 1)
-    val multi = seedsE.filter(length(col("p")) > 1 && col("e1") > 0)
-      .orderBy(col("e1").desc, col("p")).limit(keepN)
-    val kept = chars.unionAll(multi).localCheckpoint()
-    val tot2 = kept.agg(sum(greatest(col("e1"), lit(1L))).as("t2"))
-    val lp2 = kept.crossJoin(broadcast(tot2))
-      .select(col("p"),
-        (ilnqU(greatest(col("e1"), lit(1L))) - ilnqU(col("t2"))).as("lp"))
-    val e2 = vitPieceUses(words, unigramLpMap(lp2))
-      .groupBy(col("p")).agg(sum(col("freq")).as("e2_count"))
-    kept
-      .join(lp2.withColumnRenamed("lp", "lp2_micro"), "p")
-      .join(e2, "p")
-      .select(col("p").as("piece"), length(col("p")).cast("long").as("piece_len"),
-        col("e1").as("e1_count"), col("e2_count"), col("lp2_micro"))
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val words = collectUnigramWords(unigramWordsOf(docs))
+    val seeds = unigramSeeds(words)
+    val kept = unigramKeep(seeds, unigramUsage(words, unigramLp(seeds)), keepN)
+    val lp2 = unigramLp(kept)
+    val e2 = unigramUsage(words, lp2)
+    kept.collect { case (p, e1) if e2.contains(p) => (p, pieceLen(p), e1, e2(p), lp2(p)) }
+      .toDF("piece", "piece_len", "e1_count", "e2_count", "lp2_micro")
       .orderBy(col("e2_count").desc, col("piece"))
   }
 
@@ -2192,72 +2136,39 @@ object TextAnalysis {
 
   /** Unigram-LM trainer curve (`text_unigram_curve`) — [[unigramEm]]'s
     * E-step and [[unigramPrune]]'s shrink composed over
-    * [[UnigramCurveRounds]] driver-driven rounds, the exact twin of
-    * `text_bpe_curve` for the SentencePiece-style trainer: each round
-    * re-estimates piece log-probs from the previous round's usage
-    * (`ilnq(max(e,1)) − ilnq(Σ max(e,1))` — the prune convention, on the
-    * INTEGER-EXACT micro-ln quantizer [[ilnqU]]: after two consecutive
-    * driver-host hash mismatches traced to the only float op in the row,
-    * the milli-ln `floor(ln·1000+0.5)` was replaced by a bit-length +
-    * 256-entry-mantissa-table lookup so neither engine executes any
-    * floating point), Viterbi-
-    * segments the corpus under them ([[vitPieceUses]] — the 3-register
-    * fold), then prunes the inventory to every single char + the
+    * [[UnigramCurveRounds]] rounds, the twin of `text_bpe_curve` for the
+    * SentencePiece-style trainer: each round re-estimates piece log-probs
+    * from the previous round's usage (`ilnq(max(e,1)) − ilnq(Σ max(e,1))`,
+    * the prune convention), segments the vocabulary under them
+    * ([[segment]]), then prunes the inventory to every single char + the
     * top-[[unigramCurveKeepN]] multi-char pieces by usage. Emits one
     * checkpoint row per round: inventory size before/after the prune,
     * pieces emitted by the segmentation, and the char-level compression
     * in basis points — the "is the trained tokenizer getting better per
     * unit of vocabulary" readout.
     *
-    * 100 TB shape: the corpus collapses to the (word, freq) vocab once
-    * (localCheckpoint-pinned — lineage depth stays 1 at any round
-    * count); every per-round frame is model-sized, the inventory rides a
-    * one-row broadcast map into the DP, and the driver reads only
-    * bounded model artifacts per round (two counts + a one-row sum — the
-    * accepted `text_bpe_curve` pattern). The DuckDB twin replays all
-    * rounds as a chain of MATERIALIZED CTEs (recursive-DP per round). */
+    * The corpus collapses to the `(w, freq)` vocabulary once and every
+    * round runs on the driver over that one collect, so the round count
+    * adds no Spark job. The DuckDB twin replays all rounds as a chain of
+    * MATERIALIZED CTEs (recursive DP per round). */
   def unigramCurve(spark: SparkSession, d: String): DataFrame =
-    unigramCurveOver(Tables.documentsSpread(spark, d).select(col("text")))
+    unigramCurveOver(Tables.documents(spark, d).select(col("text")))
 
   /** [[unigramCurve]] over an explicit docs frame (spec hook). */
   def unigramCurveOver(docs: DataFrame,
       rounds: Int = UnigramCurveRounds): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = unigramWordsOf(docs).localCheckpoint()
-    val charsTotal = words
-      .agg(sum(length(col("w")).cast("long") * col("freq")))
-      .collect()(0).getLong(0)
-    // inventory state: (p, score); round 1 scores are the seed counts
-    var inv = unigramSeedsOf(words)
-      .select(col("p"), col("cnt").as("score")).localCheckpoint()
-    val out = Seq.newBuilder[(Long, Long, Long, Long, Long)]
-    for (k <- 1 to rounds) {
-      val vocabBefore = inv.count()
-      val tot = inv.agg(sum(greatest(col("score"), lit(1L))).as("t"))
-      // ilnqU, not a float milli-ln: the curve is the one row where a float
-      // ln ever diverged across hosts (driver r12/r13) — integer-exact table
-      // lookup
-      val lp = inv.crossJoin(broadcast(tot))
-        .select(col("p"),
-          (ilnqU(greatest(col("score"), lit(1L))) - ilnqU(col("t"))).as("lp"))
-      val e = vitPieceUses(words, unigramLpMap(lp))
-        .groupBy(col("p")).agg(sum(col("freq")).as("e"))
-        .localCheckpoint() // model-sized; read twice (emitted + prune)
-      val emitted = e.agg(sum(col("e"))).collect()(0).getLong(0)
-      val se = inv.join(e, Seq("p"), "left")
-        .select(col("p"), coalesce(col("e"), lit(0L)).as("e"))
-      val chars = se.filter(length(col("p")) === 1)
-      val multi = se.filter(length(col("p")) > 1 && col("e") > 0)
-        .orderBy(col("e").desc, col("p")).limit(unigramCurveKeepN(k))
-      inv = chars.unionAll(multi)
-        .select(col("p"), col("e").as("score")).localCheckpoint()
-      out += ((k.toLong, vocabBefore, inv.count(), emitted,
-        emitted * 10000L / charsTotal))
-    }
-    out.result()
-      .toDF("round", "vocab_before", "vocab_after", "pieces_emitted",
-        "compression_bp")
+    val words = collectUnigramWords(unigramWordsOf(docs))
+    val chars = words.map(u => u.syms.length * u.freq).sum
+    var inv = unigramSeeds(words)
+    (1 to rounds).map { k =>
+      val e = unigramUsage(words, unigramLp(inv))
+      val before = inv.size.toLong
+      inv = unigramKeep(inv, e, unigramCurveKeepN(k))
+      val emitted = e.values.sum
+      (k.toLong, before, inv.size.toLong, emitted, emitted * 10000L / chars)
+    }.toDF("round", "vocab_before", "vocab_after", "pieces_emitted", "compression_bp")
       .orderBy(col("round"))
   }
 
@@ -2357,69 +2268,31 @@ object TextAnalysis {
     * [[unigramEm]] piece model and publish the per-source compression
     * table (tokens, chars, pieces after segmentation, basis points) —
     * read beside `text_bpe_apply` this is the tokenizer bake-off a real
-    * pipeline runs before committing a vocab. The model (seeds + milli-ln
-    * log-probs) is trained corpus-wide exactly as in [[unigramEm]]; the
-    * application needs only each word's optimal PIECE COUNT, so the
-    * Viterbi fold drops the backpointer array entirely and carries six
-    * registers — (dp, count) for each of the last three positions, the
-    * count following the same longer-piece tie rule — making the per-word
-    * pass pure fixed-width codegen. Corpus scanned once to (source, word)
-    * counts; the DP runs per DISTINCT word; per-source numbers come from
-    * the count join-back, all vocab-bounded. */
+    * pipeline runs before committing a vocab. The model (seeds + micro-ln
+    * log-probs) is trained corpus-wide exactly as in [[unigramEm]]. Spark
+    * scans the corpus once to (source, word) counts; the driver collects
+    * the distinct words once, trains the model and counts each word's
+    * pieces with [[segment]]; per-source numbers come from joining that
+    * `(w, n_pieces)` table back onto the counts, all vocab-bounded. */
   def unigramApply(spark: SparkSession, d: String): DataFrame =
     unigramApplyOver(Tables.documents(spark, d).select(col("source"), col("text")))
 
   /** [[unigramApply]] over an explicit (source, text) frame (spec hook). */
   def unigramApplyOver(docs: DataFrame): DataFrame = {
-    // pin the two shared frames (r15): unpinned, the seed grams (3 branches)
-    // and the final join-back each replayed the corpus tokenization — 16
-    // parquet scans for a one-corpus-pass apply. srcCounts is
-    // |vocab|·|sources|-bounded, words |vocab|-bounded.
+    val spark = docs.sparkSession
+    import spark.implicits._
+    // pinned as in [[bpeApplyOver]]: srcCounts feeds the vocab collect and
+    // the final join-back; |vocab|·|sources|-bounded
     val srcCounts = docs
       .select(col("source"), explode(tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("source"), col("w")).agg(count(lit(1)).as("freq"))
       .localCheckpoint()
-    val words = srcCounts.groupBy(col("w")).agg(sum(col("freq")).as("freq"))
-      .localCheckpoint()
-    def grams(n: Int): DataFrame = words
-      .filter(length(col("w")) >= n)
-      .select(col("w"), col("freq"),
-        explode(sequence(lit(1), length(col("w")) - (n - 1))).as("i"))
-      .select(col("w").substr(col("i"), lit(n)).as("p"), col("freq"))
-      .groupBy(col("p")).agg(sum(col("freq")).as("cnt"))
-    def topK(g: DataFrame): DataFrame =
-      g.orderBy(col("cnt").desc, col("p")).limit(UnigramSeedNgrams)
-    val seeds = grams(1).unionAll(topK(grams(2))).unionAll(topK(grams(3)))
-    val tot = seeds.agg(sum(col("cnt")).as("t"))
-    val lp = seeds.crossJoin(broadcast(tot))
-      .select(col("p"), (ilnqU(col("cnt")) - ilnqU(col("t"))).as("lp"))
-    val lpMap = lp.groupBy()
-      .agg(map_from_entries(collect_list(struct(col("p"), col("lp")))).as("lpm"))
-    val NEG = lit(UnigramNeg)
-    def candA(st: Column, w: Column, i: Column, len: Int): Column =
-      st.getField(s"d$len") +
-        coalesce(element_at(col("lpm"), w.substr(i - (len - 1), lit(len))), NEG)
-    val perWord = words.crossJoin(broadcast(lpMap))
-      .withColumn("n_pieces", aggregate(
-        sequence(lit(1), length(col("w"))),
-        struct(lit(0L).as("d1"), NEG.as("d2"), NEG.as("d3"),
-          lit(0L).as("n1"), lit(0L).as("n2"), lit(0L).as("n3")),
-        (st, i) => {
-          val c1 = candA(st, col("w"), i, 1)
-          val c2 = candA(st, col("w"), i, 2)
-          val c3 = candA(st, col("w"), i, 3)
-          val best = greatest(c3, c2, c1)
-          val nbest = when(c3 === best, st.getField("n3") + 1L)
-            .when(c2 === best, st.getField("n2") + 1L)
-            .otherwise(st.getField("n1") + 1L)
-          struct(best.as("d1"), st.getField("d1").as("d2"),
-            st.getField("d2").as("d3"),
-            nbest.as("n1"), st.getField("n1").as("n2"),
-            st.getField("n2").as("n3"))
-        },
-        st => st.getField("n1")))
-      .select(col("w"), col("n_pieces"))
+    val words = collectUnigramWords(
+      srcCounts.groupBy(col("w")).agg(sum(col("freq")).as("freq")))
+    val lp = unigramLp(unigramSeeds(words))
+    val perWord = words.map(u => (u.w, segment(lp, u.syms).length.toLong))
+      .toDF("w", "n_pieces")
     srcCounts.join(perWord, "w")
       .groupBy(col("source"))
       .agg(sum(col("freq")).as("n_tokens"),

@@ -122,218 +122,4 @@ class Round11Spec extends SparkSpec {
     Dedup.clearLabelCache()
     assert(!(Dedup.clusterLabels(spark, Sf) eq a), "clear drops the pin")
   }
-
-  // independent plain-Scala unigram-LM EM step: seed counting, top-K,
-  // milli-ln quantization, Viterbi (ties prefer the LONGER piece), greedy
-  // backtrack, E-counts and the re-estimated log-probs
-  private def refUnigramEm(texts: Seq[String]): Seq[(String, Long, Long, Long, Long)] = {
-    val words = texts.flatMap(_.split(" ")).filter(_.nonEmpty)
-      .groupBy(identity).map { case (w, xs) => w -> xs.size.toLong }
-    def grams(n: Int): Map[String, Long] = words.toSeq.flatMap { case (w, f) =>
-      if (w.length >= n) (0 to w.length - n).map(i => w.substring(i, i + n) -> f)
-      else Nil
-    }.groupBy(_._1).map { case (p0, xs) => p0 -> xs.map(_._2).sum }
-    def topK(g: Map[String, Long]): Seq[(String, Long)] =
-      g.toSeq.sortBy { case (p0, c) => (-c, p0) }.take(TextAnalysis.UnigramSeedNgrams)
-    val seeds = grams(1).toSeq ++ topK(grams(2)) ++ topK(grams(3))
-    def lnq(x: Long): Long = TextAnalysis.ilnqRef(x)
-    val t = seeds.map(_._2).sum
-    val lp = seeds.map { case (p0, c) => p0 -> (lnq(c) - lnq(t)) }.toMap
-    val NEG = TextAnalysis.UnigramNeg
-    def viterbi(w: String): Seq[String] = {
-      val L = w.length
-      val dp = Array.fill(L + 1)(NEG); dp(0) = 0L
-      val bl = Array.fill(L + 1)(1)
-      for (i <- 1 to L) {
-        var best = Long.MinValue; var blen = 1
-        for (l <- 1 to 3 if i - l >= 0) {
-          val c = dp(i - l) + lp.getOrElse(w.substring(i - l, i), NEG)
-          if (c > best || (c == best && l > blen)) { best = c; blen = l }
-        }
-        dp(i) = best; bl(i) = blen
-      }
-      var i = L
-      val out = Seq.newBuilder[String]
-      while (i > 0) { out += w.substring(i - bl(i), i); i -= bl(i) }
-      out.result()
-    }
-    val ecnt = words.toSeq.flatMap { case (w, f) => viterbi(w).map(_ -> f) }
-      .groupBy(_._1).map { case (p0, xs) => p0 -> xs.map(_._2).sum }
-    val et = ecnt.values.sum
-    val seedCnt = seeds.toMap
-    ecnt.toSeq.sortBy { case (p0, e) => (-e, p0) }.map { case (p0, e) =>
-      (p0, p0.length.toLong, seedCnt(p0), e, lnq(e) - lnq(et))
-    }
-  }
-
-  test("text_unigram_em: EM step matches the plain-Scala Viterbi fold on a planted corpus") {
-    import spark.implicits._
-    // repetitive structure so multi-char pieces WIN segmentations, plus
-    // aperiodic filler so chars stay competitive elsewhere
-    val corpus = Seq(
-      "abcabcabc ababab " + filler(21, 40),
-      "abcabc xyxyxyxy " + filler(22, 35),
-      "abcabcabcabc zzzz zzzz " + filler(23, 30),
-      filler(24, 50) + " ababab xyxy")
-    val got = TextAnalysis.unigramEmOver(corpus.toDF("text")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    val want = refUnigramEm(corpus)
-    assert(got == want, s"EM divergence:\n got=${got.take(8)}...\nwant=${want.take(8)}...")
-    // the repetitive plants must actually segment into multi-char pieces
-    val byPiece = got.map(x => x._1 -> x._4).toMap
-    assert(byPiece.contains("abc") && byPiece("abc") >= 7L,
-      s"'abc' must be a winning trigram piece: ${got.filter(_._1.length == 3).take(5)}")
-    assert(got.exists(_._2 == 2L), "some bigram piece must be used")
-  }
-
-  test("text_unigram_em: full-corpus parity with the plain-Scala reference at sf0.001") {
-    val texts = graft.Tables.documents(spark, Sf).select("text")
-      .collect().map(_.getString(0)).toSeq
-    val got = TextAnalysis.unigramEm(spark, Sf).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    val want = refUnigramEm(texts)
-    assert(got == want,
-      s"sf0.001 EM divergence: first diff ${got.zip(want).find(x => x._1 != x._2)}")
-  }
-
-  test("text_unigram_apply: per-source compression matches the plain-Scala reference") {
-    import spark.implicits._
-    val rows = Seq(
-      ("web", "abcabcabc ababab " + filler(31, 40)),
-      ("web", "abcabc xyxyxyxy " + filler(32, 35)),
-      ("book", "abcabcabcabc zzzz zzzz " + filler(33, 30)),
-      ("book", filler(34, 50) + " ababab xyxy"),
-      ("code", filler(35, 44) + " abcabc"))
-    val got = TextAnalysis.unigramApplyOver(rows.toDF("source", "text")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    // reference: same seed/lp model, Viterbi piece COUNT per word, agg by source
-    val srcCounts = rows.flatMap { case (src, t) => t.split(" ").filter(_.nonEmpty).map(src -> _) }
-      .groupBy(identity).map { case ((src, w), xs) => (src, w, xs.size.toLong) }.toSeq
-    val words = srcCounts.groupBy(_._2).map { case (w, xs) => w -> xs.map(_._3).sum }
-    def grams(n: Int): Map[String, Long] = words.toSeq.flatMap { case (w, f) =>
-      if (w.length >= n) (0 to w.length - n).map(i => w.substring(i, i + n) -> f) else Nil
-    }.groupBy(_._1).map { case (p0, xs) => p0 -> xs.map(_._2).sum }
-    def topK(g: Map[String, Long]): Seq[(String, Long)] =
-      g.toSeq.sortBy { case (p0, c) => (-c, p0) }.take(TextAnalysis.UnigramSeedNgrams)
-    val seeds = grams(1).toSeq ++ topK(grams(2)) ++ topK(grams(3))
-    def lnq(x: Long): Long = TextAnalysis.ilnqRef(x)
-    val t = seeds.map(_._2).sum
-    val lp = seeds.map { case (p0, c) => p0 -> (lnq(c) - lnq(t)) }.toMap
-    val NEG = TextAnalysis.UnigramNeg
-    def nPieces(w: String): Long = {
-      val L = w.length
-      val dp = Array.fill(L + 1)(NEG); dp(0) = 0L
-      val bl = Array.fill(L + 1)(1)
-      for (i <- 1 to L) {
-        var best = Long.MinValue; var blen = 1
-        for (l <- 1 to 3 if i - l >= 0) {
-          val c = dp(i - l) + lp.getOrElse(w.substring(i - l, i), NEG)
-          if (c > best || (c == best && l > blen)) { best = c; blen = l }
-        }
-        dp(i) = best; bl(i) = blen
-      }
-      var i = L; var n = 0L
-      while (i > 0) { n += 1; i -= bl(i) }
-      n
-    }
-    val np = words.map { case (w, _) => w -> nPieces(w) }
-    val want = srcCounts.groupBy(_._1).map { case (src, xs) =>
-      val toks = xs.map(_._3).sum
-      val chars = xs.map { case (_, w, f) => w.length * f }.sum
-      val pieces = xs.map { case (_, w, f) => np(w) * f }.sum
-      (src, toks, chars, pieces, pieces * 10000 / chars)
-    }.toSeq.sortBy(_._1)
-    assert(got == want, s"apply divergence:\n got=$got\nwant=$want")
-    // the repetitive plants compress: every source ends below 10000 bp
-    assert(got.forall(_._5 < 10000L), s"compression must bite: $got")
-  }
-
-  test("text_unigram_prune: keepN=1 forces redistribution, matching plain Scala") {
-    import spark.implicits._
-    // round 1 uses both 'abc' and 'xy' heavily; keepN=1 keeps only the
-    // top multi-char piece, so the other's mass must redistribute to
-    // chars/survivors in round 2
-    val corpus = Seq(
-      "abcabcabc xyxyxyxy " + filler(41, 30),
-      "abcabc xyxy " + filler(42, 25),
-      "abcabcabcabc xyxyxy " + filler(43, 20))
-    val got = TextAnalysis.unigramPruneOver(corpus.toDF("text"), keepN = 1).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    // plain-Scala reference of the full prune round
-    val words = corpus.flatMap(_.split(" ")).filter(_.nonEmpty)
-      .groupBy(identity).map { case (w, xs) => w -> xs.size.toLong }
-    def grams(n: Int): Map[String, Long] = words.toSeq.flatMap { case (w, f) =>
-      if (w.length >= n) (0 to w.length - n).map(i => w.substring(i, i + n) -> f) else Nil
-    }.groupBy(_._1).map { case (p0, xs) => p0 -> xs.map(_._2).sum }
-    def topK(g: Map[String, Long], k: Int): Seq[(String, Long)] =
-      g.toSeq.sortBy { case (p0, c) => (-c, p0) }.take(k)
-    val seeds = grams(1).toSeq ++ topK(grams(2), TextAnalysis.UnigramSeedNgrams) ++
-      topK(grams(3), TextAnalysis.UnigramSeedNgrams)
-    def lnq(x: Long): Long = TextAnalysis.ilnqRef(x)
-    val NEG = TextAnalysis.UnigramNeg
-    def segment(lp: Map[String, Long], w: String): Seq[String] = {
-      val L = w.length
-      val dp = Array.fill(L + 1)(NEG); dp(0) = 0L
-      val bl = Array.fill(L + 1)(1)
-      for (i <- 1 to L) {
-        var best = Long.MinValue; var blen = 1
-        for (l <- 1 to 3 if i - l >= 0) {
-          val c = dp(i - l) + lp.getOrElse(w.substring(i - l, i), NEG)
-          if (c > best || (c == best && l > blen)) { best = c; blen = l }
-        }
-        dp(i) = best; bl(i) = blen
-      }
-      var i = L; val out = Seq.newBuilder[String]
-      while (i > 0) { out += w.substring(i - bl(i), i); i -= bl(i) }
-      out.result()
-    }
-    def eCounts(lp: Map[String, Long]): Map[String, Long] =
-      words.toSeq.flatMap { case (w, f) => segment(lp, w).map(_ -> f) }
-        .groupBy(_._1).map { case (p0, xs) => p0 -> xs.map(_._2).sum }
-    val t1 = seeds.map(_._2).sum
-    val lp1 = seeds.map { case (p0, c) => p0 -> (lnq(c) - lnq(t1)) }.toMap
-    val e1 = eCounts(lp1)
-    val se = seeds.map(_._1).distinct.map(p0 => p0 -> e1.getOrElse(p0, 0L))
-    val chars = se.filter(_._1.length == 1)
-    val multi = se.filter { case (p0, e) => p0.length > 1 && e > 0 }
-      .sortBy { case (p0, e) => (-e, p0) }.take(1)
-    val kept = chars ++ multi
-    val t2 = kept.map { case (_, e) => math.max(e, 1L) }.sum
-    val lp2 = kept.map { case (p0, e) => p0 -> (lnq(math.max(e, 1L)) - lnq(t2)) }.toMap
-    val e2 = eCounts(lp2)
-    val keptE = kept.toMap
-    val want = e2.toSeq.filter { case (p0, _) => keptE.contains(p0) }
-      .sortBy { case (p0, e) => (-e, p0) }
-      .map { case (p0, e) => (p0, p0.length.toLong, keptE(p0), e, lp2(p0)) }
-    assert(got == want, s"prune divergence:\n got=${got.take(8)}\nwant=${want.take(8)}")
-    // pruning actually bit: exactly one multi-char survivor, and the cut
-    // piece's mass reappears as extra char/survivor uses
-    val multiGot = got.filter(_._2 > 1)
-    assert(multiGot.size == 1, s"keepN=1 must keep one multi-char piece: $multiGot")
-    assert(got.exists(r => r._2 == 1 && r._4 > r._3),
-      s"cut mass must redistribute to single chars: $got")
-  }
-
-  test("text_unigram_em property: Spark DP == plain-Scala reference on 12 random corpora") {
-    import spark.implicits._
-    // seeded random corpora over a tiny alphabet maximize piece-score
-    // collisions (the tie-rule stressor) and run-heavy words (the
-    // overlap stressor)
-    for (seed <- 1 to 12) {
-      val rnd = new scala.util.Random(seed * 7919)
-      val alphabet = "abcd"
-      def word(): String =
-        (0 until (1 + rnd.nextInt(11))).map(_ => alphabet(rnd.nextInt(4))).mkString
-      val vocabWords = (0 until (4 + rnd.nextInt(8))).map(_ => word())
-      val corpus = (0 until (6 + rnd.nextInt(10)))
-        .map(_ => (0 until (1 + rnd.nextInt(5)))
-          .map(_ => vocabWords(rnd.nextInt(vocabWords.size))).mkString(" "))
-      val got = TextAnalysis.unigramEmOver(corpus.toDF("text")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-      val want = refUnigramEm(corpus)
-      assert(got == want,
-        s"seed $seed divergence: first diff ${got.zip(want).find(x => x._1 != x._2)}" +
-          s" (sizes ${got.size}/${want.size})\ncorpus=$corpus")
-    }
-  }
 }

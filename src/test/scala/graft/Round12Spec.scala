@@ -108,80 +108,6 @@ class Round12Spec extends SparkSpec {
       st.getAs[Long]("kept_pair_budget"))
   }
 
-  // independent plain-Scala unigram-LM trainer loop: seeds, milli-ln
-  // quantization, Viterbi (ties prefer the LONGER piece), greedy backtrack,
-  // usage counts, and the shrink schedule — the bit-exact twin of
-  // TextAnalysis.unigramCurveOver
-  private def refUnigramCurve(texts: Seq[String],
-      rounds: Int): Seq[(Long, Long, Long, Long, Long)] = {
-    val words = texts.flatMap(_.split(" ")).filter(_.nonEmpty)
-      .groupBy(identity).map { case (w, xs) => w -> xs.size.toLong }
-    def grams(n: Int): Map[String, Long] = words.toSeq.flatMap { case (w, f) =>
-      if (w.length >= n) (0 to w.length - n).map(i => w.substring(i, i + n) -> f)
-      else Nil
-    }.groupBy(_._1).map { case (p0, xs) => p0 -> xs.map(_._2).sum }
-    def topK(g: Map[String, Long]): Seq[(String, Long)] =
-      g.toSeq.sortBy { case (p0, c) => (-c, p0) }.take(TextAnalysis.UnigramSeedNgrams)
-    // the curve's quantizer is the INTEGER-EXACT micro-ln (ilnq), not the
-    // float milli-ln — the r14 fix for the driver-host hash divergence
-    def lnq(x: Long): Long = TextAnalysis.ilnqRef(x)
-    val NEG = TextAnalysis.UnigramNeg
-    def viterbi(w: String, lp: Map[String, Long]): Seq[String] = {
-      val L = w.length
-      val dp = Array.fill(L + 1)(NEG); dp(0) = 0L
-      val bl = Array.fill(L + 1)(1)
-      for (i <- 1 to L) {
-        var best = Long.MinValue; var blen = 1
-        for (l <- 1 to 3 if i - l >= 0) {
-          val c = dp(i - l) + lp.getOrElse(w.substring(i - l, i), NEG)
-          if (c > best || (c == best && l > blen)) { best = c; blen = l }
-        }
-        dp(i) = best; bl(i) = blen
-      }
-      var i = L
-      val out = Seq.newBuilder[String]
-      while (i > 0) { out += w.substring(i - bl(i), i); i -= bl(i) }
-      out.result()
-    }
-    val charsTotal = words.map { case (w, f) => w.length * f }.sum
-    var inv: Seq[(String, Long)] = grams(1).toSeq ++ topK(grams(2)) ++ topK(grams(3))
-    val out = Seq.newBuilder[(Long, Long, Long, Long, Long)]
-    for (k <- 1 to rounds) {
-      val vocabBefore = inv.size.toLong
-      val t = inv.map { case (_, s) => math.max(s, 1L) }.sum
-      val lp = inv.map { case (p0, s) => p0 -> (lnq(math.max(s, 1L)) - lnq(t)) }.toMap
-      val e = words.toSeq.flatMap { case (w, f) => viterbi(w, lp).map(_ -> f) }
-        .groupBy(_._1).map { case (p0, xs) => p0 -> xs.map(_._2).sum }
-      val emitted = e.values.sum
-      val se = inv.map { case (p0, _) => p0 -> e.getOrElse(p0, 0L) }
-      val chars = se.filter(_._1.length == 1)
-      val multi = se.filter { case (p0, ev) => p0.length > 1 && ev > 0 }
-        .sortBy { case (p0, ev) => (-ev, p0) }
-        .take(TextAnalysis.unigramCurveKeepN(k))
-      inv = chars ++ multi
-      out += ((k.toLong, vocabBefore, inv.size.toLong, emitted,
-        emitted * 10000L / charsTotal))
-    }
-    out.result()
-  }
-
-  test("text_unigram_curve: bit-exact vs the plain-Scala EM+prune fold") {
-    import spark.implicits._
-    for ((corpus, ci) <- Seq(
-      Seq("abcab cabca bcabc", "the cat sat on the mat", "abcab the the",
-        "zqzqzq zq zq", "cat cat cabca"),
-      Seq("aaaa bbbb aaaa", "ab ab ab ba", "a b ab ba abab")).zipWithIndex) {
-      val docs = corpus.toDF("text")
-      val got = TextAnalysis.unigramCurveOver(docs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4))).toSeq
-      val want = refUnigramCurve(corpus, TextAnalysis.UnigramCurveRounds)
-      assert(got == want, s"corpus $ci curve divergence:\n got=$got\nwant=$want")
-      // the shrink schedule really shrinks: vocab never grows
-      assert(got.map(_._3).zip(got.map(_._2)).forall { case (a, b) => a <= b })
-    }
-  }
-
   test("residual PQ reconstructs tighter than raw PQ at equal bits") {
     import graft.operators.Similarity
     val rawMse = Similarity.pqMse(spark, Sf, residual = false)

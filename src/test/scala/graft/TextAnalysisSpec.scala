@@ -1,14 +1,16 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable
 
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.functions._
 
 /** The tokenizer queries of [[TextAnalysis]]: the BPE step table, the BPE
-  * and WordPiece merge trainers (train, apply and curve), and the two
-  * exactness rules of their driver-side trainer — Spark's milli-ln and
-  * Spark's string order. */
+  * and WordPiece merge trainers (train, apply and curve), the unigram-LM
+  * trainer (EM, prune, curve and apply), the exactness rules of the
+  * driver-side trainers — Spark's milli-ln, Spark's symbols (code points)
+  * and Spark's string order — and their build-job budget. */
 class TextAnalysisSpec extends SparkSpec {
 
   /** Independent reference trainer: the classic Sennrich loop over a
@@ -360,5 +362,284 @@ class TextAnalysisSpec extends SparkSpec {
     val wp = TextAnalysis.wordpieceTrainOver(docs, 2).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
     assert(wp == Seq((1L, s"$fw x", 1L, -693L), (2L, s"$script x", 1L, 0L)), wp.toString)
+  }
+
+  /** Independent unigram-LM reference over a (word, freq) vocabulary:
+    * symbols are code points; seeds are every char plus the top
+    * UnigramSeedNgrams bigrams and trigrams by count, ties on UTF-8 bytes;
+    * the Viterbi DP scores pieces of up to 3 symbols (absent ones
+    * UnigramNeg), ties prefer the longer piece, and the backtrack's piece
+    * uses weigh by word frequency. */
+  private object refUnigram {
+    private val utf8: Ordering[String] = (a, b) =>
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+    /** (count desc, piece asc) as Spark and DuckDB order them. */
+    val byCount: Ordering[(String, Long)] =
+      Ordering.by[(String, Long), (Long, String)] { case (p, c) => (-c, p) }(
+        Ordering.Tuple2(Ordering.Long, utf8))
+    def syms(w: String): Vector[String] =
+      w.codePoints.toArray.toVector.map(cp => new String(Character.toChars(cp)))
+    def len(p: String): Long = syms(p).length.toLong
+    def words(texts: Seq[String]): Seq[(String, Long)] =
+      texts.flatMap(_.split(" ")).filter(_.nonEmpty)
+        .groupBy(identity).map { case (w, xs) => w -> xs.size.toLong }.toSeq
+    def seeds(words: Seq[(String, Long)]): Seq[(String, Long)] = {
+      def grams(n: Int): Seq[(String, Long)] = words.flatMap { case (w, f) =>
+        syms(w).sliding(n).filter(_.length == n).map(_.mkString -> f)
+      }.groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).sum }.toSeq
+      grams(1) ++ grams(2).sorted(byCount).take(TextAnalysis.UnigramSeedNgrams) ++
+        grams(3).sorted(byCount).take(TextAnalysis.UnigramSeedNgrams)
+    }
+    /** ilnq(max(s,1)) − ilnq(Σ max(s,1)). */
+    def lp(scores: Seq[(String, Long)]): Map[String, Long] = {
+      val t = scores.map(s => math.max(s._2, 1L)).sum
+      scores.map { case (p, s) =>
+        p -> (TextAnalysis.ilnqRef(math.max(s, 1L)) - TextAnalysis.ilnqRef(t)) }.toMap
+    }
+    def segment(lp: Map[String, Long], w: String): Seq[String] = {
+      val s = syms(w)
+      val L = s.length
+      val dp = Array.fill(L + 1)(TextAnalysis.UnigramNeg); dp(0) = 0L
+      val bl = Array.fill(L + 1)(1)
+      for (i <- 1 to L) {
+        var best = Long.MinValue; var blen = 1
+        for (l <- 1 to 3 if i - l >= 0) {
+          val c = dp(i - l) + lp.getOrElse(s.slice(i - l, i).mkString, TextAnalysis.UnigramNeg)
+          if (c > best || (c == best && l > blen)) { best = c; blen = l }
+        }
+        dp(i) = best; bl(i) = blen
+      }
+      var i = L
+      val out = Seq.newBuilder[String]
+      while (i > 0) { out += s.slice(i - bl(i), i).mkString; i -= bl(i) }
+      out.result()
+    }
+    def eCounts(words: Seq[(String, Long)], lp: Map[String, Long]): Map[String, Long] =
+      words.flatMap { case (w, f) => segment(lp, w).map(_ -> f) }
+        .groupBy(_._1).map { case (p, xs) => p -> xs.map(_._2).sum }
+    /** Every char of `inv` plus its top-k used multi-char pieces, scored by use. */
+    def keep(inv: Seq[(String, Long)], e: Map[String, Long], k: Int): Seq[(String, Long)] = {
+      val se = inv.map { case (p, _) => p -> e.getOrElse(p, 0L) }
+      se.filter(x => len(x._1) == 1) ++
+        se.filter(x => len(x._1) > 1 && x._2 > 0).sorted(byCount).take(k)
+    }
+    /** text_unigram_em's rows: (piece, len, seed count, e-count, lp_micro). */
+    def em(texts: Seq[String]): Seq[(String, Long, Long, Long, Long)] = {
+      val ws = words(texts)
+      val s = seeds(ws)
+      val e = eCounts(ws, lp(s))
+      val lpE = lp(e.toSeq)
+      val seedCount = s.toMap
+      e.toSeq.sorted(byCount).map { case (p, n) => (p, len(p), seedCount(p), n, lpE(p)) }
+    }
+  }
+
+  private def rows5(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long, Long, Long)] =
+    df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toSeq
+
+  // aperiodic deterministic filler so chars stay competitive beside the
+  // planted repeats
+  private def filler(seed: Int, n: Int): String =
+    (0 until n).map(i => ('a' + ((i * i * 31 + seed * 7 + i) % 26)).toChar).mkString
+
+  test("text_unigram_em: EM step matches the plain-Scala reference, planted corpus") {
+    import spark.implicits._
+    // repetitive structure so multi-char pieces WIN segmentations, plus
+    // aperiodic filler so chars stay competitive elsewhere
+    val corpus = Seq(
+      "abcabcabc ababab " + filler(21, 40),
+      "abcabc xyxyxyxy " + filler(22, 35),
+      "abcabcabcabc zzzz zzzz " + filler(23, 30),
+      filler(24, 50) + " ababab xyxy")
+    val got = rows5(TextAnalysis.unigramEmOver(corpus.toDF("text")))
+    val want = refUnigram.em(corpus)
+    assert(got == want, s"EM divergence:\n got=${got.take(8)}...\nwant=${want.take(8)}...")
+    // the repetitive plants must actually segment into multi-char pieces
+    val byPiece = got.map(x => x._1 -> x._4).toMap
+    assert(byPiece.contains("abc") && byPiece("abc") >= 7L,
+      s"'abc' must be a winning trigram piece: ${got.filter(_._1.length == 3).take(5)}")
+    assert(got.exists(_._2 == 2L), "some bigram piece must be used")
+  }
+
+  test("text_unigram_em: full-corpus parity with the plain-Scala reference, sf0.001") {
+    val texts = graft.Tables.documents(spark, Sf).select("text")
+      .collect().map(_.getString(0)).toSeq
+    val got = rows5(TextAnalysis.unigramEm(spark, Sf))
+    val want = refUnigram.em(texts)
+    assert(got == want,
+      s"sf0.001 EM divergence: first diff ${got.zip(want).find(x => x._1 != x._2)}")
+  }
+
+  test("text_unigram_em property: == plain-Scala reference on 12 random corpora") {
+    import spark.implicits._
+    // seeded random corpora over a tiny alphabet maximize piece-score
+    // collisions (the tie-rule stressor) and run-heavy words (the
+    // overlap stressor)
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed * 7919)
+      val alphabet = "abcd"
+      def word(): String =
+        (0 until (1 + rnd.nextInt(11))).map(_ => alphabet(rnd.nextInt(4))).mkString
+      val vocabWords = (0 until (4 + rnd.nextInt(8))).map(_ => word())
+      val corpus = (0 until (6 + rnd.nextInt(10)))
+        .map(_ => (0 until (1 + rnd.nextInt(5)))
+          .map(_ => vocabWords(rnd.nextInt(vocabWords.size))).mkString(" "))
+      val got = rows5(TextAnalysis.unigramEmOver(corpus.toDF("text")))
+      val want = refUnigram.em(corpus)
+      assert(got == want,
+        s"seed $seed divergence: first diff ${got.zip(want).find(x => x._1 != x._2)}" +
+          s" (sizes ${got.size}/${want.size})\ncorpus=$corpus")
+    }
+  }
+
+  test("text_unigram_apply: per-source compression matches the plain-Scala reference") {
+    import spark.implicits._
+    val rows = Seq(
+      ("web", "abcabcabc ababab " + filler(31, 40)),
+      ("web", "abcabc xyxyxyxy " + filler(32, 35)),
+      ("book", "abcabcabcabc zzzz zzzz " + filler(33, 30)),
+      ("book", filler(34, 50) + " ababab xyxy"),
+      ("code", filler(35, 44) + " abcabc"))
+    val got = rows5(TextAnalysis.unigramApplyOver(rows.toDF("source", "text")))
+    // reference: the em model, Viterbi piece COUNT per word, agg by source
+    val srcCounts = rows.flatMap { case (src, t) => t.split(" ").filter(_.nonEmpty).map(src -> _) }
+      .groupBy(identity).map { case ((src, w), xs) => (src, w, xs.size.toLong) }.toSeq
+    val words = refUnigram.words(rows.map(_._2))
+    val lp = refUnigram.lp(refUnigram.seeds(words))
+    val np = words.map { case (w, _) => w -> refUnigram.segment(lp, w).size.toLong }.toMap
+    val want = srcCounts.groupBy(_._1).map { case (src, xs) =>
+      val toks = xs.map(_._3).sum
+      val chars = xs.map { case (_, w, f) => refUnigram.len(w) * f }.sum
+      val pieces = xs.map { case (_, w, f) => np(w) * f }.sum
+      (src, toks, chars, pieces, pieces * 10000 / chars)
+    }.toSeq.sortBy(_._1)
+    assert(got == want, s"apply divergence:\n got=$got\nwant=$want")
+    // the repetitive plants compress: every source ends below 10000 bp
+    assert(got.forall(_._5 < 10000L), s"compression must bite: $got")
+  }
+
+  test("text_unigram_prune: keepN=1 forces redistribution, matching plain Scala") {
+    import spark.implicits._
+    // round 1 uses both 'abc' and 'xy' heavily; keepN=1 keeps only the
+    // top multi-char piece, so the other's mass must redistribute to
+    // chars/survivors in round 2
+    val corpus = Seq(
+      "abcabcabc xyxyxyxy " + filler(41, 30),
+      "abcabc xyxy " + filler(42, 25),
+      "abcabcabcabc xyxyxy " + filler(43, 20))
+    val got = rows5(TextAnalysis.unigramPruneOver(corpus.toDF("text"), keepN = 1))
+    val words = refUnigram.words(corpus)
+    val seeds = refUnigram.seeds(words)
+    val kept = refUnigram.keep(seeds, refUnigram.eCounts(words, refUnigram.lp(seeds)), 1)
+    val lp2 = refUnigram.lp(kept)
+    val e2 = refUnigram.eCounts(words, lp2)
+    val keptE = kept.toMap
+    val want = e2.toSeq.filter { case (p0, _) => keptE.contains(p0) }
+      .sorted(refUnigram.byCount)
+      .map { case (p0, e) => (p0, refUnigram.len(p0), keptE(p0), e, lp2(p0)) }
+    assert(got == want, s"prune divergence:\n got=${got.take(8)}\nwant=${want.take(8)}")
+    // pruning actually bit: exactly one multi-char survivor, and the cut
+    // piece's mass reappears as extra char/survivor uses
+    val multiGot = got.filter(_._2 > 1)
+    assert(multiGot.size == 1, s"keepN=1 must keep one multi-char piece: $multiGot")
+    assert(got.exists(r => r._2 == 1 && r._4 > r._3),
+      s"cut mass must redistribute to single chars: $got")
+  }
+
+  test("text_unigram_curve: bit-exact vs the plain-Scala EM+prune fold") {
+    import spark.implicits._
+    for ((corpus, ci) <- Seq(
+      Seq("abcab cabca bcabc", "the cat sat on the mat", "abcab the the",
+        "zqzqzq zq zq", "cat cat cabca"),
+      Seq("aaaa bbbb aaaa", "ab ab ab ba", "a b ab ba abab")).zipWithIndex) {
+      val got = TextAnalysis.unigramCurveOver(corpus.toDF("text")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4))).toSeq
+      val words = refUnigram.words(corpus)
+      val chars = words.map { case (w, f) => refUnigram.len(w) * f }.sum
+      var inv = refUnigram.seeds(words)
+      val want = (1 to TextAnalysis.UnigramCurveRounds).map { k =>
+        val e = refUnigram.eCounts(words, refUnigram.lp(inv))
+        val before = inv.size.toLong
+        inv = refUnigram.keep(inv, e, TextAnalysis.unigramCurveKeepN(k))
+        (k.toLong, before, inv.size.toLong, e.values.sum, e.values.sum * 10000L / chars)
+      }
+      assert(got == want, s"corpus $ci curve divergence:\n got=$got\nwant=$want")
+      // the shrink schedule really shrinks: vocab never grows
+      assert(got.map(_._3).zip(got.map(_._2)).forall { case (a, b) => a <= b })
+    }
+  }
+
+  test("ilnqRef is monotone and within ln(1 + 1/256)·10⁶ below ln(x)·10⁶") {
+    // floor(x·256 >> b) drops less than one 256th of the octave; the table
+    // and ln 2 roundings add under 12 micro units over the whole domain
+    val xs = (1L to 200000L) ++
+      (1 to 55).flatMap(b => Seq((1L << b) - 1, 1L << b, (1L << b) + 1)) :+ ((1L << 56) - 1)
+    val bad = xs.filter { x =>
+      val err = math.log(x.toDouble) * 1e6 - TextAnalysis.ilnqRef(x)
+      err < -12 || err > 3906 + 12
+    }
+    assert(bad.isEmpty, bad.take(5).toString)
+    assert(xs.sorted.map(TextAnalysis.ilnqRef).sliding(2).forall(p => p(0) <= p(1)))
+  }
+
+  test("text_unigram_em and apply: a supplementary character stays one symbol") {
+    import spark.implicits._
+    // U+1D49C is one code point and two UTF-16 units: Java substring would
+    // cut the pair, Spark's and DuckDB's length/substr never do. DuckDB's
+    // oracle SQL returns the same rows over the same text
+    val script = "𝒜"
+    val docs = Seq(("s", s"${script}bc ${script}bc ${script}bcd"), ("t", s"b${script}bc bc"))
+      .toDF("source", "text")
+    val em = rows5(TextAnalysis.unigramEmOver(docs.select($"text")))
+    assert(em == Seq((s"${script}bc", 3L, 4L, 3L, -847298L), ("b", 1L, 6L, 1L, -1945910L),
+      ("bc", 2L, 5L, 1L, -1945910L), ("bcd", 3L, 1L, 1L, -1945910L),
+      (script, 1L, 4L, 1L, -1945910L)), em.toString)
+    val apply = rows5(TextAnalysis.unigramApplyOver(docs))
+    assert(apply == Seq(("s", 3L, 10L, 4L, 4000L), ("t", 2L, 6L, 3L, 5000L)), apply.toString)
+  }
+
+  test("text_unigram_prune: keepN ties break on UTF-8 byte order, not UTF-16 order") {
+    import spark.implicits._
+    // "Ａx" and "𝒜x" tie on round-1 usage; keepN = 1 keeps the one that
+    // sorts first by UTF-8 bytes (U+FF21 = EF BC A1 before U+1D49C = F0 9D
+    // 92 9C), as Spark's orderBy and DuckDB do; String.compareTo would keep
+    // the surrogate pair (D835 DC9C). DuckDB's oracle SQL with LIMIT 1
+    // returns the same rows
+    val (fw, script) = ("Ａ", "𝒜")
+    val got = rows5(TextAnalysis.unigramPruneOver(Seq(s"${fw}x ${script}x").toDF("text"),
+      keepN = 1))
+    assert(got == Seq(("x", 1L, 0L, 1L, -1386294L), (s"${fw}x", 2L, 1L, 1L, -1386294L),
+      (script, 1L, 0L, 1L, -1386294L)), got.toString)
+  }
+
+  /** Build jobs (jobs run while the DataFrame is constructed) of one
+    * SparkEntry row, read by job group. */
+  private def buildJobs(row: String): Int = {
+    val sc = spark.sparkContext
+    val group = s"build-$row-${System.nanoTime}"
+    sc.setJobGroup(group, row)
+    try SparkEntry.queries(row)(spark, Sf) finally sc.clearJobGroup()
+    // the status store learns of jobs from the listener bus, in order: once
+    // it has seen a later job, it has seen every build job
+    val barrier = s"$group-barrier"
+    sc.setJobGroup(barrier, "barrier")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(barrier).isEmpty && System.nanoTime < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(barrier).nonEmpty, "status store stalled")
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("tokenizer rows run at most 6 build jobs each") {
+    // the driver-side trainers collect the vocabulary once: a per-step
+    // Spark loop would add jobs per merge or EM round
+    val rows = Seq("text_bpe_step", "text_bpe_train", "text_bpe_apply", "text_bpe_curve",
+      "text_wordpiece_train", "text_wordpiece_apply", "text_wordpiece_curve",
+      "text_unigram_em", "text_unigram_prune", "text_unigram_curve", "text_unigram_apply")
+    val jobs = rows.map(r => r -> buildJobs(r))
+    assert(jobs.forall(_._2 <= 6), jobs.mkString(", "))
   }
 }
