@@ -40,8 +40,8 @@ object Events {
 
   /** Same round-trip as [[sseParse]], but through the actual incremental
     * WHATWG parser ([[graft.sources.sse.SseParser]]) running partition-wise
-    * over concatenated frame text — the exact code path the streaming
-    * source executes, validated against the relational oracle. */
+    * over concatenated frame text — the one grammar the streaming source
+    * runs, validated against the relational oracle. */
   def sseParseFull(spark: SparkSession, d: String): DataFrame = {
     import spark.implicits._
     Tables.events(spark, d).select(

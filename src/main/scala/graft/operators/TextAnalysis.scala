@@ -1648,7 +1648,7 @@ object TextAnalysis {
     import spark.implicits._
     trainMerges(trainWords(docs), steps)(bpeScore).zipWithIndex
       .map { case (m, i) => (i + 1L, m.pair, m.count) }
-      .toDF("step", "pair", "pair_count").orderBy(col("step"))
+      .toDF("step", "pair", "pair_count")
   }
 
   val bpeTrainOracle: String = {
@@ -1795,7 +1795,7 @@ object TextAnalysis {
     import spark.implicits._
     trainMerges(trainWords(docs), steps)(bpeScore).zipWithIndex
       .map { case (m, i) => (i + 1L, m.pair, m.count, m.symbolsAfter) }
-      .toDF("step", "pair", "pair_count", "symbols_after").orderBy(col("step"))
+      .toDF("step", "pair", "pair_count", "symbols_after")
   }
 
   val bpeTrainCurveOracle: String = {
@@ -1927,11 +1927,11 @@ object TextAnalysis {
     words.select(col("w"), split(col("w"), "").as("l"), col("freq")).collect().toSeq
       .map(r => UnigramWord(r.getString(0), r.getSeq[String](1).toIndexedSeq, r.getLong(2)))
 
-  /** The top `k` (piece, count) by count desc, ties on the piece's UTF-8
-    * bytes: `orderBy(cnt.desc, p).limit(k)` in Spark's and DuckDB's string
-    * order, not `String.compareTo`. */
-  private def topByCount(g: Seq[(String, Long)], k: Int): Seq[(String, Long)] =
-    g.sortBy { case (p, n) => (-n, UTF8String.fromString(p)) }.take(k)
+  /** (piece, count) pairs by count desc, ties on the piece's UTF-8 bytes:
+    * `orderBy(cnt.desc, p)` in Spark's and DuckDB's string order, not
+    * `String.compareTo`. */
+  private def byCount(g: Seq[(String, Long)]): Seq[(String, Long)] =
+    g.sortBy { case (p, n) => (-n, UTF8String.fromString(p)) }
 
   /** Seed inventory with corpus counts: every single char plus the
     * top-[[UnigramSeedNgrams]] bigrams and trigrams. */
@@ -1941,8 +1941,8 @@ object TextAnalysis {
       for (u <- words; i <- 0 to u.syms.length - n) g(u.syms.slice(i, i + n).mkString) += u.freq
       g.toSeq
     }
-    grams(1) ++ topByCount(grams(2), UnigramSeedNgrams) ++
-      topByCount(grams(3), UnigramSeedNgrams)
+    grams(1) ++ byCount(grams(2)).take(UnigramSeedNgrams) ++
+      byCount(grams(3)).take(UnigramSeedNgrams)
   }
 
   /** Piece log-probs from scores: `ilnq(max(n, 1)) − ilnq(Σ max(n, 1))`.
@@ -1986,7 +1986,7 @@ object TextAnalysis {
       keepN: Int): Seq[(String, Long)] = {
     val (chars, multi) = inv.map { case (p, _) => p -> e.getOrElse(p, 0L) }
       .partition { case (p, _) => pieceLen(p) == 1 }
-    chars ++ topByCount(multi.filter(_._2 > 0), keepN)
+    chars ++ byCount(multi.filter(_._2 > 0)).take(keepN)
   }
 
   /** A piece's length in code points, as Spark's `length`. */
@@ -2001,9 +2001,8 @@ object TextAnalysis {
     val e = unigramUsage(words, unigramLp(seeds))
     val lp = unigramLp(e.toSeq)
     val seedCount = seeds.toMap
-    e.toSeq.map { case (p, n) => (p, pieceLen(p), seedCount(p), n, lp(p)) }
+    byCount(e.toSeq).map { case (p, n) => (p, pieceLen(p), seedCount(p), n, lp(p)) }
       .toDF("piece", "piece_len", "seed_count", "e_count", "lp_micro")
-      .orderBy(col("e_count").desc, col("piece"))
   }
 
   /** Multi-char pieces the prune round keeps (single chars are never
@@ -2037,9 +2036,10 @@ object TextAnalysis {
     val kept = unigramKeep(seeds, unigramUsage(words, unigramLp(seeds)), keepN)
     val lp2 = unigramLp(kept)
     val e2 = unigramUsage(words, lp2)
-    kept.collect { case (p, e1) if e2.contains(p) => (p, pieceLen(p), e1, e2(p), lp2(p)) }
+    val e1 = kept.toMap
+    byCount(e2.toSeq.filter { case (p, _) => e1.contains(p) })
+      .map { case (p, n) => (p, pieceLen(p), e1(p), n, lp2(p)) }
       .toDF("piece", "piece_len", "e1_count", "e2_count", "lp2_micro")
-      .orderBy(col("e2_count").desc, col("piece"))
   }
 
   val unigramPruneOracle: String = {
@@ -2169,7 +2169,6 @@ object TextAnalysis {
       val emitted = e.values.sum
       (k.toLong, before, inv.size.toLong, emitted, emitted * 10000L / chars)
     }.toDF("round", "vocab_before", "vocab_after", "pieces_emitted", "compression_bp")
-      .orderBy(col("round"))
   }
 
   val unigramCurveOracle: String = {
@@ -2519,7 +2518,7 @@ object TextAnalysis {
     import spark.implicits._
     trainMerges(trainWords(docs), steps)(wordpieceScore).zipWithIndex
       .map { case (m, i) => (i + 1L, m.pair, m.count, m.score) }
-      .toDF("step", "pair", "pair_count", "score_milli").orderBy(col("step"))
+      .toDF("step", "pair", "pair_count", "score_milli")
   }
 
   /** `floor(ln(x)·1000 + 0.5)`, the WordPiece milli-ln quantizer: the
@@ -2557,7 +2556,6 @@ object TextAnalysis {
     trainMerges(trainWords(docs), steps)(wordpieceScore).zipWithIndex
       .map { case (m, i) => (i + 1L, m.pair, m.count, m.score, m.symbolsAfter) }
       .toDF("step", "pair", "pair_count", "score_milli", "symbols_after")
-      .orderBy(col("step"))
   }
 
   val wordpieceCurveOracle: String = {

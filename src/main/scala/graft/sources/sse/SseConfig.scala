@@ -135,15 +135,6 @@ final case class SseConfig(
       ctx.init(null, tmf.getTrustManagers, null)
       ctx
     }
-
-  /** Admission predicate over the NORMALIZED event name (id-less frames
-    * normalize to "unknown" first, mirroring the reference's null handling,
-    * so `events.filter=unknown` admits them). Allowlist and pattern
-    * compose with OR when both are set. No filter options → admit all. */
-  def admitsEvent(name: String): Boolean =
-    (eventsFilter.isEmpty && eventsFilterPattern.isEmpty) ||
-      eventsFilter.exists(_.contains(name)) ||
-      eventsFilterPattern.exists(p => name.matches(p))
 }
 
 object SseConfig {

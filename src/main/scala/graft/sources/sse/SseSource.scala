@@ -304,31 +304,40 @@ case class SseInputPartition(path: String, start: Long, end: Long,
     seedId: Option[String], seedRetry: Option[Long],
     allow: Option[Set[String]] = None,
     allowPattern: Option[String] = None) extends InputPartition {
-  /** Same predicate as [[SseConfig.admitsEvent]], over the partition-carried
-    * copy of the filter options. */
+  /** Admission predicate over the NORMALIZED event name (name-less frames
+    * normalize to "unknown" first, so `events.filter=unknown` admits them).
+    * Allowlist and pattern compose with OR; no filter admits all. */
   def admits(name: String): Boolean =
     (allow.isEmpty && allowPattern.isEmpty) ||
       allow.exists(_.contains(name)) || allowPattern.exists(p => name.matches(p))
 }
 
 object SseReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SseInputPartition]
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    reader(partition.asInstanceOf[SseInputPartition], SseFrameLog.WindowBytes)
+
+  /** Streams [start, end) through one `bufferBytes` window, yielding each
+    * admitted event as it is dispatched: memory is the window plus the
+    * largest event. Data becomes a `UTF8String` from its bytes, decoded
+    * first (to U+FFFD) only when it is not valid UTF-8. */
+  private[sse] def reader(p: SseInputPartition, bufferBytes: Int): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val events = new SseParser().seed(p.seedId, p.seedRetry)
-        .feed(SseFrameLog.read(p.path, p.start, p.end)).iterator
-        .filter(e => p.admits(SseParser.normalize(e)._1))
-      private var current: SseEvent = _
-      override def next(): Boolean = { val has = events.hasNext; if (has) current = events.next(); has }
-      override def get(): InternalRow = {
-        // reference null-handling (ServerSentEventsSourceTask.java:114-117)
-        val (ev, id, data) = SseParser.normalize(current)
-        InternalRow(UTF8String.fromString(ev),
-          id.map(UTF8String.fromString).orNull, UTF8String.fromString(data))
+      private val in = new SseFrameLog.ByteWindow(p.path, p.start, p.end, bufferBytes)
+      private val parser = new SseParser(values = true, streamStart = p.start == 0)
+        .seed(p.seedId, p.seedRetry)
+      // reference null-handling (ServerSentEventsSourceTask.java:114-117)
+      private def name = SseParser.eventName(parser.event)
+      override def next(): Boolean = {
+        while (in.nextFrame(parser)) if (parser.dispatched && p.admits(name)) return true
+        false
       }
-      override def close(): Unit = ()
+      override def get(): InternalRow = {
+        val data = UTF8String.fromBytes(parser.data, 0, parser.dataLen)
+        InternalRow(UTF8String.fromString(name), parser.lastEventId.map(UTF8String.fromString).orNull,
+          if (data.isValid) data else UTF8String.fromString(data.toString))
+      }
+      override def close(): Unit = in.close()
     }
-  }
 }
 
 /** Driver-side live ingest: one [[SseClient]] per configured endpoint,
@@ -406,104 +415,65 @@ object SseFrameLog {
     else Seq.empty
   }
 
-  /** Read [start, end) as UTF-8 text. Boundaries are always at newline
-    * bytes (frame-aligned), so slices are valid UTF-8. */
-  def read(path: String, start: Long, end: Long): String = {
-    if (end <= start) return ""
-    val raf = new RandomAccessFile(path, "r")
-    try {
-      val len = math.min(end, raf.length()) - start
-      if (len <= 0) return ""
-      val buf = new Array[Byte](len.toInt)
-      raf.seek(start)
-      raf.readFully(buf)
-      new String(buf, StandardCharsets.UTF_8)
-    } finally raf.close()
-  }
-
   /** Result of a forward scan: the frame-aligned byte boundary, and the
     * last `id:` / `retry:` values seen in the committed region (None when
     * the region contains none — caller inherits the prior cursor's). */
   case class ScanResult(boundary: Long, lastId: Option[String], retryMs: Option[Long])
 
-  /** Field names as [[scan]] packs them: a 1 marker, then one byte each. */
-  private val Seq(dataName, idName, retryName) =
-    Seq("data", "id", "retry").map(_.foldLeft(1L)((c, ch) => c << 8 | ch))
+  /** Read-window size of [[scan]] and the partition reader. */
+  private[sse] val WindowBytes = 64 * 1024
 
   /** Scan forward from `start`, stopping at the frame boundary after at
-    * most `maxEvents` dispatched events (a frame counts if its block
-    * contains a `data` line) and never past byte `maxPos` or the last
-    * complete frame. Field handling matches [[SseParser.feed]] exactly, so
-    * the returned id/retry equal the incremental parser's state at the
-    * boundary. Never splits a frame. Walks raw bytes through one buffer,
-    * stops reading once the cap is reached, and decodes only id/retry. */
+    * most `maxEvents` dispatched events and never past byte `maxPos` or the
+    * last complete frame: [[SseParser]] with no values kept, through one
+    * window, so the returned id/retry are its carry-state at the boundary
+    * and a BOM counts only at byte 0. Stops reading once the cap is reached. */
   def scan(path: String, start: Long, maxEvents: Long, maxPos: Long = Long.MaxValue): ScanResult =
-    scan(path, start, maxEvents, maxPos, 64 * 1024)
+    scan(path, start, maxEvents, maxPos, WindowBytes)
 
   private[sse] def scan(path: String, start: Long, maxEvents: Long, maxPos: Long,
       bufferBytes: Int): ScanResult = {
     if (!new java.io.File(path).exists()) return ScanResult(start, None, None)
-    val in = new ByteWindow(new RandomAccessFile(path, "r"), start, maxPos, bufferBytes)
+    val in = new ByteWindow(path, start, maxPos, bufferBytes)
     try {
+      val parser = new SseParser(values = false, streamStart = start == 0)
       var events = 0L
-      var boundary = start
-      var blockHasData = false
-      // running field state (current, possibly uncommitted frame) vs the
-      // state at the last committed boundary
-      var curId, committedId: Option[String] = None
-      var curRetry, committedRetry: Option[Long] = None
-      // current line: packed name; part 0 name, 1 value's first byte, 2 rest
-      var name = 1L
-      var part = 0
-      val value = new java.io.ByteArrayOutputStream()
-      var pos = start
-      var b = in.at(pos)
-      while (b >= 0 && events < maxEvents) {
-        if (b == '\n' || b == '\r') { // CRLF/CR/LF all end lines; CRLF counts as one
-          val next = if (b == '\r' && in.at(pos + 1) == '\n') pos + 2 else pos + 1
-          if (name == 1L && part == 0) { // blank line → frame boundary
-            if (blockHasData) events += 1
-            blockHasData = false
-            boundary = next
-            committedId = curId
-            committedRetry = curRetry
-          } else if (name == dataName) blockHasData = true
-          else if (name == idName || name == retryName) {
-            val v = value.toString(StandardCharsets.UTF_8)
-            if (name == idName) { if (!v.contains('\u0000')) curId = Some(v) }
-            else if (v.nonEmpty && v.forall(_.isDigit)) curRetry = Some(v.toLong)
-          }
-          name = 1L; part = 0; value.reset()
-          pos = next
-        } else {
-          // field split per WHATWG (same as SseParser.processLine); a
-          // comment line has an empty name, which matches no field
-          if (part == 0) { if (b == ':') part = 1 else if (name < (1L << 48)) name = name << 8 | b }
-          else {
-            if ((name == idName || name == retryName) && !(part == 1 && b == ' ')) value.write(b)
-            part = 2
-          }
-          pos += 1
-        }
-        b = in.at(pos)
+      var result = ScanResult(start, None, None)
+      while (events < maxEvents && in.nextFrame(parser)) {
+        if (parser.dispatched) events += 1
+        result = ScanResult(in.pos, parser.lastEventId, parser.serverRetryMs)
       }
-      ScanResult(boundary, committedId, committedRetry)
+      result
     } finally in.close()
   }
 
-  /** Bytes [start, min(length at open, maxPos)) of one file, read forward
-    * through one buffer: `at(p)` is the unsigned byte at `p`, -1 past the end. */
-  private final class ByteWindow(raf: RandomAccessFile, start: Long, maxPos: Long, size: Int) {
+  /** Bytes [start, min(length at open, maxPos)) of one file, pushed forward
+    * through one buffer. */
+  private[sse] final class ByteWindow(path: String, start: Long, maxPos: Long, size: Int) {
+    private val raf = new RandomAccessFile(path, "r")
     private val end = math.min(raf.length(), maxPos)
     private val buf = new Array[Byte](math.max(1L, math.min(size.toLong, end - start)).toInt)
     private var from, until = start
-    def at(p: Long): Int = {
+    var pos: Long = start // after the last byte pushed
+
+    /** The unsigned byte at `p`, -1 past the end. */
+    private def at(p: Long): Int = {
       if (p >= until) {
         val n = if (p >= end) -1 else { raf.seek(p); raf.read(buf, 0, math.min(buf.length.toLong, end - p).toInt) }
         if (n <= 0) return -1 // past the end, or truncated while scanning
         from = p; until = p + n
       }
       buf((p - from).toInt) & 0xff
+    }
+
+    /** Pushes bytes into `parser` through its next frame end, the LF of a
+      * CRLF included; false when the window ends first. */
+    def nextFrame(parser: SseParser): Boolean = {
+      var b = 0
+      var frame = false
+      while (!frame && { b = at(pos); b >= 0 }) { frame = parser.push(b); pos += 1 }
+      if (frame && b == '\r' && at(pos) == '\n') { parser.push('\n'); pos += 1 }
+      frame
     }
     def close(): Unit = raf.close()
   }

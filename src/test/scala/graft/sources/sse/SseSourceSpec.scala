@@ -1,5 +1,6 @@
 package graft.sources.sse
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardOpenOption}
 
 import graft.SparkSpec
@@ -305,6 +306,42 @@ class SseSourceSpec extends SparkSpec {
     // every appended frame is committed: consumed == available == file size
     assert(m.get("availableBytes") == Files.size(log).toString, s"metrics=$m")
     assert(m.get("consumedBytes") == Files.size(log).toString, s"metrics=$m")
+  }
+
+  /** Data of the events one partition [start, end) of `log` reads. */
+  private def partitionData(log: Path, start: Long, end: Long): Seq[String] = {
+    val r = SseReaderFactory.createReader(SseInputPartition(log.toString, start, end, None, None))
+    try Iterator.continually(r.next()).takeWhile(identity).map(_ => r.get().getUTF8String(2).toString).toList
+    finally r.close()
+  }
+
+  test("a U+FEFF at a partition start is content: rows do not depend on where the batch is cut") {
+    val log = tmpDir("sse-midbom").resolve("stream.log")
+    Files.write(log, "data: x\n\n\uFEFFdata: y\n\n".getBytes(StandardCharsets.UTF_8))
+    val end = Files.size(log)
+    assert(partitionData(log, 0, end) == Seq("x"))
+    assert(partitionData(log, 0, 9) ++ partitionData(log, 9, end) == Seq("x"))
+  }
+
+  test("a BOM at byte 0 does not hide the first frame from the admission cap") {
+    val log = tmpDir("sse-bom0").resolve("stream.log")
+    Files.write(log, "\uFEFFdata: a\n\ndata: b\n\n".getBytes(StandardCharsets.UTF_8))
+    val r = SseFrameLog.scan(log.toString, 0L, 1L)
+    assert(r.boundary == 12L)
+    assert(partitionData(log, 0, r.boundary) == Seq("a"))
+  }
+
+  test("the reader streams a partition longer than 2^31 bytes") {
+    val log = tmpDir("sse-sparse").resolve("stream.log")
+    val raf = new java.io.RandomAccessFile(log.toFile, "rw")
+    try {
+      // an unknown field whose value is a hole of zeros, then one event
+      raf.write("x:".getBytes(StandardCharsets.UTF_8))
+      raf.seek((1L << 31) + 16)
+      raf.write("\ndata: z\n\n".getBytes(StandardCharsets.UTF_8))
+      raf.close()
+      assert(partitionData(log, 0, Files.size(log)) == Seq("z"))
+    } finally { raf.close(); Files.deleteIfExists(log) }
   }
 
   test("batch read sees the whole log") {
