@@ -36,6 +36,12 @@ object Similarity {
       .select(col("vec_id"), col("label"), vecDouble(col("embedding")).as("e"))
       .withColumn("norm", vecNorm(col("e")))
 
+  /** Embeddings as (vec_id, e: array&lt;double&gt;). Each call is one more
+    * table read (and one schema job), so a row reads it once and shares. */
+  private def vecs(spark: SparkSession, d: String): DataFrame =
+    Tables.embeddings(spark, d)
+      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+
   /** Deterministic hash-bucket corpus sample — the sampled-ground-truth
     * mode of the recall evals. Keeps vectors whose xxhash64(vec_id) falls
     * in bucket 0 of `sampleMod` buckets (~1/sampleMod of the corpus, the
@@ -54,7 +60,21 @@ object Similarity {
 
   /** Exact cosine top-k for query vectors (vec_id < nQueries). */
   def bruteforceTopK(spark: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-      sampleMod: Int = 1): DataFrame = {
+      sampleMod: Int = 1): DataFrame =
+    cosineTopK(spark, d, nQueries, k, sampleMod).orderBy(col("query_id"), col("rank"))
+
+  /** Per-query top-k, the ranking every search and truth here shares:
+    * row_number `rank` over query_id by `key`, ties → lower neighbor_id.
+    * Applied as `scored.transform(topK(k, key))`. */
+  private def topK(k: Int, key: Column): DataFrame => DataFrame =
+    _.withColumn("rank", row_number().over(
+      Window.partitionBy(col("query_id")).orderBy(key, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+
+  /** [[bruteforceTopK]] without its output sort — the form consumers that
+    * re-key or collect the list read. */
+  private def cosineTopK(spark: SparkSession, d: String, nQueries: Int, k: Int,
+      sampleMod: Int): DataFrame = {
     val v = normed(spark, d)
     val q = v.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("norm").as("qnorm"))
@@ -62,11 +82,7 @@ object Similarity {
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qe"), col("e")) / (col("qnorm") * col("norm")), 4).as("cos"))
-    val byQuery = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    scored.transform(topK(k, col("cos").desc))
   }
 
   /** Exact maximum-inner-product top-k (`ann_mips`) — the retrieval
@@ -85,18 +101,14 @@ object Similarity {
     * would be priced against. */
   def mipsTopK(spark: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       sampleMod: Int = 1): DataFrame = {
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    val v = vecs(spark, d)
     val q = v.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val scored = corpusSample(v, nQueries, sampleMod)
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         floor(dot(col("qe"), col("e")) * 1e6 + lit(0.5)).cast("long").as("ip_e6"))
-    val byQuery = Window.partitionBy(col("query_id"))
-      .orderBy(col("ip_e6").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("ip_e6").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -138,10 +150,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qe"), col("e")) / (col("qnorm") * col("norm")), 4).as("cos"))
-    val byQuery = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("cos").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -186,18 +195,22 @@ object Similarity {
     * step) with shuffles proportional to |cells|·dims only, then collapsed
     * to a single row so it can ride a broadcast to every assignment task. */
   private def centroidMatrix(spark: SparkSession, d: String, nCells: Int): DataFrame =
-    centroidMatrixOn(Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e")), nCells)
+    centroidMatrixOn(vecs(spark, d), nCells)
 
   /** [[centroidMatrix]] over any (vec_id, e: array&lt;double&gt;) frame — the
     * augmented-vector MIPS path trains its coarse quantizer on d+1-dim
     * vectors through the same machinery. */
   private def centroidMatrixOn(v: DataFrame, nCells: Int): DataFrame =
-    v.select(col("vec_id"), posexplode(col("e")).as(Seq("dim", "v")))
+    cellMatrix(v.select(col("vec_id"), posexplode(col("e")).as(Seq("dim", "v")))
       .withColumn("cell", pmod(col("vec_id"), lit(nCells.toLong)))
       .groupBy(col("cell"), col("dim"))
-      .agg(round(avg(col("v")), 6).as("c"))
-      .groupBy(col("cell"))
+      .agg(round(avg(col("v")), 6).as("c")))
+
+  /** A long-form (cell, dim, c) codebook collapsed to the one-row
+    * `cents: array<array<double>>` matrix (outer index = cell, inner = dim)
+    * that rides a broadcast to every assignment task. */
+  private def cellMatrix(long: DataFrame): DataFrame =
+    long.groupBy(col("cell"))
       .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
       .select(col("cell"), transform(col("dc"), x => x.getField("c")).as("carr"))
       .groupBy()
@@ -235,9 +248,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qe"), col("e")) / (col("qnorm") * col("norm")), 4).as("cos"))
-    scored.withColumn("rank", row_number().over(
-      Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("cos").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -308,9 +319,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qe"), col("e")) / (col("qnorm") * col("norm")), 4).as("cos"))
-    scored.withColumn("rank", row_number().over(
-      Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("cos").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -376,9 +385,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qe"), col("e")) / (col("qnorm") * col("norm")), 4).as("cos"))
-    scored.withColumn("rank", row_number().over(
-      Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("cos").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -416,17 +423,24 @@ object Similarity {
     * unbiased (spec-pinned tolerance vs full truth). That is the 100 TB
     * path for every recall eval in this object. */
   def annRecall(spark: SparkSession, d: String, nQueries: Int = 10, k: Int = 3,
-      truthSample: Int = 1): DataFrame = {
-    val truth = bruteforceTopK(spark, d, nQueries, k, truthSample)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = lshTopK(spark, d, nQueries, k, truthSample)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
+      truthSample: Int = 1): DataFrame =
+    recallAt(cosineTopK(spark, d, nQueries, k, truthSample),
+      lshTopK(spark, d, nQueries, k, truthSample), k)
+
+  /** The hit counter every single-system recall eval shares: per query of
+    * `truth`, n_hits = \|truth(q) ∩ approx(q)\| and recall_at_k =
+    * round(n_hits / k, 4), ordered by query_id. Both inputs carry
+    * (query_id, neighbor_id); the left join from the truth side keeps a
+    * 0-hit row for a query the approx list never answered, and each truth
+    * pair matches at most one approx pair, so nothing fans out. */
+  private[graft] def recallAt(truth: DataFrame, approx: DataFrame, k: Int): DataFrame =
+    truth.select(col("query_id"), col("neighbor_id"))
+      .join(approx.select(col("query_id"), col("neighbor_id"), lit(1).as("hit")),
+        Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(count(col("hit")).as("n_hits"),
         round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
       .orderBy(col("query_id"))
-  }
 
   /** Target dimensionality of the Johnson–Lindenstrauss projection. */
   val RpDims = 16
@@ -499,9 +513,7 @@ object Similarity {
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qy"), col("y")) / (col("qnorm") * col("ynorm")), 4).as("cos"))
-    scored.withColumn("rank", row_number().over(
-      Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("cos").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -511,17 +523,9 @@ object Similarity {
     * [[bruteforceTopK]] and [[rpTopK]] exactly like [[annRecall]]; the
     * `truthSample` sampled-ground-truth mode applies unchanged at scale. */
   def annRpRecall(spark: SparkSession, d: String, nQueries: Int = 10, k: Int = 3,
-      truthSample: Int = 1): DataFrame = {
-    val truth = bruteforceTopK(spark, d, nQueries, k, truthSample)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = rpTopK(spark, d, nQueries, k, truthSample)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
+      truthSample: Int = 1): DataFrame =
+    recallAt(cosineTopK(spark, d, nQueries, k, truthSample),
+      rpTopK(spark, d, nQueries, k, truthSample), k)
 
   /** Projection widths swept by [[vecRpCurve]]. */
   val RpCurveWidths: Seq[Int] = Seq(8, 16, 32)
@@ -768,10 +772,7 @@ object Similarity {
     // under a wrong nprobe label
     Seq(1, 2, probesMax).distinct.filter(_ <= probesMax).map { p =>
       val sub = cand.filter(col("pr") <= p)
-      val topk = sub.withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id"))))
-        .filter(col("rank") <= k)
+      val topk = sub.transform(topK(k, col("cos").desc))
         .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
       val scanned = sub.groupBy().agg(count(lit(1)).as("n_scanned"))
       truth.join(topk, Seq("query_id", "neighbor_id"), "left")
@@ -1014,8 +1015,7 @@ object Similarity {
     * shuffles are proportional to m·k·(dims/m) = k·dims only. */
   private def pqCodebookLong(spark: SparkSession, d: String, m: Int, k: Int,
       dims: Int): DataFrame =
-    pqCodebookLongOn(Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e")), m, k, dims)
+    pqCodebookLongOn(vecs(spark, d), m, k, dims)
 
   /** [[pqCodebookLong]] over any (vec_id, e: array&lt;double&gt;) frame. */
   private def pqCodebookLongOn(v: DataFrame, m: Int, k: Int,
@@ -1071,8 +1071,7 @@ object Similarity {
   private def pqCodes(spark: SparkSession, d: String, m: Int,
       dims: Int, cbLong: DataFrame): DataFrame = {
     val sw = dims / m
-    val base = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    val base = vecs(spark, d)
       .join(broadcast(pqCodebook(cbLong)))
     val coded = (0 until m).foldLeft(base) { (df, s) =>
       df.withColumn(s"code_$s",
@@ -1184,9 +1183,7 @@ object Similarity {
       .join(broadcast(dt), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         adistMicroExpr(m).as("adist_micro"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist_micro"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .transform(topK(k, col("adist_micro")))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1249,20 +1246,41 @@ object Similarity {
       k: Int = 5, shortlist: Int = 25): DataFrame = {
     val cand = pqSearchTopK(spark, d, nQueries, k = shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    val v = vecs(spark, d)
     val q = v.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     cand
       .join(v.select(col("vec_id").as("neighbor_id"), col("e")), Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), l2Sq(col("qe"), col("e")).as("d2"))
+      .transform(topK(k, col("d2")))
       .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** Exact squared L2 through the dot-product identity ‖q−x‖² = q·q + x·x
+    * − 2·q·x, rounded at 4 — every dot a fixed left fold in this operand
+    * order, so the DuckDB twins reproduce each value (and each tie) bit for
+    * bit. The metric of every L2 truth, in-cell re-rank and refine lookup. */
+  private def l2Sq(qe: Column, e: Column): Column =
+    round(dot(qe, qe) + dot(e, e) - lit(2.0) * dot(qe, e), 4)
+
+  /** Per-query top-k by [[l2Sq]] (ties → lower neighbor id) over candidate
+    * pairs carrying (query_id, qe, vec_id, e): (query_id, neighbor_id). */
+  private def l2TopK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.select(col("query_id"), col("vec_id").as("neighbor_id"),
+        l2Sq(col("qe"), col("e")).as("d2"))
+      .transform(topK(k, col("d2")))
+      .select(col("query_id"), col("neighbor_id"))
+
+  /** Exact squared-L2 ground truth: [[l2TopK]] over every (query, corpus
+    * vector) pair of the `truthSample` sub-corpus, queries broadcast. */
+  private def l2Truth(spark: SparkSession, d: String, nQueries: Int, k: Int,
+      truthSample: Int): DataFrame = {
+    val v = vecs(spark, d)
+    val q = v.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"))
+    l2TopK(corpusSample(v, nQueries, truthSample)
+      .join(broadcast(q), col("vec_id") =!= col("query_id")), k)
   }
 
   def refineTopKOracle: String =
@@ -1332,9 +1350,7 @@ object Similarity {
       vp.join(broadcast(q), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           round(dot(col("qe"), col("e")) / (col("qnorm") * col("norm")), 4).as("cos"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))))
-        .filter(col("rank") <= k)
+        .transform(topK(k, col("cos").desc))
         .select(lit(p.toLong).as("dims"), col("query_id"), col("neighbor_id"))
     }
     val truth = topkAt(64).select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
@@ -1401,9 +1417,7 @@ object Similarity {
       col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         adistMicroExpr(m).as("adist_micro"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist_micro"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .transform(topK(k, col("adist_micro")))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1470,28 +1484,9 @@ object Similarity {
     * Truth uses the dot-product identity ‖q−x‖² = q·q + x·x − 2·q·x with
     * every dot a fixed left-fold, so the oracle reproduces it exactly. */
   def pqRecall(spark: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-      truthSample: Int = 1): DataFrame = {
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"))
-    val truth = corpusSample(v, nQueries, truthSample)
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = pqSearchTopK(spark, d, nQueries, k, sampleMod = truthSample)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
+      truthSample: Int = 1): DataFrame =
+    recallAt(l2Truth(spark, d, nQueries, k, truthSample),
+      pqSearchTopK(spark, d, nQueries, k, sampleMod = truthSample), k)
 
   val pqRecallOracle: String =
     s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1518,28 +1513,9 @@ object Similarity {
     * misranked by quantized distances (PQ loss, the m/k knobs). Read next
     * to [[pqRecall]] (PQ loss alone) to attribute the gap. */
   def ivfPqRecall(spark: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
-      truthSample: Int = 1): DataFrame = {
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"))
-    val truth = corpusSample(v, nQueries, truthSample)
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = ivfPqSearchTopK(spark, d, nQueries, k, sampleMod = truthSample)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
+      truthSample: Int = 1): DataFrame =
+    recallAt(l2Truth(spark, d, nQueries, k, truthSample),
+      ivfPqSearchTopK(spark, d, nQueries, k, sampleMod = truthSample), k)
 
   val ivfPqRecallOracle: String =
     s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1597,8 +1573,7 @@ object Similarity {
     def d2(e: Column, c: Seq[Double]): Column =
       aggregate(zip_with(e, lit(c.toArray),
         (x, cc) => (x - cc) * (x - cc)), lit(0.0), (acc, x) => acc + x)
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    val v = vecs(spark, d)
     val seed = v.orderBy(col("vec_id")).limit(1)
       .collect()(0)
     val out = Seq.newBuilder[(Long, Long, Long)]
@@ -1638,41 +1613,30 @@ object Similarity {
   def ivfKcenterRecall(spark: SparkSession, d: String, nQueries: Int = 10,
       k: Int = 5, truthSample: Int = 1): DataFrame = {
     val cents = kCenterChain(spark, d, KCenterSteps)._2
-    val cm = Tables.embeddings(spark, d).limit(1)
-      .select(typedLit(cents.map(_.toSeq)).as("cents"))
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    ivfL2Recall(spark, d, Tables.embeddings(spark, d).limit(1)
+      .select(typedLit(cents.map(_.toSeq)).as("cents")), nQueries, k, truthSample)
+  }
+
+  /** The body [[ivfKcenterRecall]] and [[ivfTrainedRecall]] share once the
+    * one-row codebook frame `cm` (column `cents`) exists: assign the corpus
+    * to its squared-L2-nearest center map-side, rank each query's own cell
+    * by [[l2Sq]] and count hits against the exact [[l2TopK]] over every
+    * corpus vector. */
+  private def ivfL2Recall(spark: SparkSession, d: String, cm: DataFrame,
+      nQueries: Int, k: Int, truthSample: Int): DataFrame = {
+    val v = vecs(spark, d)
     val assigned = v.join(broadcast(cm))
       .withColumn("cell", nearestCellL2(col("e"), col("cents")))
       .select(col("vec_id"), col("e"), col("cell"))
     val q = assigned.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"),
         col("cell").as("qcell"))
-    val approx = corpusSample(assigned, nQueries, truthSample)
+    val approx = l2TopK(corpusSample(assigned, nQueries, truthSample)
       .join(broadcast(q), col("cell") === col("qcell") &&
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val truth = corpusSample(v, nQueries, truthSample)
-      .join(broadcast(q.select(col("query_id"), col("qe"))),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
+        col("vec_id") =!= col("query_id")), k)
+    val truth = l2TopK(corpusSample(v, nQueries, truthSample)
+      .join(broadcast(q), col("vec_id") =!= col("query_id")), k)
+    recallAt(truth, approx, k)
   }
 
   /** The farthest-first CTE chain (v, c1..cK, m1..mK, row1..rowK) shared
@@ -1805,8 +1769,7 @@ object Similarity {
   private[graft] def kmeansChain(spark: SparkSession, d: String, nCells: Int,
       steps: Int, stopWhenStable: Boolean = false): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    val v = vecs(spark, d)
     var centsLong = v
       .select(col("vec_id"), posexplode(col("e")).as(Seq("dim", "x")))
       .withColumn("cell", pmod(col("vec_id"), lit(nCells.toLong)).cast("int"))
@@ -1819,13 +1782,7 @@ object Similarity {
     var k = 1
     var stable = false
     while (k <= steps && !(stopWhenStable && stable)) {
-      val cm = centsLong
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
-        .select(col("cell"), transform(col("dc"), x => x.getField("c")).as("carr"))
-        .groupBy()
-        .agg(array_sort(collect_list(struct(col("cell"), col("carr")))).as("cc"))
-        .select(transform(col("cc"), x => x.getField("carr")).as("cents"))
+      val cm = cellMatrix(centsLong)
       // three consumers (inertia, churn, update) read one assignment pass
       val assigned = v.join(broadcast(cm))
         .withColumn("cell", nearestCellL2(col("e"), col("cents")))
@@ -1880,48 +1837,9 @@ object Similarity {
     * the corpus shuffles only at the per-query top-k; the truth side
     * follows the family's `truthSample` contract. */
   def ivfTrainedRecall(spark: SparkSession, d: String, nQueries: Int = 10,
-      k: Int = 5, nCells: Int = 16, truthSample: Int = 1): DataFrame = {
-    val cm = kmeansChain(spark, d, nCells, KmeansTrainSteps)._2
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("c")))).as("dc"))
-      .select(col("cell"), transform(col("dc"), x => x.getField("c")).as("carr"))
-      .groupBy()
-      .agg(array_sort(collect_list(struct(col("cell"), col("carr")))).as("cc"))
-      .select(transform(col("cc"), x => x.getField("carr")).as("cents"))
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
-    val assigned = v.join(broadcast(cm))
-      .withColumn("cell", nearestCellL2(col("e"), col("cents")))
-      .select(col("vec_id"), col("e"), col("cell"))
-    val q = assigned.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"),
-        col("cell").as("qcell"))
-    val approx = corpusSample(assigned, nQueries, truthSample)
-      .join(broadcast(q), col("cell") === col("qcell") &&
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    val truth = corpusSample(v, nQueries, truthSample)
-      .join(broadcast(q.select(col("query_id"), col("qe"))),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
+      k: Int = 5, nCells: Int = 16, truthSample: Int = 1): DataFrame =
+    ivfL2Recall(spark, d, cellMatrix(kmeansChain(spark, d, nCells, KmeansTrainSteps)._2),
+      nQueries, k, truthSample)
 
   val ivfTrainedRecallOracle: String =
     s"""WITH ${kmeansChainSqlPrefix(KmeansTrainSteps)},
@@ -2082,9 +2000,7 @@ object Similarity {
       col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         adistMicroExpr(m).as("adist_micro"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist_micro"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .transform(topK(k, col("adist_micro")))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2093,28 +2009,9 @@ object Similarity {
     * m, kCells, nprobe and the same truth sample, so the delta prices the
     * residual encoding alone. */
   def ivfPqResidualRecall(spark: SparkSession, d: String, nQueries: Int = 10,
-      k: Int = 5, truthSample: Int = 1): DataFrame = {
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
-    val q = v.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"))
-    val truth = corpusSample(v, nQueries, truthSample)
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = ivfPqResidualSearchTopK(spark, d, nQueries, k, sampleMod = truthSample)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
+      k: Int = 5, truthSample: Int = 1): DataFrame =
+    recallAt(l2Truth(spark, d, nQueries, k, truthSample),
+      ivfPqResidualSearchTopK(spark, d, nQueries, k, sampleMod = truthSample), k)
 
   /** Mean squared reconstruction error of the PQ coding, raw or residual —
     * the spec hook behind the residual claim: at equal m·log₂(k) bits the
@@ -2296,9 +2193,7 @@ object Similarity {
       col("cell") === col("qcell") && col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         adistMicroExpr(m).as("adist_micro"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adist_micro"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .transform(topK(k, col("adist_micro")))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2407,8 +2302,7 @@ object Similarity {
       k: Int = 5, shortlist: Int = 25): DataFrame = {
     val cand = mipsIvfPqTopK(spark, d, nQueries, k = shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    val v = vecs(spark, d)
     val q = v.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     cand
@@ -2416,10 +2310,7 @@ object Similarity {
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         floor(dot(col("qe"), col("e")) * 1e6 + lit(0.5)).cast("long").as("ip_e6"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("ip_e6").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .transform(topK(k, col("ip_e6").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2448,17 +2339,9 @@ object Similarity {
     * share of quantization error concentrates on long-vs-short-norm
     * distinctions, exactly the distinction MIPS exists to preserve. */
   def mipsIvfPqRecall(spark: SparkSession, d: String, nQueries: Int = 10,
-      k: Int = 5, truthSample: Int = 1): DataFrame = {
-    val truth = mipsTopK(spark, d, nQueries, k, sampleMod = truthSample)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = mipsIvfPqTopK(spark, d, nQueries, k, sampleMod = truthSample)
-      .select(col("query_id"), col("neighbor_id"), lit(1).as("hit"))
-    truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        round(count(col("hit")) / k.toDouble, 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
+      k: Int = 5, truthSample: Int = 1): DataFrame =
+    recallAt(mipsTopK(spark, d, nQueries, k, sampleMod = truthSample),
+      mipsIvfPqTopK(spark, d, nQueries, k, sampleMod = truthSample), k)
 
   val mipsIvfPqRecallOracle: String =
     s"""WITH truth AS (SELECT query_id, neighbor_id FROM ($mipsTopKOracle) t),
@@ -2644,10 +2527,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         aggregate(zip_with(col("qc"), col("c"), (a, b) => a * b),
           lit(0L), (s, x) => s + x).as("idot"))
-    val byQuery = Window.partitionBy(col("query_id"))
-      .orderBy(col("idot").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("idot").desc))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -2683,10 +2563,7 @@ object Similarity {
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(dot(col("qe"), col("e")), 4).as("ip"))
-    val byQuery = Window.partitionBy(col("query_id"))
-      .orderBy(col("ip").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(byQuery))
-      .filter(col("rank") <= k)
+    scored.transform(topK(k, col("ip").desc))
   }
 
   /** `ann_sq_recall`: recall@k of the integer SQ8 search vs exact
@@ -2694,18 +2571,10 @@ object Similarity {
     * `truthSample` is the documented sampled-ground-truth mode shared by
     * every recall eval in the family. */
   def sqRecall(spark: SparkSession, d: String, nQueries: Int = 10, k: Int = 3,
-      truthSample: Int = 1): DataFrame = {
-    val truth = exactDotTopK(spark, d, nQueries, k, truthSample)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = sqTopK(spark, d, nQueries, k, truthSample)
-      .select(col("query_id"), col("neighbor_id").as("a_n"))
-    truth.join(approx,
-        truth("query_id") === approx("query_id") && col("neighbor_id") === col("a_n"),
-        "left")
-      .groupBy(truth("query_id"))
-      .agg(round(count(col("a_n")) / lit(k.toDouble), 4).as("recall_at_k"))
-      .orderBy(col("query_id"))
-  }
+      truthSample: Int = 1): DataFrame =
+    recallAt(exactDotTopK(spark, d, nQueries, k, truthSample),
+      sqTopK(spark, d, nQueries, k, truthSample), k)
+      .select(col("query_id"), col("recall_at_k"))
 
   val sqRecallOracle: String =
     """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -3013,18 +2882,14 @@ object Similarity {
       .localCheckpoint()
     // exact squared-L2 scores: ONE scan serves both the ground truth and
     // the refine lookups (pqRecall's round-4 dot-identity convention)
-    val v = Tables.embeddings(spark, d)
-      .select(col("vec_id"), vecDouble(col("embedding")).as("e"))
+    val v = vecs(spark, d)
     val q = v.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("e").as("qe"))
     val exd = v.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(dot(col("qe"), col("qe")) + dot(col("e"), col("e"))
-          - lit(2.0) * dot(col("qe"), col("e")), 4).as("d2"))
+        l2Sq(col("qe"), col("e")).as("d2"))
       .localCheckpoint()
-    val truth = exd.withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))))
-      .filter(col("rank") <= k)
+    val truth = exd.transform(topK(k, col("d2")))
       .select(col("query_id"), col("neighbor_id"))
       .localCheckpoint()
     val probeLevels = Seq(1, 2, probesMax).distinct.filter(_ <= probesMax)
@@ -3304,7 +3169,15 @@ object Similarity {
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint()
     val dfm = base.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val tf = base.join(broadcast(qterms), "token")
+    // each query's top-T tokens all lie in qtokens, so ranking the query
+    // docs' own pinned rows by the same (count desc, token) key finds the
+    // same top-T without scanning and tokenizing the documents again
+    val qtermsPinned = base.filter(col("doc_id") < nQueries)
+      .withColumn("r", row_number().over(Window.partitionBy(col("doc_id"))
+        .orderBy(col("tf").desc, col("token"))))
+      .filter(col("r") <= HybridQueryTerms)
+      .select(col("doc_id").as("query_id"), col("token"))
+    val tf = base.join(broadcast(qtermsPinned), "token")
       .filter(col("doc_id") =!= col("query_id"))
       .select(col("query_id"), col("doc_id"), col("dl"), col("token"), col("tf"))
     val k1 = 1.2; val b = 0.75
@@ -3327,7 +3200,7 @@ object Similarity {
     * (query_id, doc_id, rank) and is generator-agnostic. */
   private def denseRanks(spark: SparkSession, d: String, nQueries: Int,
       depth: Int): DataFrame =
-    bruteforceTopK(spark, d, nQueries, depth)
+    cosineTopK(spark, d, nQueries, depth, sampleMod = 1)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("rd"))
 
@@ -3338,34 +3211,48 @@ object Similarity {
     * SIGIR'09 — rank-only fusion needs no score calibration between
     * systems, which is why it is the default in hybrid search engines).
     * Scores are EXACT int64 rationals on the common denominator
-    * [[RrfDenom]] (`rrf_num`/RrfDenom is the textbook value): the fusion
-    * join and sort involve no float at all. Both input lists are
-    * query-batch-sized (nQueries·depth rows), so the fusion itself is
-    * model-sized regardless of corpus scale — the cost lives entirely in
-    * the two generators. r_dense/r_sparse carry each system's rank (0 =
-    * not in that system's top-[[HybridDepth]]). */
+    * [[RrfDenom]] (`rrf_num`/RrfDenom is the textbook value): no float
+    * enters the fusion. The two generators run in Spark and their lists
+    * are collected once ([[rankLists]]); the fusion, its sort and the
+    * top-k run on the driver, which holds 2·nQueries·[[HybridDepth]] rows
+    * (200 at the defaults) — query-batch-sized at any corpus scale, like
+    * the tokenizer trainers' vocabulary. r_dense/r_sparse carry each
+    * system's rank (0 = not in that system's top-[[HybridDepth]]). */
   def hybridRrf(spark: SparkSession, d: String, nQueries: Int = 10,
-      k: Int = 5): DataFrame =
-    fuseRrf(denseRanks(spark, d, nQueries, HybridDepth),
-      sparseRanks(spark, d, nQueries, HybridDepth), k)
+      k: Int = 5): DataFrame = {
+    import spark.implicits._
+    val (dense, sparse) = rankLists(spark, d, nQueries)
+    (dense.keySet ++ sparse.keySet).toSeq.sorted.flatMap { q =>
+      rrfTop(dense.getOrElse(q, Map.empty), sparse.getOrElse(q, Map.empty), k)
+        .zipWithIndex.map { case ((doc, rd, rs, num), i) => (q, doc, rd, rs, num, i + 1) }
+    }.toDF("query_id", "doc_id", "r_dense", "r_sparse", "rrf_num", "rank")
+  }
 
-  /** The fusion step alone, over any (query_id, doc_id, rd) × (query_id,
-    * doc_id, rs) rank lists — shared by [[hybridRrf]] and [[hybridRrfEval]]
-    * so the eval reuses its checkpointed lists instead of regenerating
-    * both systems. */
-  private def fuseRrf(dense: DataFrame, sparse: DataFrame, k: Int): DataFrame =
-    dense.join(sparse, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf_num",
-        coalesce(expr(s"${RrfDenom}L div (${RrfK} + rd)"), lit(0L)) +
-          coalesce(expr(s"${RrfDenom}L div (${RrfK} + rs)"), lit(0L)))
-      .select(col("query_id"), col("doc_id"),
-        coalesce(col("rd"), lit(0)).cast("int").as("r_dense"),
-        coalesce(col("rs"), lit(0)).cast("int").as("r_sparse"),
-        col("rrf_num"))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("rrf_num").desc, col("doc_id"))).cast("int"))
-      .filter(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+  /** Both systems' depth-[[HybridDepth]] rank lists, collected in ONE job
+    * over the union of the two generators: (dense, sparse), each
+    * query_id → doc_id → rank. 2·nQueries·[[HybridDepth]] rows at most. */
+  private def rankLists(spark: SparkSession, d: String,
+      nQueries: Int): (Map[Long, Map[Long, Int]], Map[Long, Map[Long, Int]]) = {
+    val rows = denseRanks(spark, d, nQueries, HybridDepth).withColumn("sys", lit(0))
+      .unionAll(sparseRanks(spark, d, nQueries, HybridDepth).withColumn("sys", lit(1)))
+      .collect()
+    def lists(sys: Int): Map[Long, Map[Long, Int]] = rows.filter(_.getInt(3) == sys)
+      .groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.map(r => r.getLong(1) -> r.getInt(2)).toMap }
+    (lists(0), lists(1))
+  }
+
+  /** One query's RRF top-k over its two doc → rank lists: (doc_id,
+    * r_dense, r_sparse, rrf_num) by rrf_num desc, then doc_id — each
+    * system contributes the exact integer RrfDenom div (RrfK + rank). */
+  private def rrfTop(dense: Map[Long, Int], sparse: Map[Long, Int],
+      k: Int): Seq[(Long, Int, Int, Long)] = {
+    def part(r: Int): Long = if (r == 0) 0L else RrfDenom / (RrfK + r)
+    (dense.keySet ++ sparse.keySet).toSeq.map { doc =>
+      val (rd, rs) = (dense.getOrElse(doc, 0), sparse.getOrElse(doc, 0))
+      (doc, rd, rs, part(rd) + part(rs))
+    }.sortBy { case (doc, _, _, num) => (-num, doc) }.take(k)
+  }
 
   private def sparseRanksSql(nQueries: Int, depth: Int): String =
     s"""wl AS (
@@ -3440,33 +3327,35 @@ object Similarity {
     * single-system "truths". Read as: the hybrid row quantifies how much
     * of each pure ranking survives fusion (dense_recall + sparse_recall
     * near 1 each means RRF kept both signals; the pure rows anchor the
-    * scale at 1.0 by construction). Counts are exact integers over
-    * nQueries·k pairs; all frames are query-batch-sized. */
+    * scale at 1.0 by construction). One collect of both rank lists
+    * ([[rankLists]]) feeds all three systems; the fusion and the six
+    * exact-integer hit counts over nQueries·k pairs run on the driver,
+    * which holds 2·nQueries·[[HybridDepth]] rows. Recalls round like
+    * Spark's `round(x, 4)` ([[round4]]). */
   def hybridRrfEval(spark: SparkSession, d: String, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
-    val dense = denseRanks(spark, d, nQueries, HybridDepth).localCheckpoint()
-    val sparse = sparseRanks(spark, d, nQueries, HybridDepth).localCheckpoint()
-    val hybrid = fuseRrf(dense, sparse, k)
-      .select(col("query_id"), col("doc_id"))
-    val dTop = dense.filter(col("rd") <= k).select(col("query_id"), col("doc_id"))
-    val sTop = sparse.filter(col("rs") <= k).select(col("query_id"), col("doc_id"))
-    val denom = (nQueries * k).toDouble
-    def evalRow(name: String, sys: DataFrame): DataFrame = {
-      val s = sys.withColumn("hit", lit(1))
-      val dHits = dTop.join(s, Seq("query_id", "doc_id"), "left")
-        .agg(count(col("hit")).as("n_hits_dense"))
-      val sHits = sTop.join(s, Seq("query_id", "doc_id"), "left")
-        .agg(count(col("hit")).as("n_hits_sparse"))
-      dHits.crossJoin(sHits).select(lit(name).as("system"),
-        col("n_hits_dense"),
-        round(col("n_hits_dense") / denom, 4).as("recall_dense"),
-        col("n_hits_sparse"),
-        round(col("n_hits_sparse") / denom, 4).as("recall_sparse"))
+    import spark.implicits._
+    val (dense, sparse) = rankLists(spark, d, nQueries)
+    def top(lists: Map[Long, Map[Long, Int]]): Set[(Long, Long)] =
+      lists.toSet[(Long, Map[Long, Int])].flatMap { case (q, m) =>
+        m.toSet[(Long, Int)].collect { case (doc, r) if r <= k => (q, doc) }
+      }
+    val (dTop, sTop) = (top(dense), top(sparse))
+    val hybrid = (dense.keySet ++ sparse.keySet).flatMap { q =>
+      rrfTop(dense.getOrElse(q, Map.empty), sparse.getOrElse(q, Map.empty), k)
+        .map { case (doc, _, _, _) => (q, doc) }
     }
-    evalRow("dense", dTop).unionAll(evalRow("hybrid", hybrid))
-      .unionAll(evalRow("sparse", sTop))
-      .orderBy(col("system"))
+    val denom = (nQueries * k).toDouble
+    Seq("dense" -> dTop, "hybrid" -> hybrid, "sparse" -> sTop).map { case (name, sys) =>
+      val (hd, hs) = ((sys & dTop).size.toLong, (sys & sTop).size.toLong)
+      (name, hd, round4(hd / denom), hs, round4(hs / denom))
+    }.toDF("system", "n_hits_dense", "recall_dense", "n_hits_sparse", "recall_sparse")
   }
+
+  /** Spark's `round(x, 4)` on a double (HALF_UP on x's shortest decimal
+    * form), for recalls computed on the driver. */
+  private[graft] def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   val hybridRrfEvalOracle: String =
     s"""WITH ${denseRanksSql(10, HybridDepth)},

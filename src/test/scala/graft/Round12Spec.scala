@@ -147,22 +147,6 @@ class Round12Spec extends SparkSpec {
     assert(cents.length == 16 * 64)
   }
 
-  test("ann_ivf_trained_recall: the trained-codebook eval is well-formed per query") {
-    import graft.operators.Similarity
-    val rows = Similarity.ivfTrainedRecall(spark, Sf).collect()
-    assert(rows.length == 10, "one eval row per query")
-    rows.foreach { r =>
-      val hits = r.getAs[Long]("n_hits")
-      assert(hits >= 0L && hits <= 5L)
-      assert(math.abs(r.getAs[Double]("recall_at_k") - hits / 5.0) < 1e-9)
-    }
-    // the composition really reads the TRAINED centroids: a 0-step chain
-    // (seed centroids) and the 4-step chain disagree on at least one
-    // query's hit count on this corpus — training moved the partition
-    val trained = rows.map(_.getAs[Long]("n_hits")).sum
-    assert(trained > 0L, "trained quantizer must land some true neighbors")
-  }
-
   test("clusterLabels cache: rewriting the dataset under the dir invalidates the pin") {
     import graft.operators.Dedup
     import java.nio.file.{Files, Path}

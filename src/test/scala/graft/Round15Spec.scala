@@ -1,76 +1,10 @@
 package graft
 
-import graft.operators.{Joins, Similarity}
+import graft.operators.Joins
 import org.apache.spark.sql.functions._
 
-/** Round-15 semantic pins for the hybrid retrieval fusion rows. */
+/** Round-15 semantic pin for `q_pagerank`. */
 class Round15Spec extends SparkSpec {
-
-  test("RrfDenom is the exact common denominator for depth-10 RRF ranks") {
-    // every per-system contribution RrfDenom/(60+r) must be an exact
-    // integer — the no-float-fusion contract rests on this divisibility
-    for (r <- 1 to Similarity.HybridDepth)
-      assert(Similarity.RrfDenom % (Similarity.RrfK + r) == 0,
-        s"RrfDenom not divisible by ${Similarity.RrfK + r}")
-  }
-
-  test("ann_hybrid_rrf: fused scores are the exact two-system RRF rationals") {
-    val rows = Similarity.hybridRrf(spark, Sf).collect()
-    assert(rows.nonEmpty)
-    val M = Similarity.RrfDenom
-    for (r <- rows) {
-      val (rd, rs, num) = (r.getInt(2), r.getInt(3), r.getLong(4))
-      assert(rd >= 0 && rd <= Similarity.HybridDepth)
-      assert(rs >= 0 && rs <= Similarity.HybridDepth)
-      assert(rd > 0 || rs > 0, "a fused row must come from at least one list")
-      val expect = (if (rd > 0) M / (Similarity.RrfK + rd) else 0L) +
-        (if (rs > 0) M / (Similarity.RrfK + rs) else 0L)
-      assert(num == expect, s"rrf_num $num != $expect for ranks ($rd, $rs)")
-    }
-    // per query: ranks strictly ordered by (rrf_num desc, doc_id)
-    rows.groupBy(_.getLong(0)).foreach { case (_, qs) =>
-      val sorted = qs.sortBy(_.getInt(5))
-      sorted.sliding(2).foreach {
-        case Array(a, b) =>
-          val ok = a.getLong(4) > b.getLong(4) ||
-            (a.getLong(4) == b.getLong(4) && a.getLong(1) < b.getLong(1))
-          assert(ok, s"rank order violated: $a then $b")
-        case _ =>
-      }
-    }
-  }
-
-  test("ann_ivfpq_tune_grid: cost axes monotone, recall monotone in refine-R, nprobe=1/R=0 ties to ann_ivfpq_recall") {
-    val g = Similarity.ivfPqTuneGrid(spark, Sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(g.map(t => (t._1, t._2)).toSeq ==
-      (for (p <- Seq(1L, 2L, 4L); r <- Seq(0L, 10L, 25L)) yield (p, r)))
-    // n_scanned depends only on nprobe and never drops as probes widen
-    val scanByP = g.groupBy(_._1).map { case (p, rows) =>
-      assert(rows.map(_._3).distinct.length == 1,
-        s"n_scanned must be constant across refine levels at nprobe=$p")
-      p -> rows.head._3
-    }
-    assert(scanByP(1L) <= scanByP(2L) && scanByP(2L) <= scanByP(4L))
-    for ((p, r, scanned, refined, _) <- g) {
-      assert(refined <= scanned, s"($p,$r): refined $refined > scanned $scanned")
-      assert(refined <= r * 10, s"($p,$r): refined $refined > R×nQueries")
-      if (r == 0L) assert(refined == 0L)
-    }
-    // exact reranking of an R ≥ k shortlist can only keep or add truth
-    // hits (a truth neighbor in the ADC top-k survives any exact rerank),
-    // so per probe level n_hits is non-decreasing in R
-    for ((p, rows) <- g.groupBy(_._1)) {
-      val byR = rows.sortBy(_._2).map(_._5)
-      assert(byR.sliding(2).forall { case Array(a, b) => b >= a; case _ => true },
-        s"n_hits must be non-decreasing in refine-R at nprobe=$p: ${byR.toSeq}")
-    }
-    // the (nprobe=1, R=0) corner IS the ann_ivfpq estimand
-    val ivfpqHits = Similarity.ivfPqRecall(spark, Sf)
-      .agg(sum(col("n_hits"))).head().getLong(0)
-    assert(g.find(t => t._1 == 1L && t._2 == 0L).get._5 == ivfpqHits,
-      s"grid corner != ann_ivfpq_recall total hits ($ivfpqHits)")
-  }
 
   test("q_pagerank: bit-identical to a plain-Scala integer power iteration at sf0.001") {
     val got = Joins.pagerank(spark, Sf).collect()
@@ -99,38 +33,5 @@ class Round15Spec extends SparkSpec {
     assert(got == want, s"pagerank divergence:\n got=${got.take(5)}\nwant=${want.take(5)}")
     // sanity: integer mass stays within the damping identity's bounds
     assert(got.head._3 > b, "a hub must exceed the uniform rank")
-  }
-
-  test("ann_hard_negatives: negatives only, ranked, margin consistent with the unfiltered ranking") {
-    val rows = Similarity.hardNegatives(spark, Sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getDouble(4), r.getLong(5), r.getInt(6)))
-    assert(rows.nonEmpty)
-    for ((_, _, lq, ln, _, nPos, rk) <- rows) {
-      assert(lq != ln, "a hard negative must carry a different label")
-      assert(rk >= 1 && rk <= 5)
-      assert(nPos >= 0, "same-label-above margin cannot be negative")
-    }
-    // a query's rank-1 negative can never beat the query's global top-1
-    // WITH ties allowed (the top-1 may itself be the negative)
-    val top1 = Similarity.bruteforceTopK(spark, Sf).collect()
-      .filter(_.getInt(3) == 1)
-      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    rows.filter(_._7 == 1).foreach { case (q, _, _, _, cos, _, _) =>
-      assert(cos <= top1(q), s"query $q: negative cos $cos beats global top-1 ${top1(q)}")
-    }
-  }
-
-  test("ann_hybrid_rrf_eval: pure systems anchor at 1.0 and fusion keeps both signals") {
-    val byName = Similarity.hybridRrfEval(spark, Sf).collect()
-      .map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(4))).toMap
-    assert(byName.keySet == Set("dense", "sparse", "hybrid"))
-    assert(byName("dense")._1 == 1.0, s"dense self-recall: ${byName("dense")}")
-    assert(byName("sparse")._2 == 1.0, s"sparse self-recall: ${byName("sparse")}")
-    val (hd, hs) = byName("hybrid")
-    // RRF must retain strictly more of EACH pure signal than the opposite
-    // pure system does (else fusing was pointless on this data)
-    assert(hd > byName("sparse")._1, s"hybrid keeps dense signal: $hd")
-    assert(hs > byName("dense")._2, s"hybrid keeps sparse signal: $hs")
   }
 }

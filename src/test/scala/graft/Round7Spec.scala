@@ -1,50 +1,13 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.functions._
+import graft.operators.Dedup
 
-/** Round-7 coverage: the sampled ground-truth mode of the recall evals
-  * (`truthSample`) — the knob that makes the evals themselves runnable at
-  * 100 TB by shrinking the exact-truth scan, documented in SURVEY §8 and
-  * now parameterized. The property pinned here: restricting BOTH the exact
-  * and approximate candidate sets to the same deterministic hash-bucket
-  * sub-corpus yields a recall estimate close to the full-truth number —
-  * the banding/quantization hit probability is per-pair, so a uniform
-  * sample estimates the same curve.
+/** Round-7 coverage: the sampled ground-truth mode of the MinHash recall
+  * eval (`truthSample`) — restricting the exact pair set to a
+  * deterministic document sample still estimates the banding recall. The
+  * ANN recall evals' sampled mode is pinned in [[SimilaritySpec]].
   */
 class Round7Spec extends SparkSpec {
-
-  private def meanRecall(df: org.apache.spark.sql.DataFrame, col0: String): Double =
-    df.agg(avg(col(col0))).head().getDouble(0)
-
-  test("annRecall: sampled ground truth (truthSample=2) estimates full-truth recall") {
-    val full = meanRecall(Similarity.annRecall(spark, Sf), "recall_at_k")
-    val sampled = meanRecall(Similarity.annRecall(spark, Sf, truthSample = 2), "recall_at_k")
-    assert(sampled >= 0.0 && sampled <= 1.0)
-    assert(math.abs(full - sampled) <= 0.25,
-      s"sampled recall estimate drifted: full=$full sampled=$sampled")
-    // deterministic hash-bucket sample: same subset every run, bit-identical
-    val again = meanRecall(Similarity.annRecall(spark, Sf, truthSample = 2), "recall_at_k")
-    assert(sampled == again, "hash-bucket sampling must be run-deterministic")
-  }
-
-  test("ivfRecall: sampled mode preserves the probe2 >= probe1 dominance and tracks full truth") {
-    val full = Similarity.ivfRecall(spark, Sf)
-    val sampled = Similarity.ivfRecall(spark, Sf, truthSample = 2)
-    // the structural invariant survives sampling: probing 2 cells can only help
-    assert(sampled.filter(col("recall_probe2") < col("recall_ivf")).isEmpty)
-    assert(math.abs(meanRecall(full, "recall_ivf") - meanRecall(sampled, "recall_ivf")) <= 0.25)
-  }
-
-  test("pqRecall + ivfPqRecall: sampled mode tracks full truth") {
-    val fullPq = meanRecall(Similarity.pqRecall(spark, Sf), "recall_at_k")
-    val samPq = meanRecall(Similarity.pqRecall(spark, Sf, truthSample = 2), "recall_at_k")
-    assert(math.abs(fullPq - samPq) <= 0.25, s"pq: full=$fullPq sampled=$samPq")
-    val fullIvfPq = meanRecall(Similarity.ivfPqRecall(spark, Sf), "recall_at_k")
-    val samIvfPq = meanRecall(Similarity.ivfPqRecall(spark, Sf, truthSample = 2), "recall_at_k")
-    assert(math.abs(fullIvfPq - samIvfPq) <= 0.25,
-      s"ivfpq: full=$fullIvfPq sampled=$samIvfPq")
-  }
 
   test("minhashRecall: doc-sampled ground truth estimates banding recall") {
     val full = Dedup.minhashRecall(spark, Sf).head()

@@ -24,4 +24,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   val Sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` under its own job group and returns its result with the
+    * number of Spark jobs it ran. The status store learns of jobs from the
+    * listener bus, in order: once it has seen a barrier job run after the
+    * body in a second group, it has seen every job of the body. */
+  def withJobs[T](label: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"$label-${System.nanoTime}"
+    sc.setJobGroup(group, label)
+    val out = try body finally sc.clearJobGroup()
+    val barrier = s"$group-barrier"
+    sc.setJobGroup(barrier, "barrier")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(barrier).isEmpty && System.nanoTime < deadline)
+      Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(barrier).nonEmpty, "status store stalled")
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }

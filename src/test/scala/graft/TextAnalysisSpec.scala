@@ -615,23 +615,9 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   /** Build jobs (jobs run while the DataFrame is constructed) of one
-    * SparkEntry row, read by job group. */
-  private def buildJobs(row: String): Int = {
-    val sc = spark.sparkContext
-    val group = s"build-$row-${System.nanoTime}"
-    sc.setJobGroup(group, row)
-    try SparkEntry.queries(row)(spark, Sf) finally sc.clearJobGroup()
-    // the status store learns of jobs from the listener bus, in order: once
-    // it has seen a later job, it has seen every build job
-    val barrier = s"$group-barrier"
-    sc.setJobGroup(barrier, "barrier")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime + 30L * 1000000000L
-    while (sc.statusTracker.getJobIdsForGroup(barrier).isEmpty && System.nanoTime < deadline)
-      Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(barrier).nonEmpty, "status store stalled")
-    sc.statusTracker.getJobIdsForGroup(group).length
-  }
+    * SparkEntry row. */
+  private def buildJobs(row: String): Int =
+    withJobs(s"build-$row")(SparkEntry.queries(row)(spark, Sf))._2
 
   test("tokenizer rows run at most 6 build jobs each") {
     // the driver-side trainers collect the vocabulary once: a per-step
