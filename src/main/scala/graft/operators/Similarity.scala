@@ -3222,10 +3222,8 @@ object Similarity {
       k: Int = 5): DataFrame = {
     import spark.implicits._
     val (dense, sparse) = rankLists(spark, d, nQueries)
-    (dense.keySet ++ sparse.keySet).toSeq.sorted.flatMap { q =>
-      rrfTop(dense.getOrElse(q, Map.empty), sparse.getOrElse(q, Map.empty), k)
-        .zipWithIndex.map { case ((doc, rd, rs, num), i) => (q, doc, rd, rs, num, i + 1) }
-    }.toDF("query_id", "doc_id", "r_dense", "r_sparse", "rrf_num", "rank")
+    rrfTop(dense, sparse, k)
+      .toDF("query_id", "doc_id", "r_dense", "r_sparse", "rrf_num", "rank")
   }
 
   /** Both systems' depth-[[HybridDepth]] rank lists, collected in ONE job
@@ -3242,16 +3240,22 @@ object Similarity {
     (lists(0), lists(1))
   }
 
-  /** One query's RRF top-k over its two doc → rank lists: (doc_id,
-    * r_dense, r_sparse, rrf_num) by rrf_num desc, then doc_id — each
-    * system contributes the exact integer RrfDenom div (RrfK + rank). */
-  private def rrfTop(dense: Map[Long, Int], sparse: Map[Long, Int],
-      k: Int): Seq[(Long, Int, Int, Long)] = {
+  /** Each query's RRF top-k over the two [[rankLists]]: (query_id, doc_id,
+    * r_dense, r_sparse, rrf_num, rank), ranked by rrf_num desc, then
+    * doc_id, in (query_id, rank) order — each system contributes the exact
+    * integer RrfDenom div (RrfK + rank). */
+  private def rrfTop(dense: Map[Long, Map[Long, Int]], sparse: Map[Long, Map[Long, Int]],
+      k: Int): Seq[(Long, Long, Int, Int, Long, Int)] = {
     def part(r: Int): Long = if (r == 0) 0L else RrfDenom / (RrfK + r)
-    (dense.keySet ++ sparse.keySet).toSeq.map { doc =>
-      val (rd, rs) = (dense.getOrElse(doc, 0), sparse.getOrElse(doc, 0))
-      (doc, rd, rs, part(rd) + part(rs))
-    }.sortBy { case (doc, _, _, num) => (-num, doc) }.take(k)
+    (dense.keySet ++ sparse.keySet).toSeq.sorted.flatMap { q =>
+      val (dq, sq) = (dense.getOrElse(q, Map.empty[Long, Int]),
+        sparse.getOrElse(q, Map.empty[Long, Int]))
+      (dq.keySet ++ sq.keySet).toSeq.map { doc =>
+        val (rd, rs) = (dq.getOrElse(doc, 0), sq.getOrElse(doc, 0))
+        (doc, rd, rs, part(rd) + part(rs))
+      }.sortBy { case (doc, _, _, num) => (-num, doc) }.take(k)
+        .zipWithIndex.map { case ((doc, rd, rs, num), i) => (q, doc, rd, rs, num, i + 1) }
+    }
   }
 
   private def sparseRanksSql(nQueries: Int, depth: Int): String =
@@ -3341,10 +3345,7 @@ object Similarity {
         m.toSet[(Long, Int)].collect { case (doc, r) if r <= k => (q, doc) }
       }
     val (dTop, sTop) = (top(dense), top(sparse))
-    val hybrid = (dense.keySet ++ sparse.keySet).flatMap { q =>
-      rrfTop(dense.getOrElse(q, Map.empty), sparse.getOrElse(q, Map.empty), k)
-        .map { case (doc, _, _, _) => (q, doc) }
-    }
+    val hybrid = rrfTop(dense, sparse, k).map(r => (r._1, r._2)).toSet
     val denom = (nQueries * k).toDouble
     Seq("dense" -> dTop, "hybrid" -> hybrid, "sparse" -> sTop).map { case (name, sys) =>
       val (hd, hs) = ((sys & dTop).size.toLong, (sys & sTop).size.toLong)

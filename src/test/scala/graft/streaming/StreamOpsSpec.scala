@@ -1518,7 +1518,12 @@ class StreamOpsSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("twsscd2timer").toString
     val in = MemoryStream[ChangeEvent]
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String, Long, Long, Long)]
+    // foreachBatch is at-least-once: a batch that ran but was not committed
+    // when q.stop() landed re-runs under the same id on restart, so the sink
+    // keeps each batch id's output once (the idempotent-sink contract)
+    val byBatch = scala.collection.mutable.Map.empty[Long, Seq[(Long, Long, String, Long, Long, Long)]]
+    def rows: Seq[(Long, Long, String, Long, Long, Long)] =
+      byBatch.synchronized(byBatch.toSeq.sortBy(_._1).flatMap(_._2))
     def commits(): Int = {
       val d = new java.io.File(ckpt, "commits")
       if (d.exists()) d.listFiles().count(!_.getName.startsWith(".")) else 0
@@ -1529,16 +1534,15 @@ class StreamOpsSpec extends SparkSpec {
         .writeStream
         .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Append())
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[Scd2Interval], _: Long) =>
-          rows.synchronized {
-            rows ++= ds.collect().map(i =>
-              (i.user_id, i.version, i.status, i.n_events, i.valid_from, i.valid_to))
-          }: Unit
+        .foreachBatch { (ds: org.apache.spark.sql.Dataset[Scd2Interval], batchId: Long) =>
+          val out = ds.collect().map(i =>
+            (i.user_id, i.version, i.status, i.n_events, i.valid_from, i.valid_to)).toSeq
+          byBatch.synchronized(byBatch(batchId) = out)
         }
         .start()
       try {
         val deadline = System.currentTimeMillis + 60000
-        while ((rows.synchronized(rows.size) < expected ||
+        while ((rows.size < expected ||
             commits() <= committed) && System.currentTimeMillis < deadline)
           Thread.sleep(100)
       } finally q.stop()
@@ -1549,7 +1553,7 @@ class StreamOpsSpec extends SparkSpec {
       // the checkpointed store
       in.addData(ChangeEvent(1, 10, "active", hts(0)), ChangeEvent(1, 11, "active", hts(1)))
       runBatch(expected = 0)
-      assert(rows.synchronized(rows.isEmpty), s"no closed interval yet, got $rows")
+      assert(rows.isEmpty, s"no closed interval yet, got $rows")
       // run 2 (fresh query, same checkpoint): user 99 pushes the watermark
       // 3 h forward; the engine fires user 1's restored timer → dormancy
       // flush closed at the LAST OBSERVED second
@@ -1557,7 +1561,7 @@ class StreamOpsSpec extends SparkSpec {
       runBatch(expected = 0)
       in.addData(ChangeEvent(99, 13, "x", hts(181)))
       runBatch(expected = 1)
-      val flushed = rows.synchronized(rows.filter(_._1 == 1L).toList)
+      val flushed = rows.filter(_._1 == 1L).toList
       assert(flushed == List((1L, 1L, "active", 2L, hts(0).getTime / 1000, hts(1).getTime / 1000)),
         s"timer-driven flush must close user 1's interval at its last evidence, got $flushed")
     } finally {
