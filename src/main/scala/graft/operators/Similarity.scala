@@ -3341,9 +3341,7 @@ object Similarity {
     import spark.implicits._
     val (dense, sparse) = rankLists(spark, d, nQueries)
     def top(lists: Map[Long, Map[Long, Int]]): Set[(Long, Long)] =
-      lists.toSet[(Long, Map[Long, Int])].flatMap { case (q, m) =>
-        m.toSet[(Long, Int)].collect { case (doc, r) if r <= k => (q, doc) }
-      }
+      (for ((q, m) <- lists.toSeq; (doc, r) <- m.toSeq if r <= k) yield (q, doc)).toSet
     val (dTop, sTop) = (top(dense), top(sparse))
     val hybrid = rrfTop(dense, sparse, k).map(r => (r._1, r._2)).toSet
     val denom = (nQueries * k).toDouble
