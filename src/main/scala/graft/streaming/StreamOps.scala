@@ -2,9 +2,14 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, TimeMode}
+
+import graft.streaming.KeyRule.{group, groups, timedGroups}
+import graft.streaming.Rules._
 
 /** A timestamped event on the stream (the SSE record after JSON decode). */
 case class StreamEvent(user_id: Long, event_type: String, value: Double, ts: Timestamp)
@@ -38,6 +43,11 @@ private case class BandClaim(doc_id: Long, sig: Seq[Long])
   * All state is keyed and watermark-bounded, so state-store size is
   * O(active keys), not O(stream length) — the property that keeps these
   * runnable forever on an unbounded 100 TB/day stream.
+  *
+  * Each keyed stateful operator has one per-key rule ([[Rules]]) and two
+  * drivers ([[KeyRule]]): the plain form runs on any state store with
+  * `GroupState` timeouts; the `…Tws` form runs on `transformWithState`,
+  * needs the RocksDB state-store provider and uses engine timers and TTL.
   */
 object StreamOps {
 
@@ -88,42 +98,16 @@ object StreamOps {
   def sessionize(events: Dataset[StreamEvent], gapSec: Long = 1800L,
       lateness: String = "30 minutes"): Dataset[Session] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, it: Iterator[StreamEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(Session(userId, s.n, s.sum, tsOfUs(s.start), tsOfUs(s.last)))
-          } else {
-            val events = it.toSeq.sortBy(e => usOf(e.ts))
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            events.foreach { e =>
-              val t = usOf(e.ts)
-              cur match {
-                case Some(s) if Math.floorDiv(t, 1000000L) -
-                    Math.floorDiv(s.last, 1000000L) <= gapSec =>
-                  cur = Some(SessionState(s.n + 1, s.sum + e.value, s.start, math.max(s.last, t)))
-                case Some(s) => // gap exceeded: close previous, open new
-                  closed ::= Session(userId, s.n, s.sum, tsOfUs(s.start), tsOfUs(s.last))
-                  cur = Some(SessionState(1L, e.value, t, t))
-                case None =>
-                  cur = Some(SessionState(1L, e.value, t, t))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(
-                (Math.floorDiv(s.last, 1000000L) + gapSec + 1L) * 1000L)
-            }
-            closed.reverseIterator
-          }
-      }
+    watermarked(events, lateness)(_.user_id)
+      .flatMapGroupsWithState[SessionState, Session](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(timedGroups(new SessionRule(gapSec)))
   }
+
+  /** `events` watermarked on `ts` and grouped by `key`: the keyed input
+    * both forms of an event-time operator share. */
+  private def watermarked[E, K: Encoder](events: Dataset[E], lateness: String)(
+      key: E => K): KeyValueGroupedDataset[K, E] =
+    events.withWatermark("ts", lateness).groupByKey(key)
 
   /** Gap sessionization via Spark's NATIVE `session_window` aggregate —
     * the declarative twin of [[sessionize]], but with one boundary
@@ -228,29 +212,9 @@ object StreamOps {
   def anomalies(events: Dataset[StreamEvent], minN: Long = 30,
       zThreshold: Double = 3.0): Dataset[Anomaly] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[TypeStats, Anomaly](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, it: Iterator[StreamEvent], state: GroupState[TypeStats]) =>
-          var s = state.getOption.getOrElse(TypeStats(0L, 0.0, 0.0))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Anomaly]
-          it.toSeq.sortBy(e => (usOf(e.ts), e.user_id, e.value)).foreach { e =>
-            if (s.n >= minN) {
-              val sd = math.sqrt(s.m2 / (s.n - 1).toDouble)
-              if (sd > 0) {
-                val z = (e.value - s.mean) / sd
-                if (math.abs(z) >= zThreshold) out += Anomaly(typ, e.user_id, e.value, z, e.ts)
-              }
-            }
-            val n1 = s.n + 1
-            val d = e.value - s.mean
-            val mean1 = s.mean + d / n1
-            s = TypeStats(n1, mean1, s.m2 + d * (e.value - mean1))
-          }
-          state.update(s)
-          out.iterator
-      }
+    events.groupByKey(_.event_type)
+      .flatMapGroupsWithState[TypeStats, Anomaly](OutputMode.Append(),
+        GroupStateTimeout.NoTimeout())(groups(new AnomalyRule(minN, zThreshold)))
   }
 
   /** Watermarked stream-stream interval join: each purchase matched to the
@@ -283,19 +247,9 @@ object StreamOps {
     * events are idempotent. */
   def distinctSketch(events: Dataset[StreamEvent], k: Int = 64): Dataset[DistinctEstimate] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[KmvSketch, DistinctEstimate](GroupStateTimeout.NoTimeout()) {
-        (typ: String, it: Iterator[StreamEvent], state: GroupState[KmvSketch]) =>
-          val prev = state.getOption.map(_.hashes).getOrElse(Seq.empty)
-          val merged = (prev.toSet ++ it.map(e => StreamOps.hash31(e.user_id.toString)))
-            .toSeq.sorted.take(k)
-          state.update(KmvSketch(merged))
-          val est =
-            if (merged.size < k) merged.size.toLong
-            else math.floor((k - 1).toDouble * 2147483647L / merged.max).toLong
-          DistinctEstimate(typ, est, merged.size)
-      }
+    events.groupByKey(_.event_type)
+      .mapGroupsWithState[KmvSketch, DistinctEstimate](
+        GroupStateTimeout.NoTimeout())(group(new KmvRule(k)))
   }
 
   /** JVM mirror of Kernels.hash31 (first 8 md5 hex digits mod 2^31−1) —
@@ -328,28 +282,8 @@ object StreamOps {
     * batch estimate exactly on the same data. */
   def hllSketch(events: Dataset[StreamEvent]): Dataset[HllEstimate] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[HllState, HllEstimate](GroupStateTimeout.NoTimeout()) {
-        (typ: String, it: Iterator[StreamEvent], state: GroupState[HllState]) =>
-          val regs = state.getOption.map(_.regs.toArray).getOrElse(Array.fill(64)(0))
-          it.foreach { e =>
-            val h = StreamOps.hash60(e.user_id.toString)
-            val b = (h % 64).toInt
-            val w = h / 64
-            val rho = if (w == 0) 55 else 55 - (64 - java.lang.Long.numberOfLeadingZeros(w))
-            if (rho > regs(b)) regs(b) = rho
-          }
-          state.update(HllState(regs.toSeq))
-          // integer harmonic sum, exactly as the batch query: empty
-          // registers (0) contribute 2^55; the only float step is the
-          // final fixed-order alpha*m^2*2^55 / S
-          val s = regs.map(r => 1L << (55 - r)).sum
-          val est = java.math.BigDecimal
-            .valueOf(0.709 * 4096.0 * (1L << 55).toDouble / s)
-            .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-          HllEstimate(typ, est, regs.count(_ > 0))
-      }
+    events.groupByKey(_.event_type)
+      .mapGroupsWithState[HllState, HllEstimate](GroupStateTimeout.NoTimeout())(group(HllRule))
   }
 
   /** Streaming log-linear quantile sketch per event type: keyed state holds
@@ -363,20 +297,9 @@ object StreamOps {
     * events. */
   def quantileSketch(events: Dataset[StreamEvent]): Dataset[QuantileEstimate] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[Map[Long, Long], QuantileEstimate](GroupStateTimeout.NoTimeout()) {
-        (typ: String, it: Iterator[StreamEvent], state: GroupState[Map[Long, Long]]) =>
-          var m = state.getOption.getOrElse(Map.empty[Long, Long])
-          it.foreach { e =>
-            val b = StreamOps.bucket31(e.value)
-            m = m.updated(b, m.getOrElse(b, 0L) + 1L)
-          }
-          state.update(m)
-          val n = m.valuesIterator.sum
-          QuantileEstimate(typ, n, m.size,
-            StreamOps.sketchQuantile(m, n, 0.50), StreamOps.sketchQuantile(m, n, 0.99))
-      }
+    events.groupByKey(_.event_type)
+      .mapGroupsWithState[Map[Long, Long], QuantileEstimate](
+        GroupStateTimeout.NoTimeout())(group(quantiles))
   }
 
   /** JVM mirror of the batch sketch's integer log-linear bucketing
@@ -426,63 +349,25 @@ object StreamOps {
       lateness: String = "1 hour",
       ttlHours: Long = 2160L): Dataset[Conversion] = {
     import events.sparkSession.implicits._
+    funnelSteps(events, steps, lateness)
+      .flatMapGroupsWithState[FunnelState, Conversion](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(
+        timedGroups(new FunnelRule(steps, ttlHours * 3600000L)))
+  }
+
+  /** The funnel's keyed input: watermarked step events by user. */
+  private def funnelSteps(events: Dataset[StreamEvent], steps: Seq[String],
+      lateness: String): KeyValueGroupedDataset[Long, StreamEvent] = {
+    import events.sparkSession.implicits._
     val stepSet = steps.toSet
-    val ttlMs = ttlHours * 3600000L
-    events
-      .withWatermark("ts", lateness)
-      .filter(e => stepSet.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, Conversion](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, it: Iterator[StreamEvent], state: GroupState[FunnelState]) =>
-          // dormancy eviction: a user with no funnel-step activity for
-          // ttlHours of EVENT time is dropped — the key set stays O(active
-          // users), not O(all users ever seen). A re-admitted user starts
-          // the funnel from scratch (their stale prefix is gone), and a
-          // CONVERTED user's replay-dedup guarantee holds for ttlHours
-          // after conversion (a replay arriving later than that would
-          // re-run the funnel — by then it is watermark-late anyway).
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          var s = state.getOption.getOrElse(FunnelState(Nil, done = false))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Conversion]
-          // ts ties break by step index: a step sorts AFTER its predecessor
-          // at the same timestamp, matching the batch ev_funnel's
-          // at-or-after (>=) chain deterministically — (ts, user_id) alone
-          // leaves same-user equal-ts events in shuffle order, and a step
-          // sorted before its predecessor would be dropped forever.
-          var lastMs = Long.MinValue
-          // full-µs ordering + at-or-after chain: the batch twin compares
-          // true event time, so a same-ms/different-µs step pair must
-          // resolve by µs here too (state times are epoch-µs)
-          it.toSeq.sortBy(e => (usOf(e.ts), steps.indexOf(e.event_type))).foreach { e =>
-            lastMs = math.max(lastMs, e.ts.getTime)
-            if (!s.done) {
-              val idx = s.times.length
-              if (idx < steps.length && e.event_type == steps(idx) &&
-                (s.times.isEmpty || usOf(e.ts) >= s.times.last)) {
-                s = s.copy(times = s.times :+ usOf(e.ts))
-                if (s.times.length == steps.length) {
-                  s = s.copy(done = true)
-                  out += Conversion(uid, tsOfUs(s.times.head),
-                    tsOfUs(s.times.last), (s.times.last - s.times.head) / 1000L)
-                }
-              }
-            }
-          }
-          state.update(s)
-          state.setTimeoutTimestamp(
-            math.max(lastMs, state.getCurrentWatermarkMs() + 1L) + ttlMs)
-          out.iterator
-          }
-      }
+    watermarked(events.filter(e => stepSet.contains(e.event_type)), lateness)(_.user_id)
   }
 
   /** [[funnel]] on `transformWithState` — the port that exercises the
     * THIRD typed state primitive: step times live in a TWS
     * `ListState[Long]` (append-only per landed step — RocksDB appends an
     * entry instead of re-serializing the whole sequence, the same
-    * per-entry win [[BitmapDistinctProcessor]] gets from `MapState`),
+    * per-entry win [[Rules.BitmapDistinctProcessor]] gets from `MapState`),
     * the done flag in a `ValueState[Boolean]`, and the dormancy TTL on
     * an engine event-time timer re-armed at last-activity + TTL (the
     * one-timer-per-key pattern) whose expiry clears all three state
@@ -496,13 +381,9 @@ object StreamOps {
       lateness: String = "1 hour",
       ttlHours: Long = 2160L): Dataset[Conversion] = {
     import events.sparkSession.implicits._
-    val stepSet = steps.toSet
-    events
-      .withWatermark("ts", lateness)
-      .filter(e => stepSet.contains(e.event_type))
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelProcessor(steps, ttlHours * 3600000L),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+    funnelSteps(events, steps, lateness).transformWithState(
+      new TimedProcessor(new FunnelRule(steps, ttlHours * 3600000L), funnelStore),
+      TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming event-time disorder monitor — the live twin of the batch
@@ -515,28 +396,9 @@ object StreamOps {
     * the same (ts, user) sort the other stateful ops use. */
   def latenessMonitor(events: Dataset[StreamEvent]): Dataset[LatenessProfile] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[LateState, LatenessProfile](GroupStateTimeout.NoTimeout()) {
-        (typ: String, it: Iterator[StreamEvent], state: GroupState[LateState]) =>
-          var s = state.getOption.getOrElse(LateState(0L, 0L, 0L, Long.MinValue))
-          it.toSeq.sortBy(e => (usOf(e.ts), e.user_id)).foreach { e =>
-            val t = e.ts.getTime
-            if (t < s.runmax)
-              s = s.copy(n = s.n + 1, nLate = s.nLate + 1,
-                maxLateMs = math.max(s.maxLateMs, s.runmax - t))
-            else s = s.copy(n = s.n + 1, runmax = t)
-          }
-          state.update(s)
-          // HALF_UP to 4 places — the SAME rounding as the batch ev_lateness
-          // audit's round(...,4), so the two profiles agree on identical
-          // data (floor here could sit one 1e-4 step below the batch row).
-          LatenessProfile(typ, s.n, s.nLate,
-            if (s.n == 0) 0.0
-            else java.math.BigDecimal.valueOf(s.nLate.toDouble / s.n)
-              .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue(),
-            s.maxLateMs)
-      }
+    events.groupByKey(_.event_type)
+      .mapGroupsWithState[LateState, LatenessProfile](
+        GroupStateTimeout.NoTimeout())(group(LatenessRule))
   }
 
   /** Streaming heavy hitters per event type (Misra–Gries): keyed state
@@ -553,22 +415,9 @@ object StreamOps {
     * (count desc, user asc). */
   def heavyHitters(events: Dataset[StreamEvent], k: Int = 8): Dataset[HeavyHittersProfile] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[HhState, HeavyHittersProfile](GroupStateTimeout.NoTimeout()) {
-        (typ: String, it: Iterator[StreamEvent], state: GroupState[HhState]) =>
-          var s = state.getOption.getOrElse(HhState(0L, Map.empty))
-          var counters = s.counters
-          var n = s.n
-          it.toSeq.sortBy(e => (usOf(e.ts), e.user_id)).foreach { e =>
-            n += 1
-            counters = StreamOps.mgUpdate(counters, k, e.user_id)
-          }
-          s = HhState(n, counters)
-          state.update(s)
-          val sorted = counters.toSeq.sortBy { case (u, c) => (-c, u) }
-          HeavyHittersProfile(typ, n, sorted.map(_._1), sorted.map(_._2))
-      }
+    events.groupByKey(_.event_type)
+      .mapGroupsWithState[HhState, HeavyHittersProfile](
+        GroupStateTimeout.NoTimeout())(group(new HeavyHitterRule(k)))
   }
 
   /** [[heavyHitters]] on Spark 4's `transformWithState` — the Misra–Gries
@@ -584,10 +433,9 @@ object StreamOps {
     * split on RocksDB. */
   def heavyHittersTws(events: Dataset[StreamEvent], k: Int = 8): Dataset[HeavyHittersProfile] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .transformWithState(new HeavyHittersProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+    events.groupByKey(_.event_type).transformWithState(
+      new RuleProcessor(new HeavyHitterRule(k), heavyHitterStore),
+      TimeMode.None(), OutputMode.Update())
   }
 
   /** One Misra–Gries counter update — the whole algorithm, exposed so a
@@ -623,17 +471,20 @@ object StreamOps {
   def countMinStream(events: Dataset[StreamEvent], depth: Int = 4,
       width: Int = 512): Dataset[CmRowState] = {
     import events.sparkSession.implicits._
+    cmRows(events, depth, width)
+      .mapGroupsWithState[Map[Int, Long], CmRowState](
+        GroupStateTimeout.NoTimeout())(group(countMinRow))
+  }
+
+  /** The Count-Min keyed input: each event's (row j, bucket) pair per hash
+    * row, the row-salted [[hash31]] of the batch sketch, grouped by row. */
+  private def cmRows(events: Dataset[StreamEvent], depth: Int,
+      width: Int): KeyValueGroupedDataset[Int, (Int, Int)] = {
+    import events.sparkSession.implicits._
     events
       .flatMap(e => (0 until depth).map(j =>
         (j, (StreamOps.hash31(s"$j:${e.user_id}") % width).toInt)))
       .groupByKey(_._1)
-      .mapGroupsWithState[Map[Int, Long], CmRowState](GroupStateTimeout.NoTimeout()) {
-        (j: Int, it: Iterator[(Int, Int)], state: GroupState[Map[Int, Long]]) =>
-          var m = state.getOption.getOrElse(Map.empty[Int, Long])
-          it.foreach { case (_, b) => m = m.updated(b, m.getOrElse(b, 0L) + 1L) }
-          state.update(m)
-          CmRowState(j, m)
-      }
   }
 
   /** Streaming last-touch attribution — the in-flight twin of the batch
@@ -655,42 +506,9 @@ object StreamOps {
       lookbackHours: Int = 24,
       lateness: String = "1 hour"): Dataset[Attribution] = {
     import events.sparkSession.implicits._
-    val horizonUs = lookbackHours * 3600L * 1000000L
-    val horizonMs = lookbackHours * 3600000L
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TouchState, Attribution](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, it: Iterator[ChangeEvent], state: GroupState[TouchState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          var s = state.getOption.getOrElse(TouchState(None, None))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Attribution]
-          var lastMs = Long.MinValue
-          it.toSeq.sortBy(e => (usOf(e.ts), e.event_id)).foreach { e =>
-            val us = usOf(e.ts)
-            lastMs = math.max(lastMs, e.ts.getTime)
-            e.event_type match {
-              case "click" => s = s.copy(lastClickUs = Some(us))
-              case "view" => s = s.copy(lastViewUs = Some(us))
-              case "purchase" =>
-                val channel = s match {
-                  case TouchState(Some(c), v) if us - c <= horizonUs &&
-                    v.forall(c >= _) => "click"
-                  case TouchState(_, Some(v)) if us - v <= horizonUs => "view"
-                  case _ => "none"
-                }
-                out += Attribution(uid, e.event_id, channel)
-              case _ => ()
-            }
-          }
-          state.update(s)
-          state.setTimeoutTimestamp(
-            math.max(lastMs, state.getCurrentWatermarkMs() + 1L) + horizonMs)
-          out.iterator
-          }
-      }
+    watermarked(events, lateness)(_.user_id)
+      .flatMapGroupsWithState[TouchState, Attribution](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(timedGroups(new TouchRule(lookbackHours)))
   }
 
   /** [[attributionStream]] on Spark 4's `transformWithState` — last-touch
@@ -706,11 +524,10 @@ object StreamOps {
       lookbackHours: Int = 24,
       lateness: String = "1 hour"): Dataset[Attribution] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .transformWithState(new AttributionProcessor(lookbackHours),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+    watermarked(events, lateness)(_.user_id).transformWithState(
+      new TimedProcessor(new TouchRule(lookbackHours),
+        KeyRule.value("touch", Encoders.product[TouchState])),
+      TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming SCD-2 compaction — the in-flight twin of the batch
@@ -738,69 +555,30 @@ object StreamOps {
       lateness: String = "1 hour",
       ttlHours: Long = 2160L): Dataset[Scd2Interval] = {
     import events.sparkSession.implicits._
-    val ttlMs = ttlHours * 3600000L
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Scd2State, Scd2Interval](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, it: Iterator[ChangeEvent], state: GroupState[Scd2State]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator(Scd2Interval(uid, st.version, st.status, st.n, st.from, st.last))
-          } else {
-          var s = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Interval]
-          var lastMs = Long.MinValue
-          // µs sort (batch window orders by true-µs ts, then event_id);
-          // the emitted interval bounds stay at second granularity
-          it.toSeq.sortBy(e => (usOf(e.ts), e.event_id)).foreach { e =>
-            val t = usOf(e.ts) / 1000000L
-            lastMs = math.max(lastMs, e.ts.getTime)
-            s match {
-              case null =>
-                s = Scd2State(1L, e.event_type, 1L, t, t)
-              case st if st.status == e.event_type =>
-                s = st.copy(n = st.n + 1, last = math.max(st.last, t))
-              case st =>
-                out += Scd2Interval(uid, st.version, st.status, st.n, st.from, t)
-                s = Scd2State(st.version + 1L, e.event_type, 1L, t, t)
-            }
-          }
-          if (s != null) {
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(lastMs, state.getCurrentWatermarkMs() + 1L) + ttlMs)
-          }
-          out.iterator
-          }
-      }
+    watermarked(events, lateness)(_.user_id)
+      .flatMapGroupsWithState[Scd2State, Scd2Interval](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(timedGroups(new Scd2Rule(ttlHours * 3600000L)))
   }
 
   /** Gap sessionization on Spark 4's `transformWithState` with EVENT-TIME
-    * TIMERS — the reference-identity stateful op ([[sessionize]]) ported
-    * to the modern API, closing the fMGWS-only gap the funnel/SCD-2/OHLC/
-    * bitmap/transition twins already closed: session state is ONE
-    * `ValueState` per user (n, sum, start-µs, last-µs) and the close is an
-    * engine-managed event-time timer armed at the LAST instant any event
-    * could still merge under the batch floor-second gap rule,
-    * (⌊last⌋ + gap + 1) s — exactly [[sessionize]]'s
-    * `setTimeoutTimestamp` instant, now re-armed via the
-    * [[Scd2Processor]] one-timer-per-key delete/register pattern. Same
-    * semantics contract: µs-sorted intra-batch fold, floor-second gap
-    * compare (a raw-ms gap would split sessions the batch merges), closed
-    * sessions in append mode with full-µs boundaries. Timers live in the
-    * checkpointed RocksDB store, so a close armed before a shutdown fires
-    * after the restart — the spec drives exactly that. */
+    * TIMERS — [[sessionize]]'s rule with session state as ONE
+    * `ValueState` per user (n, sum, start-µs, last-µs) and the close on an
+    * engine-managed event-time timer ([[OneTimer]]) armed at the LAST
+    * instant any event could still merge under the batch floor-second gap
+    * rule, (⌊last⌋ + gap + 1) s — exactly [[sessionize]]'s
+    * `setTimeoutTimestamp` instant. Same semantics contract: µs-sorted
+    * intra-batch fold, floor-second gap compare (a raw-ms gap would split
+    * sessions the batch merges), closed sessions in append mode with
+    * full-µs boundaries. Timers live in the checkpointed RocksDB store, so
+    * a close armed before a shutdown fires after the restart — the spec
+    * drives exactly that. */
   def sessionizeTws(events: Dataset[StreamEvent], gapSec: Long = 1800L,
       lateness: String = "30 minutes"): Dataset[Session] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapSec),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+    watermarked(events, lateness)(_.user_id).transformWithState(
+      new TimedProcessor(new SessionRule(gapSec),
+        KeyRule.value("session", Encoders.product[SessionState])),
+      TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** SCD-2 compaction on Spark 4's `transformWithState` with EVENT-TIME
@@ -813,19 +591,16 @@ object StreamOps {
     * calls `handleExpiredTimer`, which emits the open interval closed at
     * its last observed second and clears the state. Timers live in the
     * checkpointed RocksDB store, so a flush armed before a shutdown fires
-    * after the restart — the spec drives exactly that. Completes the
-    * modern-API migration story [[transitionStreamTws]] started: that twin
-    * proved TTL, this one proves TIMERS (the dimension SCD-2 actually
-    * needs). Requires the RocksDB state-store provider. */
+    * after the restart — the spec drives exactly that. Requires the
+    * RocksDB state-store provider. */
   def scd2StreamTws(events: Dataset[ChangeEvent],
       lateness: String = "1 hour",
       ttlHours: Long = 2160L): Dataset[Scd2Interval] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .transformWithState(new Scd2Processor(ttlHours * 3600000L),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+    watermarked(events, lateness)(_.user_id).transformWithState(
+      new TimedProcessor(new Scd2Rule(ttlHours * 3600000L),
+        KeyRule.value("open", Encoders.product[Scd2State])),
+      TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming 4-tap EWMA smoothing — the in-flight twin of the batch
@@ -840,40 +615,9 @@ object StreamOps {
     * the batch row, pinned by the parity spec across a mid-stream split. */
   def ewmaStream(events: Dataset[StreamEvent]): Dataset[EwmaPoint] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[Seq[(Long, Long)], EwmaPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (et: String, it: Iterator[StreamEvent], state: GroupState[Seq[(Long, Long)]]) =>
-          var taps = state.getOption.getOrElse(Seq.empty) // ascending (hourSec, cnt)
-          val touched = scala.collection.mutable.LinkedHashSet.empty[Long]
-          it.toSeq.sortBy(e => usOf(e.ts)).foreach { e =>
-            val hour = e.ts.getTime / 3600000L * 3600L
-            touched += hour
-            taps.indexWhere(_._1 == hour) match {
-              case -1 => taps = (taps :+ (hour, 1L)).sortBy(_._1)
-              case i  => taps = taps.updated(i, (hour, taps(i)._2 + 1L))
-            }
-          }
-          // emissions read the UNpruned in-batch list (an early hour in a
-          // multi-hour batch still sees its own predecessors); only the
-          // carried state trims to the 4 taps any FUTURE hour can reach.
-          // LATE-DATA CONTRACT: an event for an hour older than the carried
-          // 4-tap horizon re-opens that hour with a fresh count — its
-          // already-trimmed predecessors read as 0, so the re-emitted bar
-          // under-weights history rather than crashing or double-counting.
-          // Feeds that can be late beyond the horizon must gate upstream
-          // with a watermark (the parity spec feeds per-key in-order).
-          state.update(taps.takeRight(4))
-          val byHour = taps.map(_._1).zipWithIndex.toMap
-          touched.iterator.flatMap { h =>
-            byHour.get(h).map { i =>
-              def tap(k: Int): Long = if (i - k >= 0) taps(i - k)._2 else 0L
-              EwmaPoint(et, h, taps(i)._2,
-                tap(0) * 8 + tap(1) * 4 + tap(2) * 2 + tap(3))
-            }
-          }
-      }
+    events.groupByKey(_.event_type)
+      .flatMapGroupsWithState[Seq[(Long, Long)], EwmaPoint](OutputMode.Append(),
+        GroupStateTimeout.NoTimeout())(groups(EwmaRule))
   }
 
   /** Streaming OHLC bars — the in-flight twin of the batch
@@ -893,9 +637,8 @@ object StreamOps {
     *
     * BEHAVIOR CONTRACT (eviction's two visible consequences — shared with
     * [[bitmapDistinctStream]]): (1) the watermark DROPS late ticks — an
-    * event later than `lateness` never reaches the state (the pre-r10
-    * timeout-free form counted it), so pick a lateness that covers the
-    * source's real disorder (`ev_watermark_recommend` measures it);
+    * event later than `lateness` never reaches the state, so pick a
+    * lateness that covers the source's real disorder (`ev_watermark_recommend` measures it);
     * (2) append output re-emits the FINAL bar from the eviction timer
     * even when a refreshed emission for the same hour already went out —
     * consumers must keep the LATEST emission per hour_ts (the parity
@@ -903,62 +646,23 @@ object StreamOps {
   def ohlcStream(ticks: Dataset[Tick],
       lateness: String = "1 hour"): Dataset[OhlcBar] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .withWatermark("ts", lateness)
-      .groupByKey(t => t.ts.getTime / 3600000L * 3600L)
-      .flatMapGroupsWithState[OhlcState, OhlcBar](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (hour: Long, it: Iterator[Tick], state: GroupState[OhlcState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator.single(OhlcBar(hour, st.n, st.open, st.high, st.low, st.close, st.vol))
-          } else {
-          var s = state.getOption.orNull
-          it.foreach { t =>
-            val us = usOf(t.ts)
-            val cents = math.floor(t.value * 100 + 0.5).toLong
-            s = if (s == null)
-              OhlcState(us, t.event_id, cents, cents, cents, us, t.event_id, cents, 1L, cents)
-            else {
-              val earlier = us < s.openUs || (us == s.openUs && t.event_id < s.openId)
-              val later = us > s.closeUs || (us == s.closeUs && t.event_id > s.closeId)
-              val o = if (earlier) (us, t.event_id, cents) else (s.openUs, s.openId, s.open)
-              val c = if (later) (us, t.event_id, cents) else (s.closeUs, s.closeId, s.close)
-              OhlcState(o._1, o._2, o._3, math.max(s.high, cents), math.min(s.low, cents),
-                c._1, c._2, c._3, s.n + 1L, s.vol + cents)
-            }
-          }
-          if (s == null) Iterator.empty
-          else {
-            state.update(s)
-            // close-and-drop: finalize when the watermark passes hour end
-            state.setTimeoutTimestamp(math.max((hour + 3600L) * 1000L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator.single(OhlcBar(hour, s.n, s.open, s.high, s.low, s.close, s.vol))
-          }
-          }
-      }
+    watermarked(ticks, lateness)(t => t.ts.getTime / 3600000L * 3600L)
+      .flatMapGroupsWithState[OhlcState, OhlcBar](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(timedGroups(OhlcRule))
   }
 
-  /** [[ohlcStream]] on `transformWithState` — completing the modern-API
-    * migration on the last heavy legacy twin: per-hour bar state moves to
-    * a typed `ValueState[OhlcState]` with the SAME true-µs
-    * (ts, event_id) argmin/argmax open/close rule, and finalize-and-drop
-    * eviction rides an engine event-time TIMER re-armed at
-    * max(hour end, watermark + 1) (the [[Scd2Processor]] /
-    * [[BitmapDistinctProcessor]] one-timer-per-key pattern). Same
-    * behavior contract as the fMGWS form: late ticks beyond `lateness`
-    * drop; append output carries refreshed bars AND the timer's final
-    * emission — consumers keep the latest per hour. */
+  /** [[ohlcStream]] on `transformWithState`: the per-hour bar in a typed
+    * `ValueState[OhlcState]`, and finalize-and-drop on an engine
+    * event-time timer ([[OneTimer]]) at the same instant. Same behavior
+    * contract as the fMGWS form: late ticks beyond `lateness` drop; append
+    * output carries refreshed bars AND the timer's final emission —
+    * consumers keep the latest per hour. */
   def ohlcStreamTws(ticks: Dataset[Tick],
       lateness: String = "1 hour"): Dataset[OhlcBar] = {
     import ticks.sparkSession.implicits._
-    ticks
-      .withWatermark("ts", lateness)
-      .groupByKey(t => t.ts.getTime / 3600000L * 3600L)
-      .transformWithState(new OhlcProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+    watermarked(ticks, lateness)(t => t.ts.getTime / 3600000L * 3600L).transformWithState(
+      new TimedProcessor(OhlcRule, KeyRule.value("bar", Encoders.product[OhlcState])),
+      TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming schema-drift monitor — the in-flight twin of the batch
@@ -972,117 +676,86 @@ object StreamOps {
     * after a split feed the final profile equals the batch inventory. */
   def schemaInferStream(docs: DataFrame): Dataset[KeyShapeProfile] = {
     import docs.sparkSession.implicits._
-    graft.operators.Events.keyShapeRows(docs).as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Map[String, Long], KeyShapeProfile](GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[(String, String)], state: GroupState[Map[String, Long]]) =>
-          var m = state.getOption.getOrElse(Map.empty[String, Long])
-          it.foreach { case (_, t) => m = m.updated(t, m.getOrElse(t, 0L) + 1L) }
-          state.update(m)
-          KeyShapeProfile(key, m)
-      }
+    graft.operators.Events.keyShapeRows(docs).as[(String, String)].groupByKey(_._1)
+      .mapGroupsWithState[Map[String, Long], KeyShapeProfile](
+        GroupStateTimeout.NoTimeout())(group(keyShapes))
   }
-
-  // ---- transformWithState ports of the remaining legacy stateful ops ----
-  // With these, EVERY keyed stateful operator in the library has a
-  // modern-API twin, each parity-spec-pinned bit-for-bit against its fMGWS
-  // form on RocksDB: the full migration matrix, not a sampler. Sketches
-  // with per-entry state (HLL registers, quantile buckets, CM counters,
-  // JSON shapes) move to MapState — RocksDB writes only the entries a
-  // batch touches, the same per-entry win the bitmap port measured —
-  // while O(1) tuples stay in typed ValueStates.
 
   /** [[anomalies]] on `transformWithState`: Welford (n, mean, M2) in a
-    * typed `ValueState`, same (µs, user, value) fold and ≥ minN gate. */
+    * typed `ValueState`. */
   def anomaliesTws(events: Dataset[StreamEvent], minN: Long = 30,
-      zThreshold: Double = 3.0): Dataset[Anomaly] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new AnomalyProcessor(minN, zThreshold),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
+      zThreshold: Double = 3.0): Dataset[Anomaly] =
+    byType(events, new AnomalyRule(minN, zThreshold),
+      KeyRule.value("stats", Encoders.product[TypeStats]), OutputMode.Append())
+
+  /** The `…Tws` form of an untimed per-event-type rule: `events` grouped
+    * by type into a [[RuleProcessor]] over `store`. */
+  private def byType[S, O <: Product: TypeTag](events: Dataset[StreamEvent],
+      rule: KeyRule[String, StreamEvent, S, O], store: KeyRule.MkStore[S],
+      mode: OutputMode): Dataset[O] =
+    events.groupByKey(_.event_type)(Encoders.STRING).transformWithState(
+      new RuleProcessor(rule, store), TimeMode.None(), mode)(Encoders.product[O])
 
   /** [[distinctSketch]] on `transformWithState`: the k smallest hashes in
     * a typed `ValueState[KmvSketch]` (the sketch IS one value — k longs). */
   def distinctSketchTws(events: Dataset[StreamEvent],
-      k: Int = 64): Dataset[DistinctEstimate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new KmvProcessor(k),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
+      k: Int = 64): Dataset[DistinctEstimate] =
+    byType(events, new KmvRule(k), KeyRule.value("kmv", Encoders.product[KmvSketch]),
+      OutputMode.Update())
 
   /** [[hllSketch]] on `transformWithState`: the 64 registers in a
     * `MapState[bucket → rho]` — a batch writes only the registers it
     * RAISES (max-merge touches few once the sketch saturates), where the
     * fMGWS form re-serializes all 64 every batch. */
-  def hllSketchTws(events: Dataset[StreamEvent]): Dataset[HllEstimate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new HllProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
+  def hllSketchTws(events: Dataset[StreamEvent]): Dataset[HllEstimate] =
+    byType(events, HllRule, HllRule.store, OutputMode.Update())
 
   /** [[quantileSketch]] on `transformWithState`: the bucket→count map in a
     * `MapState` (per-bucket entries, count merge = per-entry add). */
-  def quantileSketchTws(events: Dataset[StreamEvent]): Dataset[QuantileEstimate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new QuantileProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
+  def quantileSketchTws(events: Dataset[StreamEvent]): Dataset[QuantileEstimate] =
+    byType(events, quantiles,
+      KeyRule.entries("buckets", Encoders.scalaLong, Encoders.scalaLong), OutputMode.Update())
 
   /** [[countMinStream]] on `transformWithState`: each hash row's counters
     * in a `MapState[bucket → count]` — bounded by the sketch width. */
   def countMinStreamTws(events: Dataset[StreamEvent], depth: Int = 4,
       width: Int = 512): Dataset[CmRowState] = {
     import events.sparkSession.implicits._
-    events
-      .flatMap(e => (0 until depth).map(j =>
-        (j, (StreamOps.hash31(s"$j:${e.user_id}") % width).toInt)))
-      .groupByKey(_._1)
-      .transformWithState(new CountMinProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+    cmRows(events, depth, width).transformWithState(
+      new RuleProcessor(countMinRow,
+        KeyRule.entries("counters", Encoders.scalaInt, Encoders.scalaLong)),
+      TimeMode.None(), OutputMode.Update())
   }
 
   /** [[latenessMonitor]] on `transformWithState`: the O(1) lateness tuple
-    * in a typed `ValueState[LateState]`, same fold and HALF_UP finish. */
-  def latenessMonitorTws(events: Dataset[StreamEvent]): Dataset[LatenessProfile] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new LatenessProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-  }
+    * in a typed `ValueState[LateState]`. */
+  def latenessMonitorTws(events: Dataset[StreamEvent]): Dataset[LatenessProfile] =
+    byType(events, LatenessRule, KeyRule.value("late", Encoders.product[LateState]),
+      OutputMode.Update())
 
   /** [[ewmaStream]] on `transformWithState`: the ≤4 carried taps in a
-    * typed `ValueState` (trim-to-horizon semantics unchanged, including
-    * the documented late-data contract). */
-  def ewmaStreamTws(events: Dataset[StreamEvent]): Dataset[EwmaPoint] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.event_type)
-      .transformWithState(new EwmaProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
+    * typed `ValueState[EwmaTaps]`. */
+  def ewmaStreamTws(events: Dataset[StreamEvent]): Dataset[EwmaPoint] =
+    byType(events, EwmaRule, EwmaRule.store, OutputMode.Append())
 
   /** [[burstStream]] on `transformWithState`: the closed-hour moment
-    * triple + open hour in a typed `ValueState`, same integer 3σ rule. */
-  def burstStreamTws(events: Dataset[StreamEvent]): Dataset[BurstVerdict] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(_.event_type == "error")
-      .groupByKey(_.event_type)
-      .transformWithState(new BurstProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
+    * triple + open hour in a typed `ValueState`. */
+  def burstStreamTws(events: Dataset[StreamEvent]): Dataset[BurstVerdict] =
+    byType(errors(events), BurstRule, KeyRule.value("burst", Encoders.product[BurstState]),
+      OutputMode.Append())
+
+  /** The burst monitor's input: error events only. */
+  private def errors(events: Dataset[StreamEvent]): Dataset[StreamEvent] =
+    events.filter(_.event_type == "error")
 
   /** [[schemaInferStream]] on `transformWithState`: the shape→count map in
     * a `MapState` — a drifting key writes one entry, not its whole map. */
   def schemaInferStreamTws(docs: DataFrame): Dataset[KeyShapeProfile] = {
     import docs.sparkSession.implicits._
-    graft.operators.Events.keyShapeRows(docs).as[(String, String)]
-      .groupByKey(_._1)
-      .transformWithState(new SchemaInferProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+    graft.operators.Events.keyShapeRows(docs).as[(String, String)].groupByKey(_._1)
+      .transformWithState(new RuleProcessor(keyShapes,
+        KeyRule.entries("shapes", Encoders.STRING, Encoders.scalaLong)),
+        TimeMode.None(), OutputMode.Update())
   }
 
   /** Streaming error-burst monitor — the in-flight form of the batch
@@ -1098,30 +771,9 @@ object StreamOps {
     * fold locally and pins every closed-hour verdict. */
   def burstStream(events: Dataset[StreamEvent]): Dataset[BurstVerdict] = {
     import events.sparkSession.implicits._
-    events
-      .filter(_.event_type == "error")
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[BurstState, BurstVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, it: Iterator[StreamEvent], state: GroupState[BurstState]) =>
-          var s = state.getOption.getOrElse(BurstState(0L, 0L, 0L, -1L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[BurstVerdict]
-          def close(): Unit = if (s.openHour >= 0) {
-            val (n, x) = (s.n, s.openCnt)
-            val devN = n * x - s.s1
-            val burst = n > 0 && devN > 0 &&
-              devN * devN > 9L * (n * s.s2 - s.s1 * s.s1)
-            out += BurstVerdict(s.openHour, x, burst)
-            s = BurstState(n + 1, s.s1 + x, s.s2 + x * x, -1L, 0L)
-          }
-          it.toSeq.sortBy(e => usOf(e.ts)).foreach { e =>
-            val hour = e.ts.getTime / 3600000L * 3600L
-            if (hour != s.openHour) { close(); s = s.copy(openHour = hour, openCnt = 0L) }
-            s = s.copy(openCnt = s.openCnt + 1L)
-          }
-          state.update(s)
-          out.iterator
-      }
+    errors(events).groupByKey(_.event_type)
+      .flatMapGroupsWithState[BurstState, BurstVerdict](OutputMode.Append(),
+        GroupStateTimeout.NoTimeout())(groups(BurstRule))
   }
 
   /** Streaming DSIR scoring — ship-the-model for the text-selection
@@ -1255,7 +907,7 @@ object StreamOps {
     *     claims the digest and keeps its verdict, every later copy is
     *     emitted labeled `exact` (dropDuplicatesWithinWatermark would
     *     silently drop them; a funnel must account). Bounded state via
-    *     native TWS TTL, the [[TransitionProcessor]] dimension.
+    *     native TWS TTL, as [[transitionStreamTws]] uses.
     *  3. NEAR-DUP probe: each surviving doc fans out to 8 LSH bands
     *     (4 signature hashes each); [[BandClaimProcessor]] keyed by
     *     (band, band-hash) lets the first doc claim the bucket with its
@@ -1280,7 +932,7 @@ object StreamOps {
     val afterExact = funnelStagedDocs(docs, filterWords, bucketWeights, mBits)
       .groupByKey(_.digest)
       .transformWithState(new ExactClaimProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
+        TimeMode.ProcessingTime(),
         OutputMode.Append())
     afterExact
       .flatMap { d =>
@@ -1297,7 +949,7 @@ object StreamOps {
       }
       .groupByKey(r => (r.band, r.bkey))
       .transformWithState(new BandClaimProcessor(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
+        TimeMode.ProcessingTime(),
         OutputMode.Append())
   }
 
@@ -1315,54 +967,19 @@ object StreamOps {
   def cusumStream(events: Dataset[StreamEvent],
       refMeans: Map[String, Long]): Dataset[CusumPoint] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumState, CusumPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, it: Iterator[StreamEvent], state: GroupState[CusumState]) =>
-          val ref = refMeans.getOrElse(typ, 0L)
-          var s = state.getOption.orNull
-          def closeHour(): Unit = {
-            val p = s.p + s.cnt - ref
-            val runmin = math.min(s.runmin, p)
-            val drift = p - runmin
-            val (md, dh) =
-              if (drift > s.maxDrift) (drift, s.openHour)
-              else (s.maxDrift, s.driftHour)
-            s = CusumState(s.openHour, 0L, p, runmin, md, dh, s.nClosed + 1)
-          }
-          it.toSeq.sortBy(e => usOf(e.ts)).foreach { e =>
-            val h = e.ts.getTime / 3600000L
-            s match {
-              // maxDrift starts at −1 so the FIRST closed hour claims the
-              // all-zero-drift tie — the batch lexicographic [drift, −hour]
-              // max resolves the same way (earliest hour)
-              case null => s = CusumState(h, 1L, 0L, Long.MaxValue, -1L, -1L, 0L)
-              case st if h == st.openHour => s = st.copy(cnt = st.cnt + 1)
-              case _ =>
-                closeHour()
-                s = s.copy(openHour = h, cnt = 1L)
-            }
-          }
-          state.update(s)
-          Iterator.single(CusumPoint(typ, s.nClosed, s.maxDrift, s.driftHour))
-      }
+    events.groupByKey(_.event_type)
+      .flatMapGroupsWithState[CusumState, CusumPoint](OutputMode.Append(),
+        GroupStateTimeout.NoTimeout())(groups(new CusumRule(refMeans)))
   }
 
-  /** [[cusumStream]] on Spark 4's `transformWithState` — the CUSUM
-    * change-point monitor's 7-long state tuple in a typed `ValueState`,
-    * same hour-close fold and first-hour tie rule as the fMGWS form
-    * (re-implemented, parity-spec-pinned across a mid-stream split on
-    * RocksDB including an hour spanning the boundary). The modern-API
-    * migration row for the drift family. */
+  /** [[cusumStream]] on Spark 4's `transformWithState`: the CUSUM
+    * monitor's 7-long state tuple in a typed `ValueState`; the parity spec
+    * pins it across a mid-stream split on RocksDB, including an hour
+    * spanning the boundary. */
   def cusumStreamTws(events: Dataset[StreamEvent],
-      refMeans: Map[String, Long]): Dataset[CusumPoint] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .transformWithState(new CusumProcessor(refMeans),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-  }
+      refMeans: Map[String, Long]): Dataset[CusumPoint] =
+    byType(events, new CusumRule(refMeans),
+      KeyRule.value("cusum", Encoders.product[CusumState]), OutputMode.Append())
 
   /** Native bounded-state streaming dedup — Spark's
     * `dropDuplicatesWithinWatermark`: duplicates of an event id arriving
@@ -1405,31 +1022,9 @@ object StreamOps {
   def bitmapDistinctStream(events: Dataset[StreamEvent],
       lateness: String = "1 hour"): Dataset[BitmapCell] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(e => (e.ts.getTime / 86400000L, e.event_type))
-      .flatMapGroupsWithState[Map[Long, Long], BitmapCell](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Long, String), it: Iterator[StreamEvent],
-         state: GroupState[Map[Long, Long]]) =>
-          if (state.hasTimedOut) {
-            val m = state.get
-            state.remove()
-            val distinct = m.valuesIterator.map(java.lang.Long.bitCount(_).toLong).sum
-            Iterator.single(BitmapCell(key._1, key._2, m.size.toLong, distinct))
-          } else {
-            var m = state.getOption.getOrElse(Map.empty[Long, Long])
-            it.foreach { e =>
-              val w = e.user_id / 62
-              m = m.updated(w, m.getOrElse(w, 0L) | (1L << (e.user_id % 62).toInt))
-            }
-            state.update(m)
-            state.setTimeoutTimestamp(math.max((key._1 + 1L) * 86400000L,
-              state.getCurrentWatermarkMs() + 1L))
-            val distinct = m.valuesIterator.map(java.lang.Long.bitCount(_).toLong).sum
-            Iterator.single(BitmapCell(key._1, key._2, m.size.toLong, distinct))
-          }
-      }
+    watermarked(events, lateness)(e => (e.ts.getTime / 86400000L, e.event_type))
+      .flatMapGroupsWithState[Map[Long, Long], BitmapCell](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(timedGroups(BitmapRule))
   }
 
   /** [[bitmapDistinctStream]] on Spark 4's `transformWithState` — the
@@ -1445,20 +1040,17 @@ object StreamOps {
     * a refreshed count never scans the map (the fMGWS twin popcounts the
     * full map per batch). Finalized-cell eviction keeps the fMGWS twin's
     * exact rule via an event-time TIMER re-armed at
-    * max(day end, watermark + 1) (the [[Scd2Processor]] one-timer-per-key
-    * pattern): when it fires, the cell emits its final count once more
-    * and ALL three state variables clear. Same behavior contract as
+    * max(day end, watermark + 1) ([[OneTimer]]): when it fires, the cell
+    * emits its final count once more and ALL three state variables clear. Same behavior contract as
     * [[bitmapDistinctStream]] (late events beyond `lateness` are dropped;
     * append output needs latest-emission-per-cell); parity + eviction +
     * checkpointed-restart specs pin it on RocksDB. */
   def bitmapDistinctStreamTws(events: Dataset[StreamEvent],
       lateness: String = "1 hour"): Dataset[BitmapCell] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(e => (e.ts.getTime / 86400000L, e.event_type))
+    watermarked(events, lateness)(e => (e.ts.getTime / 86400000L, e.event_type))
       .transformWithState(new BitmapDistinctProcessor(),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+        TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** Streaming gap-octave monitor — the in-flight twin of the batch
@@ -1499,11 +1091,9 @@ object StreamOps {
   def transitionStreamTws(events: Dataset[ChangeEvent],
       ttl: java.time.Duration = null): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    val mode = if (ttl == null) org.apache.spark.sql.streaming.TimeMode.None()
-      else org.apache.spark.sql.streaming.TimeMode.ProcessingTime()
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new TransitionProcessor(ttl), mode, OutputMode.Append())
+    events.groupByKey(_.user_id).transformWithState(
+      new RuleProcessor(new TransitionRule(), lastEvent(ttl)),
+      if (ttl == null) TimeMode.None() else TimeMode.ProcessingTime(), OutputMode.Append())
   }
 
   /** STATE-EVOLUTION twin of [[transitionStreamTws]] — the processor a team
@@ -1522,10 +1112,9 @@ object StreamOps {
     * sequence: run V1 → stop → resume V2 on the same checkpoint. */
   def transitionStreamTwsV2(events: Dataset[ChangeEvent]): Dataset[TransitionV2] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new TransitionProcessorV2,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
+    events.groupByKey(_.user_id).transformWithState(
+      new RuleProcessor(TransitionV2Rule, KeyRule.value("last", Encoders.product[LastEventV2])),
+      TimeMode.None(), OutputMode.Append())
   }
 
   /** WARM-START twin of [[transitionStreamTws]] — the batch→streaming
@@ -1542,11 +1131,8 @@ object StreamOps {
   def transitionStreamTwsWarm(events: Dataset[ChangeEvent],
       snapshot: Dataset[UserLastEvent]): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new TransitionProcessorWarm,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append(),
-        snapshot.groupByKey(_.user_id))
+    events.groupByKey(_.user_id).transformWithState(new WarmTransitionProcessor,
+      TimeMode.None(), OutputMode.Append(), snapshot.groupByKey(_.user_id))
   }
 
   /** Streaming Markov-transition monitor — the in-flight twin of the batch
@@ -1569,35 +1155,9 @@ object StreamOps {
       lateness: String = "1 hour",
       ttlHours: Long = 2160L): Dataset[Transition] = {
     import events.sparkSession.implicits._
-    val ttlMs = ttlHours * 3600000L
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, Transition](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, it: Iterator[ChangeEvent], state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-          def us(e: ChangeEvent): Long = usOf(e.ts)
-          var s = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-          // full-µs tiebreak: the batch twin's lag window orders by
-          // (ts, event_id) at µs granularity; sorting on getTime (ms)
-          // would flip same-ms pairs whose id order differs from µs order
-          it.toSeq.sortBy(e => (us(e), e.event_id)).foreach { e =>
-            val t = us(e)
-            if (s != null)
-              out += Transition(uid, s.event_type, e.event_type, t - s.us)
-            s = LastEvent(e.event_type, t)
-          }
-          if (s != null) {
-            state.update(s)
-            state.setTimeoutTimestamp(
-              math.max(s.us / 1000L, state.getCurrentWatermarkMs() + 1L) + ttlMs)
-          }
-          out.iterator
-          }
-      }
+    watermarked(events, lateness)(_.user_id)
+      .flatMapGroupsWithState[LastEvent, Transition](OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout())(timedGroups(new TransitionRule(ttlHours * 3600000L)))
   }
 }
 
@@ -1621,111 +1181,9 @@ case class CusumPoint(event_type: String, n_hours: Long, max_drift: Long,
 case class Transition(user_id: Long, from_type: String, to_type: String,
     gap_us: Long)
 
-/** [[StreamOps.transitionStreamTws]]'s typed processor: per-user
-  * `ValueState[LastEvent]` on the new stateful API, with engine-enforced
-  * processing-time TTL so the key set never grows unbounded. */
-class TransitionProcessor(ttl: java.time.Duration = null)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, ChangeEvent, Transition] {
-  import org.apache.spark.sql.streaming.{TimerValues, TTLConfig, ValueState}
-  @transient private var last: ValueState[LastEvent] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    last = getHandle.getValueState[LastEvent]("last",
-      org.apache.spark.sql.Encoders.product[LastEvent],
-      if (ttl == null) TTLConfig.NONE else TTLConfig(ttl))
-
-  override def handleInputRows(uid: Long, rows: Iterator[ChangeEvent],
-      timers: TimerValues): Iterator[Transition] = {
-    def us(e: ChangeEvent): Long = StreamOps.usOf(e.ts)
-    var s = if (last.exists()) last.get() else null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-    // µs-granularity sort — must match the batch lag window's (ts, id)
-    // ordering exactly (getTime alone is ms-truncated)
-    rows.toSeq.sortBy(e => (us(e), e.event_id)).foreach { e =>
-      val t = us(e)
-      if (s != null) out += Transition(uid, s.event_type, e.event_type, t - s.us)
-      s = LastEvent(e.event_type, t)
-    }
-    last.update(s)
-    out.iterator
-  }
-}
-
 /** Last-seen event per user — O(1) state for
   * [[StreamOps.transitionStream]]. */
 private case class LastEvent(event_type: String, us: Long)
-
-/** [[StreamOps.transitionStreamTwsV2]]'s upgraded processor: identical
-  * transition semantics, but the state carries a per-user cumulative edge
-  * counter. Reads V1-written [[LastEvent]] rows through Avro schema
-  * evolution (the added field arrives as None) — the state-variable name
-  * ("last") and key type must match V1 exactly; only the value class
-  * evolves. */
-class TransitionProcessorV2
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, ChangeEvent, TransitionV2] {
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var last: ValueState[LastEventV2] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    last = getHandle.getValueState[LastEventV2]("last",
-      org.apache.spark.sql.Encoders.product[LastEventV2], TTLConfig.NONE)
-
-  override def handleInputRows(uid: Long, rows: Iterator[ChangeEvent],
-      timers: TimerValues): Iterator[TransitionV2] = {
-    def us(e: ChangeEvent): Long = StreamOps.usOf(e.ts)
-    var s = if (last.exists()) last.get() else null
-    val out = scala.collection.mutable.ArrayBuffer.empty[TransitionV2]
-    rows.toSeq.sortBy(e => (us(e), e.event_id)).foreach { e =>
-      val t = us(e)
-      if (s != null) {
-        // a V1-written value surfaces with n_edges = None: the counter
-        // begins at the upgrade, the chain itself is preserved
-        val n = s.n_edges.getOrElse(0L) + 1
-        out += TransitionV2(uid, s.event_type, e.event_type, t - s.us, n)
-        s = LastEventV2(e.event_type, t, Some(n))
-      } else s = LastEventV2(e.event_type, t, Some(0L))
-    }
-    last.update(s)
-    out.iterator
-  }
-}
-
-/** [[StreamOps.transitionStreamTwsWarm]]'s processor: [[TransitionProcessor]]
-  * semantics with the initial-state hook — each snapshot row seeds the
-  * user's `last` value before any streamed batch runs. Streamed rows that
-  * RACE the snapshot (same first batch) still order correctly because
-  * handleInitialState runs before handleInputRows for a key. */
-class TransitionProcessorWarm
-    extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-      Long, ChangeEvent, Transition, UserLastEvent] {
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var last: ValueState[LastEvent] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    last = getHandle.getValueState[LastEvent]("last",
-      org.apache.spark.sql.Encoders.product[LastEvent], TTLConfig.NONE)
-
-  override def handleInitialState(uid: Long, initial: UserLastEvent,
-      timers: TimerValues): Unit =
-    last.update(LastEvent(initial.event_type, initial.us))
-
-  override def handleInputRows(uid: Long, rows: Iterator[ChangeEvent],
-      timers: TimerValues): Iterator[Transition] = {
-    def us(e: ChangeEvent): Long = StreamOps.usOf(e.ts)
-    var s = if (last.exists()) last.get() else null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-    rows.toSeq.sortBy(e => (us(e), e.event_id)).foreach { e =>
-      val t = us(e)
-      if (s != null) out += Transition(uid, s.event_type, e.event_type, t - s.us)
-      s = LastEvent(e.event_type, t)
-    }
-    last.update(s)
-    out.iterator
-  }
-}
 
 /** One user's final batch-era event — the snapshot row type seeding
   * [[StreamOps.transitionStreamTwsWarm]]. */
@@ -1743,13 +1201,6 @@ private case class LastEventV2(event_type: String, us: Long,
 case class TransitionV2(user_id: Long, from_type: String, to_type: String,
     gap_us: Long, cum_edges: Long)
 
-/** [[StreamOps.scd2StreamTws]]'s typed processor: per-user
-  * `ValueState[Scd2State]` plus an event-time flush TIMER — the engine
-  * fires [[handleExpiredTimer]] when the watermark passes last-evidence +
-  * TTL, emitting the dormancy-flushed interval exactly like the fMGWS
-  * twin's `hasTimedOut` branch. One timer per key: each batch deletes the
-  * previously-armed instant (tracked in its own `ValueState`) before
-  * re-arming, so dormant keys carry exactly one pending flush. */
 /** [[StreamOps.ingestFunnelFullStream]]'s EXACT stage: keyed by the md5
   * text digest, the first arrival (in doc_id order within a batch — feed
   * order across batches) claims the digest and keeps its stateless
@@ -1758,8 +1209,8 @@ case class TransitionV2(user_id: Long, from_type: String, to_type: String,
   * dropped copies are emitted with their verdict instead of vanishing
   * (a funnel must account). Quality-failed docs pass through without
   * claiming (the batch funnel dedups quality survivors only). State is
-  * one long per live digest, TTL-bounded (native TWS TTL — the
-  * [[TransitionProcessor]] dimension). */
+  * one long per live digest, TTL-bounded (native TWS TTL, as
+  * [[StreamOps.transitionStreamTws]] uses). */
 class ExactClaimProcessor(ttl: java.time.Duration = null)
     extends org.apache.spark.sql.streaming.StatefulProcessor[String, StagedDoc, StagedDoc] {
   import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
@@ -1822,715 +1273,9 @@ class BandClaimProcessor(ttl: java.time.Duration = null)
   }
 }
 
-/** [[StreamOps.sessionizeTws]]'s typed processor: the gap session as one
-  * TWS `ValueState` per user plus the [[Scd2Processor]] one-timer-per-key
-  * close pattern — the timer re-arms at (⌊last-µs⌋ + gap + 1) s on every
-  * batch that touches the user, and fires (emitting the closed session and
-  * clearing the state) once the watermark proves no event can merge. */
-class SessionProcessor(gapSec: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, StreamEvent, Session] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimerValues, ValueState}
-  @transient private var cur: ValueState[SessionState] = _
-  @transient private var armedAt: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    cur = getHandle.getValueState[SessionState]("session",
-      org.apache.spark.sql.Encoders.product[SessionState], TTLConfig.NONE)
-    armedAt = getHandle.getValueState[Long]("armedAt",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(uid: Long, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[Session] = {
-    var s = if (cur.exists()) cur.get() else null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Session]
-    rows.toSeq.sortBy(e => StreamOps.usOf(e.ts)).foreach { e =>
-      val t = StreamOps.usOf(e.ts)
-      s match {
-        case null => s = SessionState(1L, e.value, t, t)
-        case st if Math.floorDiv(t, 1000000L) -
-            Math.floorDiv(st.last, 1000000L) <= gapSec =>
-          s = SessionState(st.n + 1, st.sum + e.value, st.start, math.max(st.last, t))
-        case st => // gap exceeded: close previous, open new
-          out += Session(uid, st.n, st.sum,
-            StreamOps.tsOfUs(st.start), StreamOps.tsOfUs(st.last))
-          s = SessionState(1L, e.value, t, t)
-      }
-    }
-    if (s != null) {
-      cur.update(s)
-      if (armedAt.exists()) getHandle.deleteTimer(armedAt.get())
-      val at = (Math.floorDiv(s.last, 1000000L) + gapSec + 1L) * 1000L
-      getHandle.registerTimer(at)
-      armedAt.update(at)
-    }
-    out.iterator
-  }
-
-  override def handleExpiredTimer(uid: Long, timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[Session] = {
-    if (!cur.exists()) { armedAt.clear(); Iterator.empty }
-    else {
-      val st = cur.get()
-      cur.clear()
-      armedAt.clear()
-      Iterator.single(Session(uid, st.n, st.sum,
-        StreamOps.tsOfUs(st.start), StreamOps.tsOfUs(st.last)))
-    }
-  }
-}
-
-class Scd2Processor(ttlMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, ChangeEvent, Scd2Interval] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TimerValues, TTLConfig, ValueState}
-  @transient private var open: ValueState[Scd2State] = _
-  @transient private var armedAt: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    open = getHandle.getValueState[Scd2State]("open",
-      org.apache.spark.sql.Encoders.product[Scd2State], TTLConfig.NONE)
-    armedAt = getHandle.getValueState[Long]("armedAt",
-      org.apache.spark.sql.Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(uid: Long, rows: Iterator[ChangeEvent],
-      timers: TimerValues): Iterator[Scd2Interval] = {
-    var s = if (open.exists()) open.get() else null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Interval]
-    var lastMs = Long.MinValue
-    // µs sort — the batch window orders by (true-µs ts, event_id)
-    rows.toSeq.sortBy(e => (StreamOps.usOf(e.ts), e.event_id)).foreach { e =>
-      val t = StreamOps.usOf(e.ts) / 1000000L
-      lastMs = math.max(lastMs, e.ts.getTime)
-      s match {
-        case null =>
-          s = Scd2State(1L, e.event_type, 1L, t, t)
-        case st if st.status == e.event_type =>
-          s = st.copy(n = st.n + 1, last = math.max(st.last, t))
-        case st =>
-          out += Scd2Interval(uid, st.version, st.status, st.n, st.from, t)
-          s = Scd2State(st.version + 1L, e.event_type, 1L, t, t)
-      }
-    }
-    if (s != null) {
-      open.update(s)
-      if (armedAt.exists()) getHandle.deleteTimer(armedAt.get())
-      val at = math.max(lastMs, timers.getCurrentWatermarkInMs() + 1L) + ttlMs
-      getHandle.registerTimer(at)
-      armedAt.update(at)
-    }
-    out.iterator
-  }
-
-  override def handleExpiredTimer(uid: Long, timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[Scd2Interval] = {
-    if (!open.exists()) { armedAt.clear(); Iterator.empty }
-    else {
-      val st = open.get()
-      open.clear()
-      armedAt.clear()
-      Iterator.single(Scd2Interval(uid, st.version, st.status, st.n, st.from, st.last))
-    }
-  }
-}
-
-/** [[StreamOps.bitmapDistinctStreamTws]]'s typed processor: the exact-
-  * distinct bitmap as a TWS `MapState[word → bits]` (per-word RocksDB
-  * entries — an update touches only its word), incrementally-maintained
-  * (n_words, distinct) counters in a `ValueState` (emissions never scan
-  * the map), and the [[Scd2Processor]] one-timer-per-key eviction pattern
-  * firing at max(day end, watermark + 1). */
-class BitmapDistinctProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[(Long, String), StreamEvent, BitmapCell] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, TTLConfig, TimerValues, ValueState}
-  @transient private var words: MapState[Long, Long] = _
-  @transient private var counts: ValueState[(Long, Long)] = _
-  @transient private var armedAt: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    words = getHandle.getMapState[Long, Long]("words",
-      Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-    counts = getHandle.getValueState[(Long, Long)]("counts",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-    armedAt = getHandle.getValueState[Long]("armedAt",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(key: (Long, String), rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[BitmapCell] = {
-    var (nw, dist) = if (counts.exists()) counts.get() else (0L, 0L)
-    rows.foreach { e =>
-      val w = e.user_id / 62
-      val bit = 1L << (e.user_id % 62).toInt
-      if (words.containsKey(w)) {
-        val cur = words.getValue(w)
-        if ((cur & bit) == 0L) { words.updateValue(w, cur | bit); dist += 1 }
-      } else { words.updateValue(w, bit); nw += 1; dist += 1 }
-    }
-    counts.update((nw, dist))
-    if (armedAt.exists()) getHandle.deleteTimer(armedAt.get())
-    val at = math.max((key._1 + 1L) * 86400000L,
-      timers.getCurrentWatermarkInMs() + 1L)
-    getHandle.registerTimer(at)
-    armedAt.update(at)
-    Iterator.single(BitmapCell(key._1, key._2, nw, dist))
-  }
-
-  override def handleExpiredTimer(key: (Long, String), timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[BitmapCell] = {
-    if (!counts.exists()) { armedAt.clear(); words.clear(); Iterator.empty }
-    else {
-      val (nw, dist) = counts.get()
-      words.clear(); counts.clear(); armedAt.clear()
-      Iterator.single(BitmapCell(key._1, key._2, nw, dist))
-    }
-  }
-}
-
-/** [[StreamOps.ohlcStreamTws]]'s typed processor: the hourly bar in a
-  * `ValueState[OhlcState]` (true-µs + event_id argmin/argmax open/close
-  * keys carried in the state, exactly like the fMGWS twin) with the
-  * one-timer-per-key finalize-and-drop eviction pattern. */
-class OhlcProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Tick, OhlcBar] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimerValues, ValueState}
-  @transient private var bar: ValueState[OhlcState] = _
-  @transient private var armedAt: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    bar = getHandle.getValueState[OhlcState]("bar",
-      Encoders.product[OhlcState], TTLConfig.NONE)
-    armedAt = getHandle.getValueState[Long]("armedAt",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(hour: Long, rows: Iterator[Tick],
-      timers: TimerValues): Iterator[OhlcBar] = {
-    var s = if (bar.exists()) bar.get() else null
-    rows.foreach { t =>
-      val us = StreamOps.usOf(t.ts)
-      val cents = math.floor(t.value * 100 + 0.5).toLong
-      s = if (s == null)
-        OhlcState(us, t.event_id, cents, cents, cents, us, t.event_id, cents, 1L, cents)
-      else {
-        val earlier = us < s.openUs || (us == s.openUs && t.event_id < s.openId)
-        val later = us > s.closeUs || (us == s.closeUs && t.event_id > s.closeId)
-        val o = if (earlier) (us, t.event_id, cents) else (s.openUs, s.openId, s.open)
-        val c = if (later) (us, t.event_id, cents) else (s.closeUs, s.closeId, s.close)
-        OhlcState(o._1, o._2, o._3, math.max(s.high, cents), math.min(s.low, cents),
-          c._1, c._2, c._3, s.n + 1L, s.vol + cents)
-      }
-    }
-    if (s == null) Iterator.empty
-    else {
-      bar.update(s)
-      if (armedAt.exists()) getHandle.deleteTimer(armedAt.get())
-      val at = math.max((hour + 3600L) * 1000L,
-        timers.getCurrentWatermarkInMs() + 1L)
-      getHandle.registerTimer(at)
-      armedAt.update(at)
-      Iterator.single(OhlcBar(hour, s.n, s.open, s.high, s.low, s.close, s.vol))
-    }
-  }
-
-  override def handleExpiredTimer(hour: Long, timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[OhlcBar] = {
-    if (!bar.exists()) { armedAt.clear(); Iterator.empty }
-    else {
-      val st = bar.get()
-      bar.clear(); armedAt.clear()
-      Iterator.single(OhlcBar(hour, st.n, st.open, st.high, st.low, st.close, st.vol))
-    }
-  }
-}
-
-/** [[StreamOps.funnelTws]]'s typed processor: step times in an
-  * append-only `ListState[Long]`, the done flag in a `ValueState`, and
-  * the dormancy TTL on an engine event-time timer (one per key) whose
-  * expiry clears everything — the ListState showcase beside
-  * [[Scd2Processor]]'s ValueState+timer and
-  * [[BitmapDistinctProcessor]]'s MapState. */
-class FunnelProcessor(steps: Seq[String], ttlMs: Long)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, StreamEvent, Conversion] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, TTLConfig, TimerValues, ValueState}
-  @transient private var times: ListState[Long] = _
-  @transient private var done: ValueState[Boolean] = _
-  @transient private var armedAt: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    times = getHandle.getListState[Long]("times",
-      Encoders.scalaLong, TTLConfig.NONE)
-    done = getHandle.getValueState[Boolean]("done",
-      Encoders.scalaBoolean, TTLConfig.NONE)
-    armedAt = getHandle.getValueState[Long]("armedAt",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(uid: Long, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[Conversion] = {
-    var ts = times.get().toSeq
-    var isDone = done.exists() && done.get()
-    val out = scala.collection.mutable.ArrayBuffer.empty[Conversion]
-    var lastMs = Long.MinValue
-    // same true-µs + step-index ordering and at-or-after chain as the
-    // fMGWS twin (ties: a step sorts AFTER its predecessor)
-    rows.toSeq.sortBy(e => (StreamOps.usOf(e.ts), steps.indexOf(e.event_type)))
-      .foreach { e =>
-        lastMs = math.max(lastMs, e.ts.getTime)
-        if (!isDone) {
-          val idx = ts.length
-          val us = StreamOps.usOf(e.ts)
-          if (idx < steps.length && e.event_type == steps(idx) &&
-            (ts.isEmpty || us >= ts.last)) {
-            times.appendValue(us) // per-entry append, not a re-serialize
-            ts = ts :+ us
-            if (ts.length == steps.length) {
-              isDone = true
-              out += Conversion(uid, StreamOps.tsOfUs(ts.head),
-                StreamOps.tsOfUs(ts.last), (ts.last - ts.head) / 1000L)
-            }
-          }
-        }
-      }
-    done.update(isDone)
-    if (armedAt.exists()) getHandle.deleteTimer(armedAt.get())
-    val at = math.max(lastMs, timers.getCurrentWatermarkInMs() + 1L) + ttlMs
-    getHandle.registerTimer(at)
-    armedAt.update(at)
-    out.iterator
-  }
-
-  override def handleExpiredTimer(uid: Long, timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[Conversion] = {
-    times.clear(); done.clear(); armedAt.clear()
-    Iterator.empty
-  }
-}
-
-/** [[StreamOps.attributionStreamTws]]'s typed processor: the (last click,
-  * last view) µs pair in a `ValueState[TouchState]`, horizon eviction on
-  * an engine event-time timer (armed exactly where the fMGWS twin set its
-  * timeout — max(last event, watermark + 1) + lookback). */
-class AttributionProcessor(lookbackHours: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Long, ChangeEvent, Attribution] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, TTLConfig, TimerValues, ValueState}
-  private val horizonUs = lookbackHours * 3600L * 1000000L
-  private val horizonMs = lookbackHours * 3600000L
-  @transient private var touch: ValueState[TouchState] = _
-  @transient private var armedAt: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    touch = getHandle.getValueState[TouchState]("touch",
-      Encoders.product[TouchState], TTLConfig.NONE)
-    armedAt = getHandle.getValueState[Long]("armedAt",
-      Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(uid: Long, rows: Iterator[ChangeEvent],
-      timers: TimerValues): Iterator[Attribution] = {
-    var s = if (touch.exists()) touch.get() else TouchState(None, None)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Attribution]
-    var lastMs = Long.MinValue
-    rows.toSeq.sortBy(e => (StreamOps.usOf(e.ts), e.event_id)).foreach { e =>
-      val us = StreamOps.usOf(e.ts)
-      lastMs = math.max(lastMs, e.ts.getTime)
-      e.event_type match {
-        case "click" => s = s.copy(lastClickUs = Some(us))
-        case "view" => s = s.copy(lastViewUs = Some(us))
-        case "purchase" =>
-          val channel = s match {
-            case TouchState(Some(c), v) if us - c <= horizonUs &&
-              v.forall(c >= _) => "click"
-            case TouchState(_, Some(v)) if us - v <= horizonUs => "view"
-            case _ => "none"
-          }
-          out += Attribution(uid, e.event_id, channel)
-        case _ => ()
-      }
-    }
-    touch.update(s)
-    if (armedAt.exists()) getHandle.deleteTimer(armedAt.get())
-    val at = math.max(lastMs, timers.getCurrentWatermarkInMs() + 1L) + horizonMs
-    getHandle.registerTimer(at)
-    armedAt.update(at)
-    out.iterator
-  }
-
-  override def handleExpiredTimer(uid: Long, timers: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[Attribution] = {
-    touch.clear(); armedAt.clear()
-    Iterator.empty
-  }
-}
-
-/** [[StreamOps.anomaliesTws]]'s typed processor: Welford moments in one
-  * `ValueState[TypeStats]`, emission before fold exactly as the fMGWS twin. */
-class AnomalyProcessor(minN: Long, zThreshold: Double)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, Anomaly] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var st: ValueState[TypeStats] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    st = getHandle.getValueState[TypeStats]("stats",
-      Encoders.product[TypeStats], TTLConfig.NONE)
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[Anomaly] = {
-    var s = if (st.exists()) st.get() else TypeStats(0L, 0.0, 0.0)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Anomaly]
-    rows.toSeq.sortBy(e => (StreamOps.usOf(e.ts), e.user_id, e.value)).foreach { e =>
-      if (s.n >= minN) {
-        val sd = math.sqrt(s.m2 / (s.n - 1).toDouble)
-        if (sd > 0) {
-          val z = (e.value - s.mean) / sd
-          if (math.abs(z) >= zThreshold) out += Anomaly(typ, e.user_id, e.value, z, e.ts)
-        }
-      }
-      val n1 = s.n + 1
-      val d = e.value - s.mean
-      val mean1 = s.mean + d / n1
-      s = TypeStats(n1, mean1, s.m2 + d * (e.value - mean1))
-    }
-    st.update(s)
-    out.iterator
-  }
-}
-
-/** [[StreamOps.distinctSketchTws]]'s typed processor: the KMV sketch (k
-  * smallest hashes) as one `ValueState` value. */
-class KmvProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, DistinctEstimate] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var st: ValueState[KmvSketch] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    st = getHandle.getValueState[KmvSketch]("kmv",
-      Encoders.product[KmvSketch], TTLConfig.NONE)
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[DistinctEstimate] = {
-    val prev = if (st.exists()) st.get().hashes else Seq.empty[Long]
-    val merged = (prev.toSet ++ rows.map(e => StreamOps.hash31(e.user_id.toString)))
-      .toSeq.sorted.take(k)
-    st.update(KmvSketch(merged))
-    val est =
-      if (merged.size < k) merged.size.toLong
-      else math.floor((k - 1).toDouble * 2147483647L / merged.max).toLong
-    Iterator.single(DistinctEstimate(typ, est, merged.size))
-  }
-}
-
-/** [[StreamOps.hllSketchTws]]'s typed processor: registers in a
-  * `MapState[bucket → rho]`, written only when a batch RAISES one. */
-class HllProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, HllEstimate] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimerValues}
-  @transient private var regs: MapState[Int, Int] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    regs = getHandle.getMapState[Int, Int]("regs",
-      Encoders.scalaInt, Encoders.scalaInt, TTLConfig.NONE)
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[HllEstimate] = {
-    rows.foreach { e =>
-      val h = StreamOps.hash60(e.user_id.toString)
-      val b = (h % 64).toInt
-      val w = h / 64
-      val rho = if (w == 0) 55 else 55 - (64 - java.lang.Long.numberOfLeadingZeros(w))
-      val cur = if (regs.containsKey(b)) regs.getValue(b) else 0
-      if (rho > cur) regs.updateValue(b, rho)
-    }
-    val r = Array.fill(64)(0)
-    regs.iterator().foreach { case (b, v) => r(b) = v }
-    val s = r.map(x => 1L << (55 - x)).sum
-    val est = java.math.BigDecimal
-      .valueOf(0.709 * 4096.0 * (1L << 55).toDouble / s)
-      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-    Iterator.single(HllEstimate(typ, est, r.count(_ > 0)))
-  }
-}
-
-/** [[StreamOps.quantileSketchTws]]'s typed processor: log-linear buckets in
-  * a `MapState[bucket → count]` (per-entry adds). */
-class QuantileProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, QuantileEstimate] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimerValues}
-  @transient private var buckets: MapState[Long, Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    buckets = getHandle.getMapState[Long, Long]("buckets",
-      Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[QuantileEstimate] = {
-    rows.foreach { e =>
-      val b = StreamOps.bucket31(e.value)
-      val cur = if (buckets.containsKey(b)) buckets.getValue(b) else 0L
-      buckets.updateValue(b, cur + 1L)
-    }
-    val m = buckets.iterator().map { case (b, c) => b -> c }.toMap
-    val n = m.valuesIterator.sum
-    Iterator.single(QuantileEstimate(typ, n, m.size,
-      StreamOps.sketchQuantile(m, n, 0.50), StreamOps.sketchQuantile(m, n, 0.99)))
-  }
-}
-
-/** [[StreamOps.countMinStreamTws]]'s typed processor: one hash row's
-  * counters in a `MapState[bucket → count]` (≤ width entries). */
-class CountMinProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[Int, (Int, Int), CmRowState] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimerValues}
-  @transient private var counters: MapState[Int, Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    counters = getHandle.getMapState[Int, Long]("counters",
-      Encoders.scalaInt, Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(j: Int, rows: Iterator[(Int, Int)],
-      timers: TimerValues): Iterator[CmRowState] = {
-    rows.foreach { case (_, b) =>
-      val cur = if (counters.containsKey(b)) counters.getValue(b) else 0L
-      counters.updateValue(b, cur + 1L)
-    }
-    Iterator.single(CmRowState(j,
-      counters.iterator().map { case (b, c) => b -> c }.toMap))
-  }
-}
-
-/** [[StreamOps.latenessMonitorTws]]'s typed processor: the O(1) lateness
-  * tuple in one `ValueState[LateState]`. */
-class LatenessProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, LatenessProfile] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var st: ValueState[LateState] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    st = getHandle.getValueState[LateState]("late",
-      Encoders.product[LateState], TTLConfig.NONE)
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[LatenessProfile] = {
-    var s = if (st.exists()) st.get() else LateState(0L, 0L, 0L, Long.MinValue)
-    rows.toSeq.sortBy(e => (StreamOps.usOf(e.ts), e.user_id)).foreach { e =>
-      val t = e.ts.getTime
-      if (t < s.runmax)
-        s = s.copy(n = s.n + 1, nLate = s.nLate + 1,
-          maxLateMs = math.max(s.maxLateMs, s.runmax - t))
-      else s = s.copy(n = s.n + 1, runmax = t)
-    }
-    st.update(s)
-    Iterator.single(LatenessProfile(typ, s.n, s.nLate,
-      if (s.n == 0) 0.0
-      else java.math.BigDecimal.valueOf(s.nLate.toDouble / s.n)
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue(),
-      s.maxLateMs))
-  }
-}
-
-/** Carried EWMA taps for [[EwmaProcessor]] (≤ 4 ascending (hourSec, cnt)). */
+/** Carried EWMA taps for [[StreamOps.ewmaStreamTws]] (≤ 4 ascending
+  * (hourSec, cnt)). */
 private case class EwmaTaps(taps: Seq[(Long, Long)])
-
-/** [[StreamOps.ewmaStreamTws]]'s typed processor: same in-batch unpruned
-  * emission + trimmed carry semantics (and late-data contract) as the
-  * fMGWS twin. */
-class EwmaProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, EwmaPoint] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var st: ValueState[EwmaTaps] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    st = getHandle.getValueState[EwmaTaps]("taps",
-      Encoders.product[EwmaTaps], TTLConfig.NONE)
-
-  override def handleInputRows(et: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[EwmaPoint] = {
-    var taps = if (st.exists()) st.get().taps else Seq.empty[(Long, Long)]
-    val touched = scala.collection.mutable.LinkedHashSet.empty[Long]
-    rows.toSeq.sortBy(e => StreamOps.usOf(e.ts)).foreach { e =>
-      val hour = e.ts.getTime / 3600000L * 3600L
-      touched += hour
-      taps.indexWhere(_._1 == hour) match {
-        case -1 => taps = (taps :+ (hour, 1L)).sortBy(_._1)
-        case i  => taps = taps.updated(i, (hour, taps(i)._2 + 1L))
-      }
-    }
-    st.update(EwmaTaps(taps.takeRight(4)))
-    val byHour = taps.map(_._1).zipWithIndex.toMap
-    touched.iterator.flatMap { h =>
-      byHour.get(h).map { i =>
-        def tap(k: Int): Long = if (i - k >= 0) taps(i - k)._2 else 0L
-        EwmaPoint(et, h, taps(i)._2,
-          tap(0) * 8 + tap(1) * 4 + tap(2) * 2 + tap(3))
-      }
-    }
-  }
-}
-
-/** [[StreamOps.burstStreamTws]]'s typed processor: closed-hour moments +
-  * open hour in one `ValueState[BurstState]`, same integer 3σ verdict. */
-class BurstProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, BurstVerdict] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var st: ValueState[BurstState] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    st = getHandle.getValueState[BurstState]("burst",
-      Encoders.product[BurstState], TTLConfig.NONE)
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[BurstVerdict] = {
-    var s = if (st.exists()) st.get() else BurstState(0L, 0L, 0L, -1L, 0L)
-    val out = scala.collection.mutable.ArrayBuffer.empty[BurstVerdict]
-    def close(): Unit = if (s.openHour >= 0) {
-      val (n, x) = (s.n, s.openCnt)
-      val devN = n * x - s.s1
-      val burst = n > 0 && devN > 0 &&
-        devN * devN > 9L * (n * s.s2 - s.s1 * s.s1)
-      out += BurstVerdict(s.openHour, x, burst)
-      s = BurstState(n + 1, s.s1 + x, s.s2 + x * x, -1L, 0L)
-    }
-    rows.toSeq.sortBy(e => StreamOps.usOf(e.ts)).foreach { e =>
-      val hour = e.ts.getTime / 3600000L * 3600L
-      if (hour != s.openHour) { close(); s = s.copy(openHour = hour, openCnt = 0L) }
-      s = s.copy(openCnt = s.openCnt + 1L)
-    }
-    st.update(s)
-    out.iterator
-  }
-}
-
-/** [[StreamOps.schemaInferStreamTws]]'s typed processor: shape counts in a
-  * `MapState[shape → count]` — one entry written per drifting shape. */
-class SchemaInferProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, (String, String), KeyShapeProfile] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimerValues}
-  @transient private var shapes: MapState[String, Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    shapes = getHandle.getMapState[String, Long]("shapes",
-      Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[(String, String)],
-      timers: TimerValues): Iterator[KeyShapeProfile] = {
-    rows.foreach { case (_, t) =>
-      val cur = if (shapes.containsKey(t)) shapes.getValue(t) else 0L
-      shapes.updateValue(t, cur + 1L)
-    }
-    Iterator.single(KeyShapeProfile(key,
-      shapes.iterator().map { case (t, c) => t -> c }.toMap))
-  }
-}
-
-/** [[StreamOps.heavyHittersTws]]'s typed processor: the Misra–Gries
-  * counters in a `MapState[user → count]` (one RocksDB entry per tracked
-  * user — the budget-full decrement is the only whole-map touch, bounded
-  * by the sketch's k, never the stream's key cardinality) and the stream
-  * length in a `ValueState`. Same per-batch (true-µs, user) arrival order
-  * and [[StreamOps.mgUpdate]] fold as the fMGWS twin. */
-class HeavyHittersProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, HeavyHittersProfile] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimerValues, ValueState}
-  @transient private var n: ValueState[Long] = _
-  @transient private var counters: MapState[Long, Long] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-    n = getHandle.getValueState[Long]("n", Encoders.scalaLong, TTLConfig.NONE)
-    counters = getHandle.getMapState[Long, Long]("counters",
-      Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[HeavyHittersProfile] = {
-    val before = counters.iterator().map { case (u, c) => u -> c }.toMap
-    var m = before
-    var nn = if (n.exists()) n.get() else 0L
-    rows.toSeq.sortBy(e => (StreamOps.usOf(e.ts), e.user_id)).foreach { e =>
-      nn += 1
-      m = StreamOps.mgUpdate(m, k, e.user_id)
-    }
-    // write-back is diff-only: untouched counters cost no store write
-    (before.keySet -- m.keySet).foreach(counters.removeKey)
-    m.foreach { case (u, c) =>
-      if (!before.get(u).contains(c)) counters.updateValue(u, c) }
-    n.update(nn)
-    val sorted = m.toSeq.sortBy { case (u, c) => (-c, u) }
-    Iterator.single(HeavyHittersProfile(typ, nn, sorted.map(_._1), sorted.map(_._2)))
-  }
-}
-
-/** [[StreamOps.cusumStreamTws]]'s typed processor: the CUSUM monitor's
-  * O(1) 7-long state tuple in a `ValueState`, with the fMGWS twin's exact
-  * hour-close fold (prefix sum − running min = drift; first closed hour
-  * claims the all-zero tie via maxDrift = −1). */
-class CusumProcessor(refMeans: Map[String, Long])
-    extends org.apache.spark.sql.streaming.StatefulProcessor[String, StreamEvent, CusumPoint] {
-  import org.apache.spark.sql.Encoders
-  import org.apache.spark.sql.streaming.{TTLConfig, TimerValues, ValueState}
-  @transient private var st: ValueState[CusumState] = _
-
-  override def init(outputMode: OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    st = getHandle.getValueState[CusumState]("cusum",
-      Encoders.product[CusumState], TTLConfig.NONE)
-
-  override def handleInputRows(typ: String, rows: Iterator[StreamEvent],
-      timers: TimerValues): Iterator[CusumPoint] = {
-    val ref = refMeans.getOrElse(typ, 0L)
-    var s = if (st.exists()) st.get() else null
-    def closeHour(): Unit = {
-      val p = s.p + s.cnt - ref
-      val runmin = math.min(s.runmin, p)
-      val drift = p - runmin
-      val (md, dh) =
-        if (drift > s.maxDrift) (drift, s.openHour)
-        else (s.maxDrift, s.driftHour)
-      s = CusumState(s.openHour, 0L, p, runmin, md, dh, s.nClosed + 1)
-    }
-    rows.toSeq.sortBy(e => StreamOps.usOf(e.ts)).foreach { e =>
-      val h = e.ts.getTime / 3600000L
-      s match {
-        case null => s = CusumState(h, 1L, 0L, Long.MaxValue, -1L, -1L, 0L)
-        case stv if h == stv.openHour => s = stv.copy(cnt = stv.cnt + 1)
-        case _ =>
-          closeHour()
-          s = s.copy(openHour = h, cnt = 1L)
-      }
-    }
-    st.update(s)
-    Iterator.single(CusumPoint(typ, s.nClosed, s.maxDrift, s.driftHour))
-  }
-}
 
 /** One smoothed traffic tap, emitted (and re-emitted as its hour
   * accumulates) by [[StreamOps.ewmaStream]]. */
